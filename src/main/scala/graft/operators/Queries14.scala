@@ -134,7 +134,7 @@ object Queries14 {
         "RENAME COLUMN must not rewrite pre-rename files")
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(
-          before.head.replaceFirst("^file:/+", "/")),
+          graft.sources.IcebergManifestSource.localPath(before.head)),
         s.sparkContext.hadoopConfiguration)
       val rr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       val pfs = try rr.getFooter.getFileMetaData.getSchema finally rr.close()
@@ -291,7 +291,7 @@ object Queries14 {
         "ALTER COLUMN TYPE must not rewrite pre-evolution files")
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(
-          before.head.replaceFirst("^file:/+", "/")),
+          graft.sources.IcebergManifestSource.localPath(before.head)),
         s.sparkContext.hadoopConfiguration)
       val rr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       val pfs = try rr.getFooter.getFileMetaData.getSchema finally rr.close()

@@ -274,7 +274,7 @@ object Queries16 {
                  |FROM q280_src WHERE year(o_orderdate) = $y""".stripMargin)
       insertYear(1995)
       val tdir = s"${wh.getAbsolutePath}/ps/prof"
-      def norm(p: String) = p.replaceFirst("^file:/+", "/")
+      import graft.sources.IcebergManifestSource.localPath
       val fromManifests = graft.sources.MetadataTables
         .partitionsFromManifests(s, tdir).collect()
         .map(_.toSeq).sortBy(_.toString).toSeq
@@ -285,7 +285,7 @@ object Queries16 {
         s"12 month partitions expected, got ${r.getLong(2)}")
       // fresh: the stats file is the rollup's ONLY input, values exact
       val served = graft.sources.MetadataTables.partitions(s, tdir)
-      require(served.inputFiles.map(norm).toSeq == Seq(statsPath),
+      require(served.inputFiles.map(localPath).toSeq == Seq(statsPath),
         s"fresh stats must serve alone: ${served.inputFiles.toSeq}")
       require(served.collect().map(_.toSeq).sortBy(_.toString).toSeq
         == fromManifests, "stats arm must equal the manifest arm exactly")
@@ -295,12 +295,12 @@ object Queries16 {
         .freshPartitionStats(s, tdir).isEmpty,
         "advanced table must report stale stats")
       val fallback = graft.sources.MetadataTables.partitions(s, tdir)
-      require(!fallback.inputFiles.map(norm).contains(statsPath),
+      require(!fallback.inputFiles.map(localPath).contains(statsPath),
         "stale stats must never serve")
       // recompute re-arms the KB-read fast path over BOTH years
       s.sql(s"CALL $cat.system.compute_partition_stats('ps.prof')")
       val served2 = graft.sources.MetadataTables.partitions(s, tdir)
-      require(served2.inputFiles.map(norm).toSeq.forall(p =>
+      require(served2.inputFiles.map(localPath).toSeq.forall(p =>
         p.contains("/metadata/") && p != statsPath),
         "recomputed stats must serve from the new file")
       s.sql(s"""SELECT CAST(get_json_object(partition, '$$.mon') AS BIGINT)

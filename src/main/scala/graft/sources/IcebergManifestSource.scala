@@ -8,7 +8,7 @@ import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.FileEntry
@@ -274,6 +274,16 @@ object IcebergManifestSource {
     }
   }
 
+  /** A path with any `file:` URI scheme stripped to the plain local path
+    * (`file:/a`, `file:///a` → `/a`) — the ONE normaliser every path
+    * comparison across manifests, scans and `_metadata.file_path` uses,
+    * so a file never fails to match itself over URI spelling. */
+  private[graft] def localPath(p: String): String = p.replaceFirst("^file:/+", "/")
+
+  /** [[localPath]] over a string column. */
+  private[graft] def localPath(c: Column): Column =
+    regexp_replace(c, "^file:/+", "/")
+
   private[sources] def resolveManifestList(spark: SparkSession,
       tableDir: String, snapshotId: Option[Long] = None): Option[String] = {
     val md = readCurrentMetadata(spark, tableDir)
@@ -329,14 +339,13 @@ object IcebergManifestSource {
     * see [[manifestSpecIds]]); interpreting an old file's partition
     * values needs its OWN spec, not the current default. */
   def partitionSpecs(spark: SparkSession,
-      tableDir: String): (Int, Seq[(Int, Seq[(String, String, Int)])]) = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val p = currentMetadataPath(spark, tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val root =
-      try new ObjectMapper().readTree(in)
-      finally in.close()
+      tableDir: String): (Int, Seq[(Int, Seq[(String, String, Int)])]) =
+    partitionSpecsOf(readCurrentMetadata(spark, tableDir))
+
+  /** [[partitionSpecs]] of one parsed metadata document. */
+  private[sources] def partitionSpecsOf(
+      root: com.fasterxml.jackson.databind.JsonNode)
+      : (Int, Seq[(Int, Seq[(String, String, Int)])]) = {
     val specs = root.get("partition-specs")
     val defaultId =
       Option(root.get("default-spec-id")).filter(_.canConvertToLong)

@@ -3,29 +3,6 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** EXECUTED metadata maintenance over real on-disk v2 layouts — the
-  * operational side of q127's expire_snapshots dry run, on the same
-  * format [[IcebergLayoutWriter]] writes and [[IcebergManifestSource]]
-  * reads. Two operations Iceberg tables need continuously:
-  *
-  *   - [[expireSnapshots]]: drop history older than the last N
-  *     snapshots, rewrite the metadata JSON, and DELETE the
-  *     now-unreferenced manifest lists + manifests (data files
-  *     referenced by surviving snapshots are never touched — reachability
-  *     is computed from the survivors, not assumed);
-  *   - [[rewriteManifests]]: merge a snapshot's many small manifests
-  *     into one consolidated manifest per content kind (the metadata
-  *     twin of data-file compaction: planning cost is proportional to
-  *     manifest count, and a streaming writer leaves thousands).
-  *
-  * Both run driver-side over metadata-sized inputs (manifest lists are
-  * KBs; entry rewrite streams through the lazy Avro iterator) — at
-  * 100 TB the DATA never moves, which is exactly why metadata-only
-  * maintenance is the cheap lever. LakeLayoutMaintenanceSpec drives both
-  * against written fixture layouts and proves reachability is preserved
-  * bit-exactly (pre/post FileEntry relations match per surviving
-  * snapshot).
-  */
 /** A commit lost its optimistic-concurrency race: the metadata version it
   * was computed against is no longer current (another writer — possibly in
   * a DIFFERENT process — committed first). Append-shaped commits catch
@@ -42,6 +19,37 @@ final class CommitConflictException(msg: String,
       * validateDataFilesExist behavior. */
     val retryable: Boolean = true) extends RuntimeException(msg, cause)
 
+/** EXECUTED commits and metadata maintenance over real on-disk layouts —
+  * the write side of the format [[IcebergLayoutWriter]] writes and
+  * [[IcebergManifestSource]] reads.
+  *
+  * Every verb that writes a snapshot from entries (append, upsert,
+  * MERGE, DELETE in all three dialects, MOR deltas, group replaces,
+  * rewrites, compaction, cherry-pick, WAP staging) goes through ONE
+  * producer:
+  *
+  *   1. under the table's lock, pin the current metadata document and
+  *      parse it once into a [[CommitBase]] (snapshots, refs, current
+  *      id, spec/format/lineage state, the current manifest list, the
+  *      carried entries and the new snapshot id);
+  *   2. the verb writes its own files and returns a [[ChangeSet]]:
+  *      added entries, what is removed, the operation;
+  *   3. the producer stamps sequence numbers, row ids and spec ids,
+  *      gates v3 constructs, and writes the manifests, manifest list
+  *      and summary — on the DRIVER-WALK arm (a fresh list over the
+  *      carried entries) while the carry fits under
+  *      `spark.graft.maxDriverFileEntries`, else on the REUSE arm (a
+  *      filtered copy of the current list: untouched manifests ride
+  *      verbatim, touched ones re-file or rewrite in tasks);
+  *   4. refs move and the metadata version swaps by compare-and-swap
+  *      against the pinned version; append-shaped verbs retry a lost
+  *      race from step 1, replace-shaped verbs fail loudly.
+  *
+  * Metadata-only maintenance (expire, rollback, manifest rewrite, ref
+  * DDL) reads the same pinned base and ends in the same CAS. All of it
+  * runs driver-side over metadata-sized inputs — at 100 TB the DATA
+  * never moves, which is why metadata maintenance is the cheap lever.
+  */
 object LayoutMaintenance {
 
   private def metaDir(tableDir: String) = new java.io.File(tableDir, "metadata")
@@ -108,93 +116,35 @@ object LayoutMaintenance {
     new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(currentMetadataFile(spark, tableDir))
 
-  /** The table's normalized `write.format.default` ("parquet" when the
-    * property is unset), read from the current metadata document — the
-    * SAME property the connector's SQL writes honor, so maintenance
-    * rewrites (upsert/merge/COW/rewrite_data_files/rewrite_small_files)
-    * emit the format the table declares instead of silently flipping an
-    * ORC- or AVRO-default table to parquet on every compaction. DELETE
-    * files (position/equality tombstones) are keyed off the separate
-    * `write.delete.format.default` knob — see [[tableDeleteFormat]]. */
-  private def tableWriteFormat(spark: SparkSession,
-      tableDir: String): String = {
-    // the catalog descriptor is where SQL DDL lands table properties
-    // (CREATE/ALTER ... TBLPROPERTIES); it wins over the Iceberg
-    // metadata document's `properties`, which covers external layouts
-    // and programmatic tables
-    val fromDescriptor = {
-      val d = new java.io.File(tableDir, "graft-table.json")
-      if (!d.exists()) None
-      else Option(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(d).get("properties"))
-        .flatMap(n => Option(n.get("write.format.default")))
-        .map(_.asText())
-    }
-    val fromMetadata = Option(
-      readMetadata(spark, tableDir).get("properties"))
-      .flatMap(n => Option(n.get("write.format.default")))
-      .map(_.asText())
-    graft.sources.v2.GraftFormatWriters.normalize(
-      fromDescriptor.orElse(fromMetadata))
-  }
-
-  /** The table's `write.delete.format.default` (Iceberg's own knob for
-    * DELETE FILE format, distinct from the data files'
-    * write.format.default) — descriptor wins over metadata properties,
-    * parquet when unset; same resolution as [[tableWriteFormat]]. */
-  private[sources] def tableDeleteFormat(spark: SparkSession,
-      tableDir: String): String = {
-    val fromDescriptor = {
-      val d = new java.io.File(tableDir, "graft-table.json")
-      if (!d.exists()) None
-      else Option(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(d).get("properties"))
-        .flatMap(n => Option(n.get("write.delete.format.default")))
-        .map(_.asText())
-    }
-    val fromMetadata = Option(
-      readMetadata(spark, tableDir).get("properties"))
-      .flatMap(n => Option(n.get("write.delete.format.default")))
-      .map(_.asText())
-    graft.sources.v2.GraftFormatWriters.normalize(
-      fromDescriptor.orElse(fromMetadata))
-  }
-
-  /** The table's DECLARED `format-version` property (descriptor wins
-    * over metadata properties; same resolution as [[tableWriteFormat]]).
-    * None = unset: the dialect then auto-raises the stamped version
-    * when a commit first lands a v3 construct. Some(2) = the user
-    * pinned v2 — v3 features (row lineage, deletion vectors, VARIANT
-    * columns) REFUSE, the spec's per-version feature gates. */
   /** The catalog descriptor's `properties` map (graft-table.json) —
     * empty for descriptor-less layouts or unreadable docs. One
     * small-file read; the ONLY descriptor-properties parser (the
-    * write/commit paths all route through here). */
+    * write/commit paths all route through here). SQL DDL lands table
+    * properties here (CREATE/ALTER ... TBLPROPERTIES); they win over
+    * the metadata document's `properties`, which cover external
+    * layouts and programmatic tables. */
   private[graft] def descriptorProps(tableDir: String): Map[String, String] = {
     val d = new java.io.File(tableDir, "graft-table.json")
     if (!d.exists()) return Map.empty
     try Option(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(d).get("properties")).map { n =>
-        val out = Map.newBuilder[String, String]
-        n.fields().forEachRemaining(e =>
-          out += (e.getKey -> e.getValue.asText()))
-        out.result()
-      }.getOrElse(Map.empty)
+        .readTree(d).get("properties")).map(propsOf).getOrElse(Map.empty)
     catch { case scala.util.control.NonFatal(_) =>
       Map.empty[String, String] }
   }
 
-  /** The metadata document's `properties` map (external layouts). */
-  private def metadataProps(spark: SparkSession,
-      tableDir: String): Map[String, String] =
-    try Option(readMetadata(spark, tableDir).get("properties")).map { n =>
-      val out = Map.newBuilder[String, String]
-      n.fields().forEachRemaining(e =>
-        out += (e.getKey -> e.getValue.asText()))
-      out.result()
-    }.getOrElse(Map.empty)
-    catch { case scala.util.control.NonFatal(_) =>
-      Map.empty[String, String] }
+  /** A JSON `properties` object as a string map. */
+  private def propsOf(
+      n: com.fasterxml.jackson.databind.JsonNode): Map[String, String] = {
+    val out = Map.newBuilder[String, String]
+    n.fields().forEachRemaining(e => out += (e.getKey -> e.getValue.asText()))
+    out.result()
+  }
+
+  /** A metadata document's `properties` map (external layouts). */
+  private def metadataPropsOf(
+      meta: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
+    Option(meta.get("properties")).filter(_.isObject).map(propsOf)
+      .getOrElse(Map.empty)
 
   /** EFFECTIVE table properties for version/dialect decisions: the
     * descriptor when one exists (SQL DDL lands properties there; one
@@ -204,8 +154,15 @@ object LayoutMaintenance {
       tableDir: String): Map[String, String] =
     if (new java.io.File(tableDir, "graft-table.json").exists())
       descriptorProps(tableDir)
-    else metadataProps(spark, tableDir)
+    else try metadataPropsOf(readMetadata(spark, tableDir))
+    catch { case scala.util.control.NonFatal(_) =>
+      Map.empty[String, String] }
 
+  /** The table's DECLARED `format-version` property. None = unset: the
+    * dialect then auto-raises the stamped version when a commit first
+    * lands a v3 construct. Some(2) = the user pinned v2 — v3 features
+    * (row lineage, deletion vectors, VARIANT columns) REFUSE, the
+    * spec's per-version feature gates. */
   private[graft] def declaredFormatVersion(spark: SparkSession,
       tableDir: String): Option[Int] =
     tablePropsFor(spark, tableDir).get("format-version")
@@ -218,17 +175,6 @@ object LayoutMaintenance {
     try Option(readMetadata(spark, tableDir).get("format-version"))
       .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2)
     catch { case scala.util.control.NonFatal(_) => 2 }
-
-  /** Refuse a v3-only construct on an explicitly format-version-2
-    * table. Unset tables never refuse — their stamp auto-raises with
-    * the construct instead (spec upgrade semantics). */
-  private[graft] def requireV3(spark: SparkSession, tableDir: String,
-      feature: String): Unit =
-    if (declaredFormatVersion(spark, tableDir).contains(2))
-      sys.error(s"graft-iceberg: $feature requires format-version 3, " +
-        s"but $tableDir declares format-version 2 — upgrade with " +
-        "ALTER TABLE ... SET TBLPROPERTIES ('format-version' = '3') " +
-        "(one metadata-only commit, irreversible)")
 
   /** The spec's v2→v3 UPGRADE: one metadata-only commit re-stamping
     * the current document at `v` (irreversible — downgrades refuse at
@@ -243,50 +189,26 @@ object LayoutMaintenance {
         _.getName.endsWith(".metadata.json")))
     if (!hasMeta) return
     val base = metaBase(spark, tableDir)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(base.file)
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(base.file)
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     val cur = Option(root.get("format-version"))
       .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2)
     if (cur >= v) return
     root.put("format-version", v)
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${base.version + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"metadata version conflict on $tableDir during format-version " +
-            s"upgrade: base v${base.version} is no longer current", e)
-    }
-    writeHintAtomic(m, base.version + 1)
+    casWrite(tableDir, base, root, "format-version upgrade")
   }
 
   /** The table's `graft.lake-type.<column>` declarations (uuid /
     * fixed[N] columns) — descriptor properties win over the metadata
-    * document's, same resolution as [[tableWriteFormat]]. MorRead
+    * document's (see [[descriptorProps]]). MorRead
     * consults this so Spark-native parquet scans can read uuid columns
     * (fixed 16-byte physical) as BINARY and decode post-scan. */
   private[sources] def tableLakeTypes(spark: SparkSession,
-      tableDir: String): Map[String, String] = {
-    def propsOf(node: Option[com.fasterxml.jackson.databind.JsonNode])
-        : Map[String, String] = node.map { n =>
-      val out = Map.newBuilder[String, String]
-      n.fields().forEachRemaining(e => out += (e.getKey -> e.getValue.asText()))
-      out.result()
-    }.getOrElse(Map.empty)
-    val d = new java.io.File(tableDir, "graft-table.json")
-    val fromDescriptor =
-      if (!d.exists()) Map.empty[String, String]
-      else propsOf(Option(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(d).get("properties")))
-    val fromMetadata =
-      propsOf(Option(readMetadata(spark, tableDir).get("properties")))
+      tableDir: String): Map[String, String] =
     graft.sources.v2.GraftFormatWriters.lakeTypesOf(
-      fromMetadata ++ fromDescriptor)
-  }
+      metadataPropsOf(readMetadata(spark, tableDir)) ++
+        descriptorProps(tableDir))
 
   /** Snapshot ids listed in the current metadata JSON, history order. */
   def snapshotIds(spark: SparkSession, tableDir: String): Seq[Long] =
@@ -295,8 +217,12 @@ object LayoutMaintenance {
   /** (snapshotId, timestampMs) in history order; None for snapshots
     * written before timestamps existed in this layout. */
   def snapshotTimestamps(spark: SparkSession,
-      tableDir: String): Seq[(Long, Option[Long])] = {
-    val arr = readMetadata(spark, tableDir).get("snapshots")
+      tableDir: String): Seq[(Long, Option[Long])] =
+    timestampsOf(readMetadata(spark, tableDir))
+
+  private def timestampsOf(meta: com.fasterxml.jackson.databind.JsonNode)
+      : Seq[(Long, Option[Long])] = {
+    val arr = meta.get("snapshots")
     if (arr == null || !arr.isArray) return Nil
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Long])]
     arr.forEach { n =>
@@ -324,13 +250,6 @@ object LayoutMaintenance {
   private def snapshots(spark: SparkSession, tableDir: String): Seq[Snap] =
     snapshotsOf(readMetadata(spark, tableDir), tableDir)
 
-  /** Same, parsed from a PINNED metadata document (a commit's
-    * [[MetaBase]]) — the read a commit must use for its keep-list, so the
-    * written history derives from the exact base the CAS will verify. */
-  private def snapshotsFromBase(base: MetaBase, tableDir: String): Seq[Snap] =
-    snapshotsOf(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(base.file), tableDir)
-
   private def snapshotsOf(meta: com.fasterxml.jackson.databind.JsonNode,
       tableDir: String): Seq[Snap] = {
     val arr = meta.get("snapshots")
@@ -355,13 +274,21 @@ object LayoutMaintenance {
   }
 
   private def currentSnapshotId(spark: SparkSession, tableDir: String): Option[Long] =
-    Option(readMetadata(spark, tableDir).get("current-snapshot-id"))
+    currentIdOf(readMetadata(spark, tableDir))
+
+  private def currentIdOf(
+      meta: com.fasterxml.jackson.databind.JsonNode): Option[Long] =
+    Option(meta.get("current-snapshot-id"))
       .filter(_.canConvertToLong).map(_.asLong()).filter(_ != -1L)
 
   /** Named refs from the current metadata (name, snapshotId, type),
     * sorted by name — driver-side walk of the one refs object. */
-  private def refs(spark: SparkSession, tableDir: String): Seq[(String, Long, String)] = {
-    val rs = readMetadata(spark, tableDir).get("refs")
+  private def refs(spark: SparkSession, tableDir: String): Seq[(String, Long, String)] =
+    refsOf(readMetadata(spark, tableDir))
+
+  private def refsOf(meta: com.fasterxml.jackson.databind.JsonNode)
+      : Seq[(String, Long, String)] = {
+    val rs = meta.get("refs")
     if (rs == null || !rs.isObject) Nil
     else {
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
@@ -377,17 +304,166 @@ object LayoutMaintenance {
     }
   }
 
-  /** Bump the metadata version: READ-MODIFY-WRITE the current metadata
-    * document — only `current-snapshot-id`, the `snapshots` array
-    * membership (each kept snapshot's ORIGINAL node survives, with its
-    * timestamps/summary/whatever a real writer put there; only
-    * `manifest-list` is updated when maintenance moved it), and `refs`
-    * are touched. Every other field — table-uuid, schemas,
-    * partition-specs, sort-orders, properties, fields this code has
-    * never heard of — passes through byte-for-semantics, so a table
-    * written by a real engine stays readable by that engine after
-    * maintenance here. Writes v<next>.metadata.json + version-hint.text
-    * and returns the new version number. */
+  /** Where a commit's new snapshot lands: the table head (the current
+    * pointer and every branch at the parent move), a staged branch (only
+    * that branch moves, and its head is the parent the commit carries
+    * from), or staged with nothing moving (WAP by audit id). */
+  private sealed trait Target
+  private case object MoveHead extends Target
+  private final case class StageBranch(name: String) extends Target
+  private case object StageOnly extends Target
+
+  /** One commit attempt's view of the table, parsed ONCE from the pinned
+    * metadata document ([[MetaBase]]): every state read a commit makes
+    * comes from here, so the written document derives from exactly the
+    * base its CAS verifies. What a verb may not need (the entry walk,
+    * list rows, properties) is computed lazily, at most once. */
+  private final class CommitBase(spark: SparkSession, val tableDir: String,
+      target: Target = MoveHead, cap: Option[Int] = None) {
+    private def conf = spark.sparkContext.hadoopConfiguration
+    val meta: MetaBase = metaBase(spark, tableDir)
+    val root: com.fasterxml.jackson.databind.node.ObjectNode =
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta.file) match {
+        case o: com.fasterxml.jackson.databind.node.ObjectNode => o
+        case other => throw new IllegalStateException(
+          s"${meta.file} is not a JSON object: ${other.getNodeType}")
+      }
+    val snaps: Seq[Snap] = snapshotsOf(root, tableDir)
+    val current: Option[Long] = currentIdOf(root)
+    val refs: Seq[(String, Long, String)] = refsOf(root)
+    /** The current snapshot (the history tail when no pointer is set). */
+    lazy val curId: Long = current.getOrElse(snaps.last.id)
+    /** The snapshot the commit builds on: the staged branch's head when
+      * that branch exists (staged commits stack), else the table head. */
+    lazy val parentId: Long = target match {
+      case StageBranch(name) =>
+        refs.collectFirst { case (`name`, id, "branch") => id }.getOrElse(curId)
+      case _ => curId
+    }
+    private lazy val parent = snaps.find(_.id == parentId)
+    lazy val listPath: Option[String] = parent.map(_.listPath)
+    lazy val parentSummary: Map[String, String] =
+      parent.flatMap(_.summary).getOrElse(Nil).toMap
+    /** The parent's manifest-list rows ([[listRowsOf]]). */
+    lazy val listRows: Seq[(String, Long, Int, Int)] =
+      listPath.toSeq.flatMap(listRowsOf(conf, _))
+    /** The parent's live entries as writer specs while they fit under the
+      * entry cap ([[driverEntryCap]]); None past it — the producer's
+      * signal to take the manifest-REUSE arm. */
+    lazy val carry: Option[Seq[IcebergLayoutWriter.ManifestEntrySpec]] =
+      walkEntries(conf, listRows, cap.getOrElse(driverEntryCap(spark)))
+    /** The parent's DELETE-side entries — commit-count shaped, so walked
+      * driver-side even past the cap. */
+    lazy val deleteSide: Seq[IcebergLayoutWriter.ManifestEntrySpec] =
+      carry.map(_.filter(_.content != 0)).getOrElse(
+        walkEntries(conf, listRows.filter(_._3 == 1), Int.MaxValue).get)
+    lazy val hasDeletes: Boolean =
+      carry.fold(listRows.exists(_._3 == 1))(_.exists(_.content != 0))
+    /** The new snapshot's id, doubling as its sequence number: above every
+      * history id and every carried sequence (past the cap, every list-row
+      * sequence bounds them). */
+    lazy val newId: Long = (snaps.map(_.id) ++ carry.fold(listRows.map(_._2))(
+      _.map(_.sequenceNumber.longValue))).max + 1
+    /** The parent's live-entry relation — the distributed view the
+      * checks past the cap run on. */
+    def liveStats: org.apache.spark.sql.DataFrame =
+      IcebergManifestSource.statsFromManifestSpecSeqs(spark,
+        listRows.map(r => (r._1, r._2, r._4)), "t", Nil)
+    /** The [[IcebergManifestSource.localPath]]s among `paths` that name
+      * live data files of the parent: a carry lookup under the cap, one
+      * small distributed manifest scan past it. */
+    def liveDataAmong(paths: Seq[String]): Set[String] = {
+      val wanted = paths.map(IcebergManifestSource.localPath).distinct
+      carry match {
+        case Some(c) => c.collect { case e if e.content == 0 =>
+          IcebergManifestSource.localPath(e.filePath) }.toSet
+          .intersect(wanted.toSet)
+        case None => liveStats.filter(col("content") === 0)
+          .select(IcebergManifestSource.localPath(col("file_path")).as("fp"))
+          .filter(col("fp").isin(wanted: _*))
+          .distinct().collect().map(_.getString(0)).toSet
+      }
+    }
+    /** One live data file of the parent (equality-id resolution): the
+      * first carried one, else streamed from the head of the first data
+      * manifest — never an entry walk past the cap. */
+    lazy val firstDataFile: Option[String] = carry.fold(
+      firstDataFileOf(conf, listRows))(_.find(_.content == 0).map(_.filePath))
+
+    private lazy val hasDescriptor =
+      new java.io.File(tableDir, "graft-table.json").exists()
+    private lazy val descriptor = descriptorProps(tableDir)
+    private lazy val metaProps = metadataPropsOf(root)
+    private def prop(key: String) = descriptor.get(key).orElse(metaProps.get(key))
+    /** `write.format.default`: the format maintenance rewrites emit, so an
+      * ORC- or AVRO-default table never flips to parquet on compaction. */
+    lazy val writeFormat: String =
+      graft.sources.v2.GraftFormatWriters.normalize(prop("write.format.default"))
+    /** `write.delete.format.default`: Iceberg's knob for DELETE file
+      * format, distinct from the data files'. */
+    lazy val deleteFormat: String = graft.sources.v2.GraftFormatWriters
+      .normalize(prop("write.delete.format.default"))
+    /** Declared `format-version` (see [[declaredFormatVersion]]). */
+    lazy val declaredFv: Option[Int] =
+      (if (hasDescriptor) descriptor else metaProps).get("format-version")
+        .flatMap(_.toIntOption)
+    /** The declared `pushdown.fields` stat fields as (fieldId, name,
+      * type-letter) — the fields rewrites harvest bounds for. */
+    lazy val statFields: Seq[(Int, String, String)] =
+      prop("pushdown.fields").toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
+        .flatMap { s =>
+          s.split(':') match {
+            case Array(n, id, t) if Set("long", "double", "string")(t) =>
+              id.toIntOption.map(i => (i, n, t))
+            case _ => None
+          }
+        }
+    /** The v3 `next-row-id` counter (0 before row lineage). */
+    lazy val nextRowId: Long = Option(root.get("next-row-id"))
+      .filter(_.canConvertToLong).map(_.asLong()).getOrElse(0L)
+    lazy val defaultSpecId: Int = Option(root.get("default-spec-id"))
+      .filter(_.canConvertToLong).map(_.asInt()).getOrElse(0)
+
+    /** Refuse a v3-only construct on an explicitly format-version-2
+      * table. Unset tables never refuse — their stamp auto-raises with
+      * the construct instead (spec upgrade semantics). */
+    def requireV3(feature: String): Unit =
+      if (declaredFv.contains(2))
+        sys.error(s"graft-iceberg: $feature requires format-version 3, " +
+          s"but $tableDir declares format-version 2 — upgrade with " +
+          "ALTER TABLE ... SET TBLPROPERTIES ('format-version' = '3') " +
+          "(one metadata-only commit, irreversible)")
+  }
+
+  /** Write `root` as metadata version `base.version + 1`. CREATE_NEW is
+    * the commit's compare-and-swap (Iceberg Hadoop-tables semantics: the
+    * rename to v(N+1) fails if the target exists). The document derives
+    * ENTIRELY from v(N); atomically creating v(N+1) therefore succeeds
+    * iff no other writer — same JVM or a different PROCESS — committed
+    * since the base was pinned. A loser gets [[CommitConflictException]]:
+    * append-shaped callers retry via [[withCommitRetry]], replace-shaped
+    * callers fail loudly. Returns the new version. */
+  private def casWrite(tableDir: String, base: MetaBase,
+      root: com.fasterxml.jackson.databind.JsonNode, what: String): Long = {
+    val m = metaDir(tableDir)
+    val next = base.version + 1
+    try java.nio.file.Files.write(
+      new java.io.File(m, s"v$next.metadata.json").toPath,
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
+      java.nio.file.StandardOpenOption.CREATE_NEW,
+      java.nio.file.StandardOpenOption.WRITE)
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException =>
+        throw new CommitConflictException(
+          s"metadata version conflict on $tableDir ($what): base " +
+            s"v${base.version} is no longer current (v$next already " +
+            "exists — a concurrent writer committed first)", e)
+    }
+    writeHintAtomic(m, next)
+    next
+  }
+
   /** Atomically swap version-hint.text: write a temp sibling, then
     * ATOMIC_MOVE over the hint — a concurrent reader sees the old hint
     * or the new one, never a truncated/empty file (a live streaming
@@ -402,10 +478,22 @@ object LayoutMaintenance {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def writeMetadataVersion(spark: SparkSession, tableDir: String,
+  /** Bump the metadata version: READ-MODIFY-WRITE the pinned document of
+    * `b` — only `current-snapshot-id`, the `snapshots` array membership
+    * (each kept snapshot's ORIGINAL node survives, with its
+    * timestamps/summary/whatever a real writer put there; only
+    * `manifest-list` is updated when maintenance moved it), `refs`, and
+    * the v3 lineage/format fields are touched. Every other field —
+    * table-uuid, schemas, partition-specs, sort-orders, properties,
+    * fields this code has never heard of — passes through
+    * byte-for-semantics, so a table written by a real engine stays
+    * readable by that engine after maintenance here. The document is
+    * never re-resolved: a loser that raced must not graft its stale
+    * snapshots onto the winner's fresher document. Consumes `b.root`
+    * (the attempt's last step) and returns the new version. */
+  private def writeMetadataVersion(b: CommitBase,
       keep: Seq[Snap], currentId: Long,
       keepRefs: Seq[(String, Long, String)],
-      base: MetaBase,
       refRetention: Map[String, Seq[(String, Long)]] = Map.empty,
       /** v3 row lineage: `next-row-id` AFTER this commit (None = keep
         * the base document's counter untouched). */
@@ -417,23 +505,8 @@ object LayoutMaintenance {
         * params don't already witness (deletion-vector PUFFIN entries)
         * — forces the format-version stamp to 3. */
       v3Construct: Boolean = false): Long = {
-    import com.fasterxml.jackson.databind.ObjectMapper
     import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-    val m = metaDir(tableDir)
-    // the document is built from the commit's PINNED base file — never
-    // from "whatever is current now". Re-resolving here was round 9's
-    // cross-process hole: a loser that raced would graft its STALE
-    // snapshots array onto the WINNER's fresher document and the CAS
-    // below would pass (the winner's version is no longer the target),
-    // silently vanishing the winner's commit.
-    val cur = base.file
-    val curV = base.version
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(cur) match {
-      case o: ObjectNode => o
-      case other => throw new IllegalStateException(
-        s"$cur is not a JSON object: ${other.getNodeType}")
-    }
+    val root = b.root
     root.put("current-snapshot-id", currentId)
     // snapshots: filter/patch the ORIGINAL nodes, in `keep` order
     val keptById = new java.util.LinkedHashMap[Long, ObjectNode]()
@@ -443,12 +516,12 @@ object LayoutMaintenance {
       if (sid != null && sid.canConvertToLong)
         keptById.put(sid.asLong(), n.asInstanceOf[ObjectNode])
     }
-    val snapArr = mapper.createArrayNode()
+    val snapArr = root.arrayNode()
     keep.foreach { s =>
       val node = Option(keptById.get(s.id)).getOrElse(
         // a NEW snapshot: stamp its commit wall-clock (spec "Snapshots")
         // so TIMESTAMP AS OF can resolve it; existing nodes keep theirs
-        mapper.createObjectNode().put("snapshot-id", s.id)
+        root.objectNode().put("snapshot-id", s.id)
           .put("timestamp-ms", System.currentTimeMillis()))
       node.put("manifest-list", s.listPath)
       snapshotFirstRowId.foreach { case (sid, fri) =>
@@ -457,7 +530,7 @@ object LayoutMaintenance {
       // keep whatever summary their writer recorded (pass-through rule)
       s.summary.foreach { kv =>
         if (node.get("summary") == null) {
-          val sn = mapper.createObjectNode()
+          val sn = root.objectNode()
           kv.foreach { case (k, v) => sn.put(k, v) }
           node.set[ObjectNode]("summary", sn)
         }
@@ -475,18 +548,18 @@ object LayoutMaintenance {
       .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2)
     if (stampedFv < 3 && (v3Construct || nextRowIdAfter.nonEmpty ||
         snapshotFirstRowId.nonEmpty || root.has("next-row-id") ||
-        declaredFormatVersion(spark, tableDir).contains(3)))
+        b.declaredFv.contains(3)))
       root.put("format-version", 3)
     // refs: original node per surviving name (extra fields like
     // min-snapshots-to-keep survive), target id patched when moved
     if (keepRefs.isEmpty) root.remove("refs")
     else {
       val origRefs = root.get("refs")
-      val refObj = mapper.createObjectNode()
+      val refObj = root.objectNode()
       keepRefs.foreach { case (name, id, kind) =>
         val node = Option(origRefs).map(_.get(name)).filter(_ != null)
           .collect { case o: ObjectNode => o }
-          .getOrElse(mapper.createObjectNode().put("type", kind))
+          .getOrElse(root.objectNode().put("type", kind))
         node.put("snapshot-id", id)
         // retention fields declared by THIS commit (spec "Refs":
         // max-ref-age-ms, min-snapshots-to-keep, max-snapshot-age-ms);
@@ -497,27 +570,7 @@ object LayoutMaintenance {
       }
       root.set[ObjectNode]("refs", refObj)
     }
-    // CREATE_NEW is the commit's compare-and-swap (Iceberg Hadoop-tables
-    // semantics: the rename to v(N+1) fails if the target exists). The
-    // document above derives ENTIRELY from v(curV); atomically creating
-    // v(curV+1) therefore succeeds iff no other writer — same JVM or a
-    // different PROCESS — committed since the base was pinned. A loser
-    // gets CommitConflictException: append-shaped callers retry via
-    // [[withCommitRetry]], replace-shaped callers fail loudly.
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${curV + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"metadata version conflict on $tableDir: base v$curV is no " +
-            s"longer current (v${curV + 1} already exists — a concurrent " +
-            "writer committed first)", e)
-    }
-    writeHintAtomic(m, curV + 1)
-    curV + 1
+    casWrite(b.tableDir, b.meta, root, "commit")
   }
 
   private val commitLocks =
@@ -589,19 +642,19 @@ object LayoutMaintenance {
       keepLast: Int, olderThanMs: Long = -1L): (Seq[Long], Int) =
       commitLock(tableDir).synchronized {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    val curId = currentSnapshotId(spark, tableDir)
-    val tsOf = snapshotTimestamps(spark, tableDir).toMap
+    val b = new CommitBase(spark, tableDir)
+    val all = b.snaps
+    val curId = b.current
+    val tsOf = timestampsOf(b.root).toMap
     val nowMs = System.currentTimeMillis()
-    val retention = refRetention(spark, tableDir)
+    val retention = refRetentionOf(b.root)
     // ref retention, Iceberg's expire semantics: a ref whose snapshot's
     // commit time is older than its max-ref-age-ms is DROPPED here
     // ('main' never expires); surviving BRANCHES protect their history
     // per min-snapshots-to-keep / max-snapshot-age-ms — the knobs the
     // ref DDL's RETAIN / WITH SNAPSHOT RETENTION clauses persist. Refs
     // without fields keep Iceberg's defaults: live forever, head only.
-    val liveRefs = refs(spark, tableDir).filter { case (name, target, _) =>
+    val liveRefs = b.refs.filter { case (name, target, _) =>
       name == "main" || {
         val maxAge = retention.get(name).flatMap(_._1)
         // an un-timestamped target (older layouts) is conservatively
@@ -633,40 +686,39 @@ object LayoutMaintenance {
         branchKeep.contains(id) ||
         (olderThanMs >= 0L &&
           tsOf.get(id).flatten.forall(_ >= olderThanMs))
-    val keep = all.filter(s => protectedSnap(s.id))
-    val expire = all.filterNot(s => protectedSnap(s.id))
-    val droppedRefs = refs(spark, tableDir).size - liveRefs.size
-    if (expire.isEmpty && droppedRefs == 0) return (keep.map(_.id), 0)
-    val reachable = keep.flatMap(manifestsOf(spark, _)).toSet
-    val doomedManifests = expire.flatMap(manifestsOf(spark, _)).toSet -- reachable
+    val (keep, expire) = all.partition(s => protectedSnap(s.id))
+    if (expire.isEmpty && liveRefs.size == b.refs.size)
+      return (keep.map(_.id), 0)
     val keepIds = keep.map(_.id).toSet
     val currentId = curId.filter(keepIds.contains).getOrElse(keep.last.id)
     val keepRefs = liveRefs.filter(r => keepIds.contains(r._2))
-    val newV = writeMetadataVersion(spark, tableDir, keep, currentId,
-      keepRefs, base)
-    // superseded metadata versions still REFERENCE the lists/manifests
-    // deleted below — a reader resolving one (stale version-hint, racing
-    // listing) would hit FileNotFoundException instead of a clean miss,
-    // so the old v*.metadata.json go with the files they reference.
-    // (Single-writer assumption, like Iceberg's own expire: a reader
-    // that resolved an old version BEFORE this runs still races the
-    // file deletion — expiry is never safe under a concurrent reader
-    // pinned to expired history.)
+    val newV = writeMetadataVersion(b, keep, currentId, keepRefs)
+    (keep.map(_.id), deleteExpired(spark, tableDir, keep, expire, newV))
+  }
+
+  /** Physical cleanup after an expiry commit landed as version `newV`:
+    * delete the expired snapshots' lists, the manifests no surviving
+    * snapshot references (reachability is computed from the survivors,
+    * never assumed), and the superseded metadata versions — they still
+    * REFERENCE the deleted files, so a reader resolving one (stale
+    * version-hint, racing listing) would hit FileNotFoundException
+    * instead of a clean miss. Single-writer assumption, like Iceberg's
+    * own expire: a reader pinned to expired history races the deletion.
+    * Only files THIS table owns are deleted: a zero-copy clone's
+    * snapshot may reference the SOURCE's manifests by absolute path.
+    * Returns the deleted file count. */
+  private def deleteExpired(spark: SparkSession, tableDir: String,
+      keep: Seq[Snap], expire: Seq[Snap], newV: Long): Int = {
+    val reachable = keep.flatMap(manifestsOf(spark, _)).toSet
+    val doomedManifests = expire.flatMap(manifestsOf(spark, _)).toSet -- reachable
     val mdPattern = "^v(\\d+)\\.metadata\\.json$".r
     val doomedMeta = Option(metaDir(tableDir).listFiles()).getOrElse(Array.empty)
       .filter(f => mdPattern.findFirstMatchIn(f.getName)
         .exists(_.group(1).toLong != newV))
       .map(_.getPath)
-    // only files THIS table owns are ever deleted: a zero-copy clone's
-    // snapshot may reference the SOURCE's manifests by absolute path,
-    // and expiring clone history must never reach into the source
-    val doomed = (expire.map(_.listPath) ++ doomedManifests ++ doomedMeta)
+    (expire.map(_.listPath) ++ doomedManifests ++ doomedMeta)
       .filter(ownedByTable(tableDir, _))
-    var deleted = 0
-    doomed.foreach { p =>
-      if (new java.io.File(p).delete()) deleted += 1
-    }
-    (keep.map(_.id), deleted)
+      .count(p => new java.io.File(p).delete())
   }
 
   /** True when `p` sits inside `tableDir` — the ownership test expiry
@@ -674,7 +726,7 @@ object LayoutMaintenance {
     * at files the table does NOT own). */
   private def ownedByTable(tableDir: String, p: String): Boolean = {
     val root = new java.io.File(tableDir).getAbsolutePath + java.io.File.separator
-    new java.io.File(p.replaceFirst("^file:/+", "/")).getAbsolutePath
+    new java.io.File(IcebergManifestSource.localPath(p)).getAbsolutePath
       .startsWith(root)
   }
 
@@ -683,38 +735,20 @@ object LayoutMaintenance {
     * named by any ref, WHEREVER it sits in history ([[expireSnapshots]]
     * keeps history suffixes, so an abandoned staged snapshot — always
     * the newest — would survive keep-last forever). Same physical
-    * cleanup discipline: lists/manifests referenced only by the dropped
-    * snapshots are deleted, shared ones survive, superseded metadata
-    * versions go with the files they reference. Returns
-    * (kept ids, deleted file count). */
+    * cleanup discipline ([[deleteExpired]]). Returns (kept ids, deleted
+    * file count). */
   def expireUnreferenced(spark: SparkSession,
       tableDir: String): (Seq[Long], Int) =
       commitLock(tableDir).synchronized {
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    val curId = currentSnapshotId(spark, tableDir)
-    val named = refs(spark, tableDir).map(_._2).toSet
-    val keep = all.filter(s => curId.contains(s.id) || named.contains(s.id))
+    val b = new CommitBase(spark, tableDir)
+    val named = b.refs.map(_._2).toSet
+    val (keep, expire) = b.snaps.partition(s =>
+      b.current.contains(s.id) || named.contains(s.id))
     require(keep.nonEmpty, s"nothing reachable under $tableDir")
-    val expire = all.filterNot(s => curId.contains(s.id) || named.contains(s.id))
     if (expire.isEmpty) return (keep.map(_.id), 0)
-    val reachable = keep.flatMap(manifestsOf(spark, _)).toSet
-    val doomedManifests = expire.flatMap(manifestsOf(spark, _)).toSet -- reachable
-    val currentId = curId.getOrElse(keep.last.id)
-    val newV = writeMetadataVersion(spark, tableDir, keep, currentId,
-      refs(spark, tableDir), base)
-    val mdPattern = "^v(\\d+)\\.metadata\\.json$".r
-    val doomedMeta = Option(metaDir(tableDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => mdPattern.findFirstMatchIn(f.getName)
-        .exists(_.group(1).toLong != newV))
-      .map(_.getPath)
-    val doomed = (expire.map(_.listPath) ++ doomedManifests ++ doomedMeta)
-      .filter(ownedByTable(tableDir, _)) // never reach into a clone source
-    var deleted = 0
-    doomed.foreach { p =>
-      if (new java.io.File(p).delete()) deleted += 1
-    }
-    (keep.map(_.id), deleted)
+    val newV = writeMetadataVersion(b, keep,
+      b.current.getOrElse(keep.last.id), b.refs)
+    (keep.map(_.id), deleteExpired(spark, tableDir, keep, expire, newV))
   }
 
   /** Roll the table back to `snapshotId`: write a new metadata version
@@ -728,17 +762,15 @@ object LayoutMaintenance {
   def rollback(spark: SparkSession, tableDir: String,
       snapshotId: Long): Option[Long] = commitLock(tableDir).synchronized {
     withCommitRetry(tableDir) {
-      val base = metaBase(spark, tableDir)
-      val all = snapshots(spark, tableDir)
-      require(all.exists(_.id == snapshotId),
-        s"snapshot $snapshotId not in ${tableDir}'s history (${all.map(_.id)})")
-      val prev = currentSnapshotId(spark, tableDir)
-      val movedRefs = refs(spark, tableDir).map {
+      val b = new CommitBase(spark, tableDir)
+      require(b.snaps.exists(_.id == snapshotId),
+        s"snapshot $snapshotId not in ${tableDir}'s history (${b.snaps.map(_.id)})")
+      val movedRefs = b.refs.map {
         case ("main", _, kind) => ("main", snapshotId, kind)
         case r => r
       }
-      writeMetadataVersion(spark, tableDir, all, snapshotId, movedRefs, base)
-      prev
+      writeMetadataVersion(b, b.snaps, snapshotId, movedRefs)
+      b.current
     }
   }
 
@@ -757,12 +789,12 @@ object LayoutMaintenance {
     import org.apache.avro.file.{DataFileReader, DataFileWriter}
     import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
     import org.apache.avro.mapred.FsInput
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
+    val b = new CommitBase(spark, tableDir)
+    val all = b.snaps
     require(all.nonEmpty, s"no snapshots under $tableDir")
     // the snapshot the CURRENT pointer names, not the array tail — a
     // rolled-back table rewrites what readers actually see
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
+    val curId = b.curId
     val cur = all.find(_.id == curId).getOrElse(all.last)
     val conf = spark.sparkContext.hadoopConfiguration
     val before = manifestsOf(spark, cur)
@@ -806,8 +838,7 @@ object LayoutMaintenance {
     val stillReferenced = others.flatMap(manifestsOf(spark, _)).toSet
     val rewritten = all.map(s =>
       if (s.id == cur.id) Snap(cur.id, newList.getAbsolutePath) else s)
-    writeMetadataVersion(spark, tableDir, rewritten, curId,
-      refs(spark, tableDir), base)
+    writeMetadataVersion(b, rewritten, curId, b.refs)
     new java.io.File(cur.listPath).delete()
     (before.toSet -- stillReferenced).foreach(p => new java.io.File(p).delete())
     val after = manifestsOf(spark, Snap(cur.id, newList.getAbsolutePath))
@@ -821,135 +852,64 @@ object LayoutMaintenance {
     * snapshots stay time-travelable, delete files are carried with
     * their original sequence numbers, multi-file groups become one
     * compacted entry at the new snapshot's sequence, singleton groups
-    * keep their original file untouched. Because the packer is shared,
-    * the executed data-file count EQUALS the simulation's
-    * `fileCountAfter` for the same `maxGroupBytes` — the
-    * preview-equals-execution identity, pinned in LayoutMaintenanceSpec.
+    * keep their original file untouched — every carried entry keeps its
+    * full identity (format, equality ids, bounds, counts, spec id, row
+    * lineage). Because the packer is shared ([[packGroups]]), the
+    * executed data-file count EQUALS the simulation's `fileCountAfter`
+    * for the same `maxGroupBytes` — the preview-equals-execution
+    * identity, pinned in LayoutMaintenanceSpec.
     *
-    * Driver state is the per-file stats relation (~100 B/file — a
-    * 100k-file table is ~10 MB; the group ASSIGNMENT is inherently a
-    * planning decision, same as Iceberg's own rewrite_data_files
-    * planning). Single-spec tables only (the commit writes spec-0
-    * partition records). Returns (newSnapshotId, dataFilesBefore,
-    * dataFilesAfter). */
+    * Driver state is the carried entry set (~100 B/file — the group
+    * ASSIGNMENT is inherently a planning decision, same as Iceberg's own
+    * rewrite_data_files planning), so the carry is bounded by
+    * [[MaxDriverFileEntries]] rather than the session's entry cap.
+    * Returns (newSnapshotId, dataFilesBefore, dataFilesAfter). */
   def commitCompaction(spark: SparkSession, tableDir: String,
       maxGroupBytes: Long): (Long, Int, Int) =
-      commitLock(tableDir).synchronized {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import IcebergLayoutWriter.ManifestEntrySpec
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val stats = IcebergManifestSource
-      .statsFromTableDir(spark, tableDir, "t", Nil, Some(curId))
-      .select("file_path", "content", "partitionKey", "sizeBytes",
-        "record_count", "sequence_number")
-      .collect()
-    require(stats.nonEmpty, s"current snapshot $curId has no files")
-    // the new snapshot's id doubles as its sequence (fixture dialect) —
-    // it must exceed every EXISTING entry sequence too, or a compacted
-    // file could land below a pinned file's sequence in delete-visibility
-    // order
-    val newId = (all.map(_.id) ++
-      stats.map(_.getLong(5))).max + 1
-    val mapper = new ObjectMapper()
-    def partitionPairs(pk: String): Seq[(String, Any)] =
-      if (pk == null || pk.isEmpty || pk == "{}") Nil
+    produce(spark, tableDir, retry = false,
+        cap = Some(MaxDriverFileEntries)) { b =>
+      val carried = b.carry.getOrElse(sys.error(
+        s"commitCompaction($tableDir): ${pastCeiling(b.curId)}"))
+      require(carried.nonEmpty, s"current snapshot ${b.curId} has no files")
+      val (data, deletes) = carried.partition(_.content == 0)
+      // MOR safety: a data file some delete file may still apply to must
+      // keep its IDENTITY — a position delete references the old path
+      // (which would dangle after packing) and an equality delete applies
+      // only to files with a strictly LOWER sequence (a compacted file's
+      // new sequence would escape it). This metadata-level commit never
+      // rewrites rows, so it conservatively pins every data file with
+      // seq <= the newest delete file's seq and packs only newer ones —
+      // visibility before == after, which the spec asserts. (A full
+      // rewrite_data_files applies the deletes during the data rewrite;
+      // that is `Compactor`'s territory, not this commit's.)
+      val maxDeleteSeq = deletes.map(_.sequenceNumber.longValue).maxOption
+        .getOrElse(Long.MinValue)
+      val groups = data.filter(_.sequenceNumber.longValue > maxDeleteSeq)
+        .groupBy(e => (e.specId, e.partition))
+        .toSeq.sortBy { case ((sid, pv), _) =>
+          (sid, pv.map { case (k, v) => s"$k=$v" }.mkString(",")) }
+        .flatMap { case (_, fs) =>
+          val byPath = fs.map(e => e.filePath -> e).toMap
+          packGroups(fs.map(e => (e.filePath, e.sizeBytes))
+              .sortBy(f => (f._2, f._1)), maxGroupBytes)
+            .filter(_.size > 1).map(_.map(f => byPath(f._1)))
+        }
+      val after = data.size - groups.map(_.size - 1).sum
+      // no-op guard: if every group is a singleton the table is already
+      // packed for this cap — committing would churn a new snapshot whose
+      // file set is identical (Iceberg's rewrite_data_files skips too)
+      if (groups.isEmpty) (None, (b.curId, data.size, data.size))
       else {
-        val node = mapper.readTree(pk)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Any)]
-        node.fields().forEachRemaining { e =>
-          val v: Any = e.getValue match {
-            case n if n.isInt => n.asInt()
-            case n if n.isLong => n.asLong()
-            case n if n.isBoolean => n.asBoolean()
-            case n => n.asText()
-          }
-          out += ((e.getKey, v))
+        val compacted = groups.zipWithIndex.map { case (g, i) =>
+          IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
+            filePath = s"data/compact-${b.newId}-${i + 1}.parquet",
+            partition = g.head.partition, recordCount = g.map(_.recordCount).sum,
+            sizeBytes = g.map(_.sizeBytes).sum, specId = g.head.specId)
         }
-        out.toSeq
+        (Some(ChangeSet(compacted, RemovePaths(groups.flatten.map(_.filePath)),
+          operation = "replace")), (b.newId, data.size, after))
       }
-    case class F(path: String, content: Int, pk: String, size: Long,
-        rc: Long, seq: Long)
-    val files = stats.map(r => F(r.getString(0), r.getInt(1), r.getString(2),
-      r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
-    val (data, deletes) = files.partition(_.content == 0)
-    // MOR safety: a data file some delete file may still apply to must
-    // keep its IDENTITY — a position delete references the old path
-    // (which would dangle after packing) and an equality delete applies
-    // only to files with a strictly LOWER sequence (a compacted file's
-    // new sequence would escape it). This metadata-level commit never
-    // rewrites rows, so it conservatively pins every data file with
-    // seq <= the newest delete file's seq and packs only newer ones —
-    // visibility before == after, which the spec asserts. (A full
-    // rewrite_data_files applies the deletes during the data rewrite;
-    // that is `Compactor`'s territory, not this commit's.)
-    val maxDeleteSeq = if (deletes.isEmpty) Long.MinValue else deletes.map(_.seq).max
-    val (packable, pinned) = data.partition(_.seq > maxDeleteSeq)
-    // the Pure.buildPartitionGroups loop, carried over file identities:
-    // ascending (size, path), close the group BEFORE adding once its
-    // running sum exceeds the cap — group COUNT therefore equals the
-    // size-multiset packing the simulation computed
-    def pack(fs: Seq[F]): Vector[Vector[F]] = {
-      val sorted = fs.sortBy(f => (f.size, f.path))
-      val result = Vector.newBuilder[Vector[F]]
-      var group = Vector.newBuilder[F]
-      var nonEmpty = false
-      var cur = 0L
-      for (f <- sorted) {
-        if (cur > maxGroupBytes) {
-          result += group.result(); group = Vector.newBuilder[F]
-          nonEmpty = false; cur = 0L
-        }
-        group += f; nonEmpty = true; cur += f.size
-      }
-      if (nonEmpty) result += group.result()
-      result.result()
     }
-    def keepEntry(f: F) =
-      ManifestEntrySpec(status = 1, content = 0, filePath = f.path,
-        partition = partitionPairs(f.pk), recordCount = f.rc,
-        sizeBytes = f.size, sequenceNumber = f.seq)
-    var ci = 0
-    val dataEntries = pinned.sortBy(_.path).map(keepEntry) ++
-      packable.groupBy(_.pk).toSeq.sortBy(_._1).flatMap { case (pk, fs) =>
-        val pairs = partitionPairs(pk)
-        pack(fs).map { g =>
-          if (g.size == 1) keepEntry(g.head)
-          else {
-            ci += 1
-            ManifestEntrySpec(status = 1, content = 0,
-              filePath = s"data/compact-$newId-$ci.parquet",
-              partition = pairs, recordCount = g.map(_.rc).sum,
-              sizeBytes = g.map(_.size).sum, sequenceNumber = newId)
-          }
-        }
-      }
-    // no-op guard: if every group is a singleton the table is already
-    // packed for this cap — committing would churn a new snapshot whose
-    // file set is identical (Iceberg's rewrite_data_files skips too)
-    if (dataEntries.size == data.size)
-      return (curId, data.size, data.size)
-    val deleteEntries = deletes.map(f =>
-      ManifestEntrySpec(status = 1, content = f.content, filePath = f.path,
-        partition = partitionPairs(f.pk), recordCount = f.rc,
-        sizeBytes = f.size, sequenceNumber = f.seq))
-    val m = metaDir(tableDir)
-    val manifests = Seq(0 -> dataEntries, 1 -> deleteEntries)
-      .filter(_._2.nonEmpty)
-      .map { case (c, es) =>
-        val f = new java.io.File(m, s"manifest-$newId-$c.avro")
-        IcebergLayoutWriter.writeManifest(f, es)
-        (f, c)
-      }
-    val newList = new java.io.File(m, s"snap-$newId-manifest-list.avro")
-    IcebergLayoutWriter.writeManifestList(newList, manifests, newId)
-    writeMetadataVersion(spark, tableDir,
-      all :+ Snap(newId, newList.getAbsolutePath), newId,
-      refs(spark, tableDir), base)
-    (newId, data.size, dataEntries.size)
-  }
 
   // ---- read accessors for [[MetadataTables]] (metadata-sized) ----
 
@@ -1009,68 +969,58 @@ object LayoutMaintenance {
     * explicit instead of an OOM. */
   private[sources] val MaxDriverFileEntries: Int = 10 * 1000 * 1000
 
-  /** The current snapshot's entries re-expressed as writer specs —
-    * identity carry: path/content/partition/record-count/size/SEQUENCE
-    * and per-field COLUMN BOUNDS survive verbatim, so a commit that
-    * appends on top never disturbs delete visibility or file-skipping
-    * stats for pre-existing files. A driver-side manifest walk (the real
-    * Iceberg-client shape — no Spark job per commit); metadata-sized,
-    * bounded by [[MaxDriverFileEntries]] (see its note for the
-    * 100M-file path). */
-  private def carriedEntries(spark: SparkSession, tableDir: String,
-      snapshotId: Long): Seq[IcebergLayoutWriter.ManifestEntrySpec] =
-    carriedEntriesOpt(spark, tableDir, snapshotId, MaxDriverFileEntries)
-      .getOrElse(sys.error(
-        s"carriedEntries($tableDir@$snapshotId): more than " +
-          s"$MaxDriverFileEntries file entries exceed the driver-side " +
-          "planning ceiling. Every DML commit shape (append, upsert, " +
-          "MERGE, DELETE, MOR delta, group replace, rewrite_data_files) " +
-          "has a past-the-ceiling manifest-reuse/distributed path — " +
-          "only genuinely driver-shaped maintenance (clone, manifest " +
-          "compaction, cherry-pick, position-delete folds) reaches " +
-          "this; run rewrite_manifests/expire first or raise " +
-          "spark.graft.maxDriverFileEntries."))
+  /** The effective driver-entry cap, `spark.graft.maxDriverFileEntries`
+    * falling back to [[MaxDriverFileEntries]] — the ONE reading of the
+    * knob, shared by the commit producer's arm choice and the scan
+    * planner's per-file/manifest-granular switch. */
+  private[graft] def driverEntryCap(spark: SparkSession): Int =
+    spark.sessionState.conf.getConfString("spark.graft.maxDriverFileEntries",
+      MaxDriverFileEntries.toString).toInt
 
-  /** [[carriedEntries]] with an explicit ceiling: None once the walk
-    * passes `cap` entries — the caller's signal to switch to the
-    * manifest-REUSE commit path instead of materializing per-file state
-    * on the driver. */
-  private def carriedEntriesOpt(spark: SparkSession, tableDir: String,
-      snapshotId: Long, cap: Int)
+  /** Why a driver-shaped verb refused a snapshot past the hard ceiling. */
+  private def pastCeiling(snapshotId: Long): String =
+    s"snapshot $snapshotId holds more than $MaxDriverFileEntries file " +
+      "entries, past the driver-side planning ceiling. Every DML commit " +
+      "shape has a past-the-ceiling manifest-reuse/distributed path — only " +
+      "genuinely driver-shaped maintenance (compaction, clone, manifest " +
+      "compaction) reaches this; run rewrite_manifests/expire first."
+
+  /** A manifest list's rows as (path, sequence_number, content,
+    * partition_spec_id) — everything a carry walk needs, one list read. */
+  private def listRowsOf(conf: org.apache.hadoop.conf.Configuration,
+      list: String): Seq[(String, Long, Int, Int)] =
+    IcebergManifestSource.manifestListRows(conf, list)
+      .map(r => (r._1, r._5, r._4, r._3))
+
+  /** The live entries of the manifests in `rows` ([[listRowsOf]]) as
+    * writer specs — identity carry: path/content/partition/record-count/
+    * size/SEQUENCE, bounds, counts, format, equality ids and row lineage
+    * survive verbatim, so a commit on top never disturbs delete
+    * visibility or file skipping for pre-existing files. A driver-side manifest walk (the real
+    * Iceberg-client shape — no Spark job per commit). None once the walk
+    * passes `cap` entries. */
+  private def walkEntries(conf: org.apache.hadoop.conf.Configuration,
+      rows: Seq[(String, Long, Int, Int)], cap: Int)
       : Option[Seq[IcebergLayoutWriter.ManifestEntrySpec]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(snapshotId)) match {
-      case None => Some(Nil)
-      case Some(list) =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[IcebergLayoutWriter.ManifestEntrySpec]
-        // each manifest's spec id rides on the manifest-list row; carry
-        // it onto every entry so a commit after partition-spec evolution
-        // re-files old entries under their ORIGINAL spec (interpreting
-        // an old file's partition values needs its own spec, not the
-        // current default — spec "Partition Evolution")
-        val listDir = new java.io.File(list).getParentFile
-        val specOf = IcebergManifestSource.manifestSpecIds(conf, list)
-          .map { case (p, sid) =>
-            IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
-        val it = IcebergManifestSource.manifestPathSeqs(conf, list)
-          .iterator
-          .flatMap { case (p, inherit) =>
-            IcebergManifestSource.readManifestStats(p, conf, inherit)
-              .map(s => (p, s)) }
-        while (it.hasNext) {
-          val (mp, s) = it.next()
-          if (out.size >= cap) return None
-          out += specFromStats(s, specOf.getOrElse(mp, 0))
-        }
-        Some(out.toSeq)
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[IcebergLayoutWriter.ManifestEntrySpec]
+    val it = rows.iterator.flatMap { case (p, seq, _, specId) =>
+      IcebergManifestSource.readManifestStats(p, conf, seq)
+        .map(specFromStats(_, specId)) }
+    while (it.hasNext) {
+      val e = it.next()
+      if (out.size >= cap) return None
+      out += e
     }
+    Some(out.toSeq)
   }
 
   /** One manifest entry's identity-carry spec — the shared mapping every
     * carry path (driver walk, delete-side walk, distributed rewrite
-    * tasks) uses, so no path can disagree about what survives a commit. */
+    * tasks) uses, so no path can disagree about what survives a commit.
+    * The spec id rides on the manifest-list row: a commit after
+    * partition-spec evolution re-files old entries under their ORIGINAL
+    * spec (spec "Partition Evolution"). */
   private def specFromStats(s: IcebergManifestSource.ManifestStats,
       specId: Int): IcebergLayoutWriter.ManifestEntrySpec =
     IcebergLayoutWriter.ManifestEntrySpec(status = 1,
@@ -1087,72 +1037,22 @@ object LayoutMaintenance {
       specId = specId,
       firstRowId = s.firstRowId.map(Long.box).orNull)
 
-  /** Carried entries of the snapshot's DELETE manifests only (manifest
-    * list `content == 1`) — the SMALL side of any real table: delete
-    * files are commit-count shaped, not data-file shaped, so walking
-    * them driver-side stays metadata-sized even when the data side is
-    * past the planning ceiling. The past-the-ceiling delta/delete
-    * commits use this to keep tombstone semantics (DV supersede,
-    * eq-delete carry) while never materializing a data-file entry. */
-  private def deleteCarriedEntries(spark: SparkSession, tableDir: String,
-      snapshotId: Long): Seq[IcebergLayoutWriter.ManifestEntrySpec] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(snapshotId)) match {
-      case None => Nil
-      case Some(list) =>
-        val listDir = new java.io.File(list).getParentFile
-        val specOf = IcebergManifestSource.manifestSpecIds(conf, list)
-          .map { case (p, sid) =>
-            IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
-        IcebergManifestSource.manifestPathSeqContents(conf, list)
-          .filter(_._3 == 1)
-          .flatMap { case (p, inherit, _) =>
-            IcebergManifestSource.readManifestStats(p, conf, inherit)
-              .map(s => specFromStats(s, specOf.getOrElse(p, 0))).toSeq }
-    }
-  }
-
-  /** Paths of the snapshot's DELETE manifests (list rows, KB-sized). */
-  private def deleteManifestPaths(spark: SparkSession, tableDir: String,
-      snapshotId: Long): Set[String] =
-    IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(snapshotId)).toSeq
-      .flatMap(list => IcebergManifestSource.manifestPathSeqContents(
-        spark.sparkContext.hadoopConfiguration, list)
-        .filter(_._3 == 1).map(_._1)).toSet
-
-  /** ONE live data-file path, resolved by streaming the head of the
-    * first data manifest — the past-the-ceiling substitute for "any
-    * carried data file" lookups (equality-id resolution), O(1) instead
-    * of O(files). */
+  /** ONE live data-file path of a snapshot, streamed from the head of its
+    * first data manifest — O(1) instead of O(files). */
   private[sources] def firstDataFilePath(spark: SparkSession,
-      tableDir: String, snapshotId: Long): Option[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(snapshotId))
-      .toSeq.flatMap { list =>
-        IcebergManifestSource.manifestPathSeqContents(conf, list)
-          .filter(_._3 == 0).iterator
-          .flatMap { case (p, inherit, _) =>
-            IcebergManifestSource.readManifestStats(p, conf, inherit)
-              .find(_.content == 0).map(_.filePath) }
-          .take(1).toSeq
-      }.headOption
-  }
+      tableDir: String, snapshotId: Long): Option[String] =
+    IcebergManifestSource.resolveManifestList(spark, tableDir, Some(snapshotId))
+      .flatMap { l =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        firstDataFileOf(conf, listRowsOf(conf, l))
+      }
 
-  /** The effective driver-entry ceiling: the session knob (the same one
-    * the scan planner honors) falling back to [[MaxDriverFileEntries]]. */
-  private def driverEntryCap(spark: SparkSession): Int =
-    spark.sessionState.conf.getConfString(
-      "spark.graft.maxDriverFileEntries",
-      MaxDriverFileEntries.toString).toInt
+  private def firstDataFileOf(conf: org.apache.hadoop.conf.Configuration,
+      rows: Seq[(String, Long, Int, Int)]): Option[String] =
+    rows.filter(_._3 == 0).iterator.flatMap { case (p, seq, _, _) =>
+      IcebergManifestSource.readManifestStats(p, conf, seq)
+        .find(_.content == 0).map(_.filePath) }.nextOption()
 
-  /** Append a snapshot holding `carried ++ added` on top of the current
-    * history. `currentAfter` is the snapshot the table POINTS AT after
-    * the commit (the new id for a normal commit; the old id for a staged
-    * write-audit-publish commit), `refsAfter` the full refs map to
-    * persist. Returns the new snapshot id. */
   /** The table's v3 `next-row-id` counter (0 when the metadata predates
     * row lineage — existing files then read `_row_id` as null until a
     * lineage-assigning commit touches them, the spec's upgrade rule). */
@@ -1160,25 +1060,311 @@ object LayoutMaintenance {
     Option(readMetadata(spark, tableDir).get("next-row-id"))
       .filter(_.canConvertToLong).map(_.asLong()).getOrElse(0L)
 
-  /** v3 row lineage assignment: stamp `first_row_id` on this commit's
-    * NEW data entries (status-stamped with the commit's sequence
-    * number, not already stamped by a lineage-preserving writer) from
-    * the table's `next-row-id` counter, sequentially by record count.
-    * Returns (stamped entries, snapshot first-row-id, next-row-id
-    * after) — the Nones when the commit adds no data rows. */
-  private def assignRowIds(spark: SparkSession, tableDir: String,
-      entries: Seq[IcebergLayoutWriter.ManifestEntrySpec], newId: Long)
+  // ---- the snapshot producer ----
+
+  /** What a commit removes from its parent snapshot's entries. */
+  private sealed trait Removal
+  /** Nothing: files and/or tombstones land on top. */
+  private case object KeepAll extends Removal
+  /** A delete-side keep filter: every data entry survives, a carried
+    * DELETE entry survives iff `keep` holds (the DV supersede fold,
+    * position-delete consolidation, eq→pos conversion). */
+  private final case class KeepDeletes(
+      keep: IcebergLayoutWriter.ManifestEntrySpec => Boolean) extends Removal
+  /** Data files by path — each must be live in the parent, or the
+    * commit fails as a concurrent-commit conflict (Iceberg's
+    * validation). `dropDeletes` retires every delete entry too. */
+  private final case class RemovePaths(paths: Seq[String],
+      dropDeletes: Boolean = false) extends Removal
+  /** Data files whose partition values are in `touched`. */
+  private final case class RemovePartitions(
+      touched: Set[Map[String, String]]) extends Removal
+  /** Everything: the snapshot holds exactly the added entries. */
+  private case object RemoveAll extends Removal
+
+  /** One verb's change to its parent snapshot: the entries it added (its
+    * files are already written), what it removes, the summary operation
+    * plus any extra summary entries, and a hook that runs once the CAS
+    * has landed. */
+  private final case class ChangeSet(
+      added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
+      removal: Removal = KeepAll,
+      operation: String = "append",
+      extraSummary: Seq[(String, String)] = Nil,
+      afterCommit: () => Unit = () => ())
+
+  /** THE snapshot producer: under the table lock, pin a [[CommitBase]],
+    * let `plan` write its files and return its change (None = nothing to
+    * commit) and result, then commit the change. `retry` is for
+    * APPEND-shaped verbs only ([[withCommitRetry]] re-runs the whole
+    * attempt against the new base); replace-shaped verbs let a lost race
+    * fail the statement. `target` names where the snapshot lands and
+    * which snapshot it carries from; `cap` overrides the entry cap for
+    * planning-shaped verbs. */
+  private def produce[R](spark: SparkSession, tableDir: String,
+      retry: Boolean, target: Target = MoveHead, cap: Option[Int] = None)(
+      plan: CommitBase => (Option[ChangeSet], R)): R =
+    commitLock(tableDir).synchronized {
+      def attempt(): R = {
+        val b = new CommitBase(spark, tableDir, target, cap)
+        require(b.snaps.nonEmpty, s"no snapshots under $tableDir")
+        val (change, result) = plan(b)
+        change.foreach { c =>
+          commitChange(spark, b, target, c)
+          c.afterCommit()
+        }
+        result
+      }
+      if (retry) withCommitRetry(tableDir)(attempt()) else attempt()
+    }
+
+  /** What the REUSE arm does to the parent's manifest list: rows to
+    * retire, task-rewritten manifests to reference, delete entries to
+    * re-file, and the removed counts the summary totals subtract. */
+  private final case class ListEdit(
+      drop: Set[String] = Set.empty,
+      rewritten: Seq[(java.io.File, Int, Int)] = Nil,
+      refiled: Seq[IcebergLayoutWriter.ManifestEntrySpec] = Nil,
+      removedData: Long = 0L, removedRecords: Long = 0L,
+      removedDeletes: Long = 0L)
+
+  /** Commit `c` on `b`: stamp the added entries (sequence = the new id,
+    * unset spec ids → the default spec, row ids from the lineage
+    * counter), gate deletion vectors, write manifests + list + summary on
+    * the driver-walk arm (the carry fits under the cap, or nothing is
+    * carried) or the reuse arm (past it), move refs, CAS. */
+  private def commitChange(spark: SparkSession, b: CommitBase,
+      target: Target, c: ChangeSet): Unit = {
+    val newId = b.newId
+    // deletion vectors are v3-only: refuse on an explicitly-v2 table,
+    // stamp 3 otherwise (DV-only commits add no data rows, so the
+    // lineage params alone would not witness the construct)
+    val addsDv = c.added.exists(_.fileFormat == "PUFFIN")
+    if (addsDv) b.requireV3("deletion vectors")
+    val (added, firstRowId, nextRowIdAfter) = assignRowIds(b,
+      c.added.map(e => e.copy(sequenceNumber = newId,
+        specId = if (e.specId < 0) b.defaultSpecId else e.specId)))
+    val m = metaDir(b.tableDir)
+    // a manifest is homogeneous in partition SHAPE (the writer derives
+    // the Avro partition record from its first entry) AND in spec id
+    // (the list row carries ONE partition_spec_id) — entries spanning
+    // shapes or an evolved spec history split accordingly
+    def writeManifests(es: Seq[IcebergLayoutWriter.ManifestEntrySpec]) =
+      es.groupBy(e =>
+          (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
+        .toSeq.sortBy { case ((ct, sid, names), _) => (ct, sid, names.mkString(",")) }
+        .zipWithIndex.map { case (((ct, sid, _), group), i) =>
+          val f = freshFile(m, s"manifest-$newId-$ct-s$sid-g$i.avro")
+          IcebergLayoutWriter.writeManifest(f, group)
+          (f, ct, sid)
+        }
+    val addedData = added.filter(_.content == 0)
+    val addedRecords = addedData.map(_.recordCount).sum
+    val addedDeletes = (added.size - addedData.size).toLong
+    val walked = if (c.removal == RemoveAll) Some(Nil) else b.carry
+    val (newList, totals) = walked match {
+      case Some(carried) =>
+        // DRIVER-WALK arm: a fresh list over kept ++ added; totals exact
+        val entries = keptEntries(b, carried, c.removal) ++ added
+        val manifests = writeManifests(entries)
+        val list = freshFile(m, s"snap-$newId-manifest-list.avro")
+        IcebergLayoutWriter.writeManifestListSpecs(list, manifests, newId)
+        val data = entries.filter(_.content == 0)
+        (list, Seq("total-data-files" -> data.size.toLong,
+          "total-records" -> data.map(_.recordCount).sum,
+          "total-delete-files" -> (entries.size - data.size).toLong))
+      case None =>
+        // REUSE arm: untouched manifests ride verbatim in a filtered copy
+        // of the parent's list; totals extend the parent summary's by the
+        // change's deltas when it carries them, else are omitted rather
+        // than guessed
+        val edit = listEdit(spark, b, c.removal)
+        val manifests = edit.rewritten ++ writeManifests(added ++ edit.refiled)
+        val list = freshFile(m, s"snap-$newId-manifest-list.avro")
+        IcebergLayoutWriter.filterManifestList(list,
+          new java.io.File(b.listPath.get), edit.drop, manifests, newId)
+        def tot(key: String, delta: Long) = b.parentSummary.get(key)
+          .flatMap(_.toLongOption).map(p => key -> (p + delta)).toSeq
+        (list, tot("total-data-files", addedData.size - edit.removedData) ++
+          tot("total-records", addedRecords - edit.removedRecords) ++
+          tot("total-delete-files",
+            addedDeletes + edit.refiled.size - edit.removedDeletes))
+    }
+    // spec "Snapshots": every snapshot records its operation plus change
+    // counts — what `snapshots` metadata-table consumers and commit
+    // auditors read without touching manifests
+    val summary = Seq("operation" -> c.operation,
+      "added-data-files" -> addedData.size.toString,
+      "added-records" -> addedRecords.toString,
+      "added-delete-files" -> addedDeletes.toString) ++
+      totals.map { case (k, v) => k -> v.toString } ++ c.extraSummary
+    val (currentAfter, refsAfter) = target match {
+      case MoveHead => (newId, b.refs.map {
+        case (name, id, "branch") if id == b.parentId => (name, newId, "branch")
+        case other => other
+      })
+      case StageBranch(name) => (b.curId,
+        (b.refs.filterNot(_._1 == name) :+ ((name, newId, "branch"))).sortBy(_._1))
+      case StageOnly => (b.curId, b.refs)
+    }
+    writeMetadataVersion(b,
+      b.snaps :+ Snap(newId, newList.getAbsolutePath, Some(summary)),
+      currentAfter, refsAfter,
+      nextRowIdAfter = nextRowIdAfter,
+      snapshotFirstRowId = firstRowId.map(newId -> _),
+      v3Construct = addsDv)
+  }
+
+  /** The driver-walk arm's surviving carried entries. */
+  private def keptEntries(b: CommitBase,
+      carried: Seq[IcebergLayoutWriter.ManifestEntrySpec],
+      removal: Removal): Seq[IcebergLayoutWriter.ManifestEntrySpec] =
+    removal match {
+      case KeepAll => carried
+      case KeepDeletes(keep) => carried.filter(e => e.content == 0 || keep(e))
+      case RemovePaths(paths, dropDeletes) =>
+        val removed = paths.map(IcebergManifestSource.localPath).toSet
+        requireLive(b, removed, carried.collect { case e if e.content == 0 =>
+          IcebergManifestSource.localPath(e.filePath) }.toSet)
+        carried.filter(e =>
+          if (e.content == 0) !removed(IcebergManifestSource.localPath(e.filePath))
+          else !dropDeletes)
+      case RemovePartitions(touched) =>
+        // a data file WITHOUT recorded partition values can never match
+        // the predicate, yet may hold touched partitions' rows — silently
+        // retaining it would corrupt the overwrite, silently dropping it
+        // would lose its OTHER partitions' rows. Refuse loudly.
+        val blind = carried.filter(e => e.content == 0 && e.partition.isEmpty)
+        require(blind.isEmpty,
+          s"commitReplacePartitions(${b.tableDir}): data files without " +
+            s"recorded partition values (${blind.take(3).map(_.filePath)
+              .mkString(", ")}) cannot be partition-matched; rewrite " +
+            "them with a partition-preserving compaction first")
+        carried.filter(e =>
+          e.content != 0 || !touched(canonPartition(e.partition)))
+      case RemoveAll => Nil
+    }
+
+  /** OCC validation (Iceberg's commit-conflict semantics): every file a
+    * replace removes must still be live in its base. A concurrent commit
+    * that already replaced one would make the swap resurrect or
+    * duplicate rows — the statement fails and re-runs instead. */
+  private def requireLive(b: CommitBase, removed: Set[String],
+      live: Set[String]): Unit = {
+    val gone = removed.filterNot(live)
+    require(gone.isEmpty,
+      s"commitReplaceFiles(${b.tableDir}): concurrent commit conflict — " +
+        s"scanned files no longer in snapshot ${b.parentId}: " +
+        s"${gone.take(3).mkString(", ")}")
+  }
+
+  /** The reuse arm's list edit for `removal`. Delete-side filters re-file
+    * the (small, commit-count shaped) delete side when they drop an
+    * entry. Data-side removal is the distributed manifest carry real
+    * Iceberg gets from its manifest-rewrite machinery: one task per DATA
+    * manifest classifies it against the (broadcast, change-set-sized)
+    * removed set; untouched manifests stay referenced VERBATIM, touched
+    * ones are rewritten in the task minus their removed entries (via the
+    * shared [[specFromStats]] mapping). The driver handles manifest-count
+    * rows and the KB-sized list — never a per-file entry. */
+  private def listEdit(spark: SparkSession, b: CommitBase,
+      removal: Removal): ListEdit = {
+    def deleteManifests = b.listRows.filter(_._3 == 1).map(_._1).toSet
+    removal match {
+      case KeepAll | RemoveAll => ListEdit()
+      case KeepDeletes(keep) =>
+        val kept = b.deleteSide.filter(keep)
+        if (kept.size == b.deleteSide.size) ListEdit()
+        else ListEdit(drop = deleteManifests, refiled = kept,
+          removedDeletes = b.deleteSide.size.toLong)
+      case RemovePaths(_, _) | RemovePartitions(_) =>
+        val (removedNorm, touched, dropDeletes) = removal match {
+          case RemovePaths(ps, dd) =>
+            (ps.map(IcebergManifestSource.localPath).toSet, None, dd)
+          case RemovePartitions(t) => (Set.empty[String], Some(t), false)
+          case _ => (Set.empty[String], None, false)
+        }
+        val dataRows = b.listRows.filter(_._3 == 0)
+        val sconf = new org.apache.spark.util.SerializableConfiguration(
+          spark.sparkContext.hadoopConfiguration)
+        val metaDirPath = metaDir(b.tableDir).getAbsolutePath
+        val newId = b.newId
+        val removedB = spark.sparkContext.broadcast(removedNorm)
+        val partB = spark.sparkContext.broadcast(touched)
+        val par = math.max(1, math.min(dataRows.size,
+          spark.sparkContext.defaultParallelism))
+        // (srcPath, reusedVerbatim, rewrittenPathOrNull, specId,
+        //  foundRemovedPaths, removedRecords)
+        val results = spark.sparkContext
+          .parallelize(dataRows.zipWithIndex, par)
+          .map { case ((p, seq, _, specId), idx) =>
+            val entries = IcebergManifestSource
+              .readManifestStats(p, sconf.value, seq)
+              .map(s => specFromStats(s, specId)).toSeq
+            val pf = partB.value
+            // partition mode: a pval-less data file is un-matchable —
+            // surface it so the driver refuses (same contract as the
+            // driver-walk arm)
+            if (pf.isDefined && entries.exists(_.partition.isEmpty))
+              sys.error(
+                s"commitReplacePartitions: manifest $p holds data files " +
+                  "without recorded partition values; rewrite them with " +
+                  "a partition-preserving compaction first")
+            val (hit, survivors) = entries.partition(e => pf match {
+              case Some(t) => t(canonPartition(e.partition))
+              case None =>
+                removedB.value(IcebergManifestSource.localPath(e.filePath))
+            })
+            if (hit.isEmpty) (p, true, null: String, specId,
+              Seq.empty[String], 0L)
+            else {
+              val out =
+                if (survivors.isEmpty) null
+                else {
+                  val f = new java.io.File(metaDirPath,
+                    s"manifest-$newId-rw-$idx.avro")
+                  IcebergLayoutWriter.writeManifest(f, survivors)
+                  f.getAbsolutePath
+                }
+              (p, false, out, specId,
+                hit.map(e => IcebergManifestSource.localPath(e.filePath)),
+                hit.map(_.recordCount).sum)
+            }
+          }.collect().toSeq
+        removedB.destroy(); partB.destroy()
+        // a PARTITION-predicate replace has no expected path set — its
+        // removal derives from this base by construction, and the CAS
+        // catches racers
+        if (touched.isEmpty)
+          requireLive(b, removedNorm, results.flatMap(_._5).toSet)
+        ListEdit(
+          drop = results.filterNot(_._2).map(_._1).toSet ++
+            (if (dropDeletes) deleteManifests else Set.empty[String]),
+          rewritten = results.collect { case (_, false, np, sid, _, _)
+            if np != null => (new java.io.File(np), 0, sid) },
+          removedData = results.map(_._5.size.toLong).sum,
+          removedRecords = results.map(_._6).sum,
+          removedDeletes =
+            if (dropDeletes) b.deleteSide.size.toLong else 0L)
+    }
+  }
+
+  /** v3 row lineage assignment: stamp `first_row_id` on the commit's new
+    * data entries not already stamped by a lineage-preserving writer,
+    * sequentially by record count from the table's `next-row-id`
+    * counter. Returns (stamped entries, snapshot first-row-id,
+    * next-row-id after) — the Nones when the commit adds no data rows.
+    * Row lineage is a v3-only construct: an explicitly-v2 table never
+    * assigns it (_row_id reads null — the v2 contract), and its metadata
+    * stays stamped 2. */
+  private def assignRowIds(b: CommitBase,
+      entries: Seq[IcebergLayoutWriter.ManifestEntrySpec])
       : (Seq[IcebergLayoutWriter.ManifestEntrySpec], Option[Long], Option[Long]) = {
-    // row lineage is a v3-only construct: an explicitly-v2 table never
-    // assigns it (_row_id reads null — the v2 contract), and its
-    // metadata stays stamped 2
-    if (declaredFormatVersion(spark, tableDir).contains(2))
-      return (entries, None, None)
-    val start = nextRowId(spark, tableDir)
+    if (b.declaredFv.contains(2)) return (entries, None, None)
+    val start = b.nextRowId
     var cur = start
     val stamped = entries.map { e =>
-      if (e.content == 0 && e.firstRowId == null &&
-          e.sequenceNumber.longValue == newId) {
+      if (e.content == 0 && e.firstRowId == null) {
         val s = e.copy(firstRowId = Long.box(cur)); cur += e.recordCount; s
       } else e
     }
@@ -1186,106 +1372,14 @@ object LayoutMaintenance {
     else (stamped, Some(start), Some(cur))
   }
 
-  private def appendSnapshot(spark: SparkSession, tableDir: String,
-      entriesIn: Seq[IcebergLayoutWriter.ManifestEntrySpec], newId: Long,
-      currentAfter: Long,
-      refsAfter: Seq[(String, Long, String)],
-      base: MetaBase,
-      operation: String = "append",
-      extraSummary: Seq[(String, String)] = Nil): Long = {
-    val (entries, firstRowId, nextRowIdAfter) =
-      assignRowIds(spark, tableDir, entriesIn, newId)
-    // deletion vectors are v3-only: refuse on an explicitly-v2 table,
-    // stamp 3 otherwise (DV-only commits add no data rows, so the
-    // lineage params alone would not witness the construct)
-    val addsDv = entriesIn.exists(e =>
-      e.sequenceNumber.longValue == newId && e.fileFormat == "PUFFIN")
-    if (addsDv) requireV3(spark, tableDir, "deletion vectors")
-    val m = metaDir(tableDir)
-    // spec "Snapshots": every snapshot records a summary with its
-    // operation plus change counts — what `snapshots` metadata-table
-    // consumers and commit auditors read without touching manifests.
-    // Added = the entries stamped with THIS commit's sequence number
-    // (the layout's commit discipline); totals are over live entries.
-    val addedHere = entries.filter(_.sequenceNumber.longValue == newId)
-    val dataHere = addedHere.filter(_.content == 0)
-    val summary: Seq[(String, String)] = Seq(
-      "operation" -> operation,
-      "added-data-files" -> dataHere.size.toString,
-      "added-records" -> dataHere.map(_.recordCount).sum.toString,
-      "added-delete-files" ->
-        addedHere.count(_.content != 0).toString,
-      "total-data-files" -> entries.count(_.content == 0).toString,
-      "total-records" ->
-        entries.filter(_.content == 0).map(_.recordCount).sum.toString,
-      "total-delete-files" -> entries.count(_.content != 0).toString) ++
-      extraSummary
-    // entries ADDED by this commit that did not declare a spec id
-    // (specId < 0, the UNSET sentinel — distinct from a genuine spec 0,
-    // so a cherry-picked or carried entry written under spec 0 is never
-    // re-filed under an evolved default) inherit the table's current
-    // DEFAULT spec; carried entries keep the id their manifest-list row
-    // recorded
-    val defaultSpecId = IcebergManifestSource.partitionSpecs(
-      spark, tableDir)._1
-    val stamped = entries.map(e =>
-      if (e.specId < 0)
-        e.copy(specId =
-          if (e.sequenceNumber.longValue == newId) defaultSpecId else 0)
-      else e)
-    // a manifest is homogeneous in partition SHAPE (the writer derives
-    // the Avro partition record from its first entry) AND in spec id
-    // (the manifest-list row carries ONE partition_spec_id) — a commit
-    // whose new unpartitioned file lands next to carried partitioned
-    // entries, or whose entries span an evolved spec history, must
-    // split manifests accordingly
-    val groups = stamped
-      .groupBy(e =>
-        (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
-      .toSeq.sortBy { case ((c, sid, names), _) => (c, sid, names.mkString(",")) }
-    val manifests = groups.zipWithIndex.map { case (((c, sid, _), es), i) =>
-      val f = freshFile(m, s"manifest-$newId-$c-s$sid-g$i.avro")
-      IcebergLayoutWriter.writeManifest(f, es)
-      (f, c, sid)
-    }
-    val newList = freshFile(m, s"snap-$newId-manifest-list.avro")
-    IcebergLayoutWriter.writeManifestListSpecs(newList, manifests, newId)
-    writeMetadataVersion(spark, tableDir,
-      snapshotsFromBase(base, tableDir) :+
-        Snap(newId, newList.getAbsolutePath, Some(summary)),
-      currentAfter, refsAfter, base,
-      nextRowIdAfter = nextRowIdAfter,
-      snapshotFirstRowId = firstRowId.map(newId -> _),
-      v3Construct = addsDv)
-    newId
-  }
-
-  /** MERGE-style upsert commit — the Iceberg v2 merge-on-read WRITE path
-    * (spec "Row-level deletes"; the write twin of [[MorRead.readTable]]):
-    * ONE new data file holding the upserted rows (sorted by `keyCols`, so
-    * positions are deterministic) plus ONE equality-delete file listing
-    * the distinct update keys, both at a sequence number above every
-    * existing entry. The spec's strict-< equality-delete visibility makes
-    * this exactly MERGE: old versions of updated keys (strictly lower
-    * sequence) die, the new file (same sequence as the tombstones)
-    * survives, and never-seen keys are pure inserts whose tombstones
-    * match nothing. Branch refs pointing at the old head fast-forward,
-    * exactly like a real commit moves `main`. Data the size of the
-    * UPDATE SET moves; the table's existing files are carried by
-    * identity — at 100 TB an upsert costs O(updates), not O(table).
-    * Returns (newSnapshotId, upsertedRowCount). */
   /** 1-based field ids of `keyCols` in the table's data schema,
-    * resolved from a live data file's parquet footer (the dialect's
-    * positional field-id convention). Nil when the table has no data
-    * file to resolve against. Written into eq-delete manifest entries
-    * as the spec's `equality_ids`, so readers apply the tombstones with
-    * no out-of-band key list. */
-  private def keyFieldIds(
-      carried: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      extraDataFile: Option[java.io.File],
-      keyCols: Seq[String]): Seq[Int] = {
-    val dataPath = carried.find(_.content == 0).map(_.filePath)
-      .orElse(extraDataFile.map(_.getAbsolutePath))
+    * resolved from the header of the live data file `dataPath` (the
+    * dialect's positional field-id convention). Nil when the table has
+    * no data file to resolve against. Written into eq-delete manifest
+    * entries as the spec's `equality_ids`, so readers apply the
+    * tombstones with no out-of-band key list. */
+  private def keyFieldIds(dataPath: Option[String],
+      keyCols: Seq[String]): Seq[Int] =
     dataPath.toSeq.flatMap { p =>
       val names = dataFileFieldNames(p)
       keyCols.map { k =>
@@ -1295,7 +1389,6 @@ object LayoutMaintenance {
         i + 1
       }
     }
-  }
 
   /** Top-level column names of one data file, resolved from ITS OWN
     * header — any of the three spec formats (`write.format.default`
@@ -1325,67 +1418,63 @@ object LayoutMaintenance {
     }
   }
 
+  /** Write `rows` as ONE data file `<stem>-<newId>` in the table's
+    * `write.format.default`, its entry carrying the declared stat
+    * fields' harvested bounds. */
+  private def dataEntry(b: CommitBase, rows: org.apache.spark.sql.DataFrame,
+      stem: String): IcebergLayoutWriter.ManifestEntrySpec = {
+    val f = freshFile(new java.io.File(b.tableDir, "data"), s"$stem-${b.newId}." +
+      graft.sources.v2.GraftFormatWriters.extensionOf(b.writeFormat))
+    val n = IcebergLayoutWriter.writeSingleData(rows, f, b.writeFormat)
+    withHarvestedBounds(Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
+      content = 0, filePath = f.getAbsolutePath, recordCount = n,
+      sizeBytes = f.length(), fileFormat = b.writeFormat.toUpperCase)),
+      b.writeFormat, b.statFields).head
+  }
+
+  /** Write ONE equality-delete file of the distinct `keyCols` of `keys`
+    * (sorted) in the table's `write.delete.format.default` — Iceberg keys
+    * ALL delete-file formats off that property — with its
+    * `equality_ids` resolved from `idProbe`, a live data file. */
+  private def eqDeleteEntry(b: CommitBase, keys: org.apache.spark.sql.DataFrame,
+      keyCols: Seq[String],
+      idProbe: Option[String]): IcebergLayoutWriter.ManifestEntrySpec = {
+    val f = freshFile(new java.io.File(b.tableDir, "data"), s"eqdel-${b.newId}." +
+      graft.sources.v2.GraftFormatWriters.extensionOf(b.deleteFormat))
+    val n = IcebergLayoutWriter.writeSingleData(keys.select(keyCols.map(col): _*)
+      .distinct().sort(keyCols.map(col): _*), f, b.deleteFormat)
+    IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 2,
+      filePath = f.getAbsolutePath, recordCount = n, sizeBytes = f.length(),
+      fileFormat = b.deleteFormat.toUpperCase,
+      equalityIds = keyFieldIds(idProbe, keyCols))
+  }
+
+  /** MERGE-style upsert commit — the Iceberg v2 merge-on-read WRITE path
+    * (spec "Row-level deletes"; the write twin of [[MorRead.readTable]]):
+    * ONE new data file holding the upserted rows (sorted by `keyCols`, so
+    * positions are deterministic) plus ONE equality-delete file listing
+    * the distinct update keys, both at a sequence number above every
+    * existing entry. The spec's strict-< equality-delete visibility makes
+    * this exactly MERGE: old versions of updated keys (strictly lower
+    * sequence) die, the new file (same sequence as the tombstones)
+    * survives, and never-seen keys are pure inserts whose tombstones
+    * match nothing. Branch refs pointing at the old head fast-forward,
+    * exactly like a real commit moves `main`. Data the size of the
+    * UPDATE SET moves; the table's existing files are carried by
+    * identity — at 100 TB an upsert costs O(updates), not O(table).
+    * Returns (newSnapshotId, upsertedRowCount). */
   def commitUpsert(spark: SparkSession, tableDir: String,
       updates: org.apache.spark.sql.DataFrame,
-      keyCols: Seq[String]): (Long, Long) =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
+      keyCols: Seq[String]): (Long, Long) = {
     require(keyCols.nonEmpty, "commitUpsert needs at least one key column")
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // past the driver ceiling the carry is MANIFEST REUSE — an upsert
-    // adds files and removes none, so untouched manifests ride verbatim
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
+    produce(spark, tableDir, retry = true) { b =>
+      val up = dataEntry(b, updates.sort(keyCols.map(col): _*), "upsert")
+      val ed = eqDeleteEntry(b, updates, keyCols,
+        b.firstDataFile.orElse(Some(up.filePath)))
+      (Some(ChangeSet(Seq(up, ed), operation = "overwrite")),
+        (b.newId, up.recordCount))
     }
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
-    // data lands in the table's declared write.format.default; the
-    // eq-tombstone file honors write.delete.format.default (Iceberg
-    // keys ALL delete-file formats off that property)
-    val fmt = tableWriteFormat(spark, tableDir)
-    val delFmt = tableDeleteFormat(spark, tableDir)
-    val up = freshFile(dataDir,
-      s"upsert-$newId.${graft.sources.v2.GraftFormatWriters.extensionOf(fmt)}")
-    val ed = freshFile(dataDir,
-      s"eqdel-$newId.${graft.sources.v2.GraftFormatWriters.extensionOf(delFmt)}")
-    val n = IcebergLayoutWriter.writeSingleData(
-      updates.sort(keyCols.map(col): _*), up, fmt)
-    val nk = IcebergLayoutWriter.writeSingleData(
-      updates.select(keyCols.map(col): _*).distinct()
-        .sort(keyCols.map(col): _*), ed, delFmt)
-    val added = withHarvestedBounds(Seq(
-      IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-        filePath = up.getAbsolutePath, recordCount = n,
-        sizeBytes = up.length(), sequenceNumber = newId,
-        fileFormat = fmt.toUpperCase)),
-      fmt, declaredStatFieldsFor(spark, tableDir)) ++ Seq(
-      IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 2,
-        filePath = ed.getAbsolutePath, recordCount = nk,
-        sizeBytes = ed.length(), sequenceNumber = newId,
-        fileFormat = delFmt.toUpperCase,
-        equalityIds =
-          keyFieldIds(carriedOpt.getOrElse(Nil), Some(up), keyCols)))
-    carriedOpt match {
-      case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          movedRefs, base, operation = "overwrite")
-      case None =>
-        commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-          all, curId, base, newId, operation = "overwrite",
-          totalDeltaDataFiles = 1L, totalDeltaRecords = n,
-          totalDeltaDeleteFiles = 1L)
-    }
-    (newId, n)
-  } }
+  }
 
   /** APPEND commit: add already-written data files as a new snapshot on
     * top of the current one (the connector write path's commit step —
@@ -1398,7 +1487,7 @@ object LayoutMaintenance {
       partitionSpec: Seq[(String, String, Int)] = Nil,
       sortOrder: Seq[(Int, String, String, String)] = Nil,
       afterPlan: () => Unit = () => ()): Long =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
+      commitLock(tableDir).synchronized {
     val hasMeta = new java.io.File(metaDir(tableDir), "version-hint.text").exists() ||
       Option(metaDir(tableDir).listFiles()).exists(_.exists(
         _.getName.endsWith(".metadata.json")))
@@ -1418,237 +1507,16 @@ object LayoutMaintenance {
         assignRowIds = !declaredFv.contains(2),
         formatVersion = declaredFv.getOrElse(2))
       1L
-    } else {
-      val base = metaBase(spark, tableDir)
-      val all = snapshots(spark, tableDir)
-      require(all.nonEmpty, s"metadata exists but no snapshots under $tableDir")
-      val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-      // past the driver ceiling (spark.graft.maxDriverFileEntries, same
-      // knob the scan planner honors) the commit switches to MANIFEST
-      // REUSE — per-file entries are never materialized at all
-      val cap = spark.sessionState.conf.getConfString(
-        "spark.graft.maxDriverFileEntries",
-        MaxDriverFileEntries.toString).toInt
-      carriedEntriesOpt(spark, tableDir, curId, cap) match {
-        case Some(carried) =>
-          val newId = (all.map(_.id) ++
-            carried.map(_.sequenceNumber.longValue)).max + 1
-          // OCC test seam: fires between this commit's state reads and
-          // its version swap — a hook that itself commits forces the
-          // exact cross-process interleaving the CAS+retry protocol
-          // exists for (same-thread reentry through the JVM lock keeps
-          // it deterministic)
-          afterPlan()
-          val stamped = added.map(_.copy(sequenceNumber = newId))
-          val movedRefs = refs(spark, tableDir).map {
-            case (name, id, "branch") if id == curId => (name, newId, "branch")
-            case other => other
-          }
-          appendSnapshot(spark, tableDir, carried ++ stamped, newId, newId,
-            movedRefs, base)
-          newId
-        case None =>
-          afterPlan()
-          commitAppendReuse(spark, tableDir, added, all, curId, base)
-      }
+    } else produce(spark, tableDir, retry = true) { b =>
+      val newId = b.newId
+      // OCC test seam: fires between this commit's state reads and its
+      // version swap — a hook that itself commits forces the exact
+      // cross-process interleaving the CAS+retry protocol exists for
+      // (same-thread reentry through the JVM lock keeps it
+      // deterministic)
+      afterPlan()
+      (Some(ChangeSet(added)), newId)
     }
-  } }
-
-  /** FAST APPEND past the driver-entry ceiling — Iceberg's own append
-    * shape: the previous snapshot's manifest FILES are referenced
-    * verbatim in the new manifest list (zero per-entry work, zero entry
-    * materialization), the added files land in fresh manifests, and the
-    * driver handles only the KB-sized manifest list. Sequence-number
-    * safety: carried entries keep their explicit seqs inside their
-    * untouched manifests; the new id exceeds every history id AND every
-    * list-row sequence number. At 100 TB this is what makes a streaming
-    * ingest's commit cost O(added + manifest count), not O(files).
-    * CommitScaleSpec pins entry-set equivalence against the driver-walk
-    * path at a toy cap. */
-  private def commitAppendReuse(spark: SparkSession, tableDir: String,
-      added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      all: Seq[Snap], curId: Long, base: MetaBase): Long = {
-    val oldList = IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(curId))
-      .getOrElse(sys.error(
-        s"commitAppend($tableDir): snapshot $curId has no manifest list"))
-    val listFile = new java.io.File(oldList)
-    val newId = (all.map(_.id) :+
-      IcebergLayoutWriter.maxManifestListSeq(listFile)).max + 1
-    val defaultSpecId = IcebergManifestSource.partitionSpecs(
-      spark, tableDir)._1
-    val (stamped, firstRowId, nextRowIdAfter) = assignRowIds(spark, tableDir,
-      added.map(e => e.copy(sequenceNumber = newId,
-        specId = if (e.specId < 0) defaultSpecId else e.specId)), newId)
-    val m = metaDir(tableDir)
-    val groups = stamped
-      .groupBy(e =>
-        (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
-      .toSeq.sortBy { case ((c, sid, names), _) => (c, sid, names.mkString(",")) }
-    val manifests = groups.zipWithIndex.map { case (((c, sid, _), es), i) =>
-      val f = freshFile(m, s"manifest-$newId-$c-s$sid-g$i.avro")
-      IcebergLayoutWriter.writeManifest(f, es)
-      (f, c, sid)
-    }
-    val newList = freshFile(m, s"snap-$newId-manifest-list.avro")
-    IcebergLayoutWriter.appendManifestList(newList, listFile, manifests, newId)
-    // summary: added counts are exact; running totals extend the
-    // previous snapshot's summary when it carries them (this layout's
-    // own commits do), else they are omitted rather than guessed
-    val dataAdded = stamped.filter(_.content == 0)
-    val prevTotals = snapshotSummaries(spark, tableDir)
-      .find(_._1 == curId).map(_._3).getOrElse(Map.empty)
-    def tot(key: String, delta: Long): Seq[(String, String)] =
-      prevTotals.get(key).flatMap(v => v.toLongOption)
-        .map(p => Seq(key -> (p + delta).toString)).getOrElse(Nil)
-    val summary: Seq[(String, String)] = Seq(
-      "operation" -> "append",
-      "added-data-files" -> dataAdded.size.toString,
-      "added-records" -> dataAdded.map(_.recordCount).sum.toString,
-      "added-delete-files" -> stamped.count(_.content != 0).toString) ++
-      tot("total-data-files", dataAdded.size) ++
-      tot("total-records", dataAdded.map(_.recordCount).sum) ++
-      tot("total-delete-files", stamped.count(_.content != 0))
-    val movedRefs = refs(spark, tableDir).map {
-      case (name, id, "branch") if id == curId => (name, newId, "branch")
-      case other => other
-    }
-    writeMetadataVersion(spark, tableDir,
-      snapshotsFromBase(base, tableDir) :+
-        Snap(newId, newList.getAbsolutePath, Some(summary)),
-      newId, movedRefs, base,
-      nextRowIdAfter = nextRowIdAfter,
-      snapshotFirstRowId = firstRowId.map(newId -> _))
-    newId
-  }
-
-  /** The past-the-ceiling commit shape shared by every CARRY commit that
-    * is not a plain append (MERGE/upsert/DELETE/MOR delta): untouched
-    * manifests are referenced VERBATIM in the new manifest list
-    * ([[IcebergLayoutWriter.filterManifestList]] — the driver touches
-    * only the KB-sized list), `dropManifests` rows are retired,
-    * `refiledCarry` entries (the retired manifests' survivors, original
-    * sequence numbers preserved) land in fresh manifests next to
-    * `stampedAdded` (this commit's new files, sequence = `newId`).
-    * Totals extend the previous snapshot's summary by the caller's
-    * deltas when it carries them, else they are omitted rather than
-    * guessed. At 100 TB this is what keeps MERGE/DELETE commit cost
-    * O(changed + delete-side), never O(data files). */
-  private def commitCarryReuse(spark: SparkSession, tableDir: String,
-      stampedAddedIn: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      refiledCarry: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      dropManifests: Set[String],
-      all: Seq[Snap], curId: Long, base: MetaBase, newId: Long,
-      operation: String,
-      totalDeltaDataFiles: Long, totalDeltaRecords: Long,
-      totalDeltaDeleteFiles: Long,
-      currentAfter: Long = -1L,
-      refsAfterOpt: Option[Seq[(String, Long, String)]] = None,
-      extraSummary: Seq[(String, String)] = Nil): Long = {
-    // row lineage rides the past-the-ceiling path too: only the ADDED
-    // entries are materialized here (carried manifests ride verbatim,
-    // their first_row_id already in the files)
-    val (stampedAdded, firstRowId, nextRowIdAfter) =
-      assignRowIds(spark, tableDir, stampedAddedIn, newId)
-    // deletion vectors are v3-only (see appendSnapshot's twin check)
-    val addsDv = stampedAddedIn.exists(_.fileFormat == "PUFFIN")
-    if (addsDv) requireV3(spark, tableDir, "deletion vectors")
-    val defaultSpecId = IcebergManifestSource.partitionSpecs(
-      spark, tableDir)._1
-    val entries = stampedAdded.map(e =>
-      e.copy(specId = if (e.specId < 0) defaultSpecId else e.specId)) ++
-      refiledCarry
-    val m = metaDir(tableDir)
-    val groups = entries
-      .groupBy(e =>
-        (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
-      .toSeq.sortBy { case ((c, sid, names), _) => (c, sid, names.mkString(",")) }
-    val manifests = groups.zipWithIndex.map { case (((c, sid, _), es), i) =>
-      val f = freshFile(m, s"manifest-$newId-$c-s$sid-g$i.avro")
-      IcebergLayoutWriter.writeManifest(f, es)
-      (f, c, sid)
-    }
-    val dataAdded = stampedAdded.filter(_.content == 0)
-    finishReuseCommit(spark, tableDir, dropManifests, manifests,
-      all, curId, base, newId, operation,
-      addedDataFiles = dataAdded.size,
-      addedRecords = dataAdded.map(_.recordCount).sum,
-      addedDeleteFiles = stampedAdded.count(_.content != 0),
-      totalDeltaDataFiles, totalDeltaRecords, totalDeltaDeleteFiles,
-      currentAfter, refsAfterOpt, extraSummary,
-      nextRowIdAfter = nextRowIdAfter,
-      snapshotFirstRowId = firstRowId.map(newId -> _),
-      v3Construct = addsDv)
-  }
-
-  /** Shared tail of every past-the-ceiling commit: filter-copy the
-    * previous manifest list (reused rows verbatim, `dropManifests`
-    * retired, `newManifests` appended), extend the previous summary's
-    * totals by the deltas when it carries them, move branch refs, CAS
-    * the metadata version. */
-  private def finishReuseCommit(spark: SparkSession, tableDir: String,
-      dropManifests: Set[String],
-      newManifests: Seq[(java.io.File, Int, Int)],
-      all: Seq[Snap], curId: Long, base: MetaBase, newId: Long,
-      operation: String,
-      addedDataFiles: Long, addedRecords: Long, addedDeleteFiles: Long,
-      totalDeltaDataFiles: Long, totalDeltaRecords: Long,
-      totalDeltaDeleteFiles: Long,
-      currentAfter: Long = -1L,
-      refsAfterOpt: Option[Seq[(String, Long, String)]] = None,
-      extraSummary: Seq[(String, String)] = Nil,
-      nextRowIdAfter: Option[Long] = None,
-      snapshotFirstRowId: Option[(Long, Long)] = None,
-      v3Construct: Boolean = false): Long = {
-    val oldList = IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(curId))
-      .getOrElse(sys.error(
-        s"finishReuseCommit($tableDir): snapshot $curId has no manifest list"))
-    val listFile = new java.io.File(oldList)
-    val m = metaDir(tableDir)
-    val newList = freshFile(m, s"snap-$newId-manifest-list.avro")
-    IcebergLayoutWriter.filterManifestList(newList, listFile, dropManifests,
-      newManifests, newId)
-    val prevTotals = snapshotSummaries(spark, tableDir)
-      .find(_._1 == curId).map(_._3).getOrElse(Map.empty)
-    def tot(key: String, delta: Long): Seq[(String, String)] =
-      prevTotals.get(key).flatMap(v => v.toLongOption)
-        .map(p => Seq(key -> (p + delta).toString)).getOrElse(Nil)
-    val summary: Seq[(String, String)] = Seq(
-      "operation" -> operation,
-      "added-data-files" -> addedDataFiles.toString,
-      "added-records" -> addedRecords.toString,
-      "added-delete-files" -> addedDeleteFiles.toString) ++
-      tot("total-data-files", totalDeltaDataFiles) ++
-      tot("total-records", totalDeltaRecords) ++
-      tot("total-delete-files", totalDeltaDeleteFiles) ++
-      extraSummary
-    val refsAfter = refsAfterOpt.getOrElse(refs(spark, tableDir).map {
-      case (name, id, "branch") if id == curId => (name, newId, "branch")
-      case other => other
-    })
-    writeMetadataVersion(spark, tableDir,
-      snapshotsFromBase(base, tableDir) :+
-        Snap(newId, newList.getAbsolutePath, Some(summary)),
-      if (currentAfter < 0) newId else currentAfter, refsAfter, base,
-      nextRowIdAfter = nextRowIdAfter,
-      snapshotFirstRowId = snapshotFirstRowId,
-      v3Construct = v3Construct)
-    newId
-  }
-
-  /** Allocation floor for a past-the-ceiling commit: above every history
-    * id and every manifest-list row sequence number — without walking a
-    * single entry. */
-  private def reuseNewId(spark: SparkSession, tableDir: String,
-      all: Seq[Snap], curId: Long): Long = {
-    val oldList = IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(curId))
-      .getOrElse(sys.error(
-        s"reuseNewId($tableDir): snapshot $curId has no manifest list"))
-    (all.map(_.id) :+
-      IcebergLayoutWriter.maxManifestListSeq(new java.io.File(oldList)))
-      .max + 1
   }
 
   /** Zero-copy table CLONE (Iceberg's `snapshot` procedure): the target
@@ -1674,9 +1542,11 @@ object LayoutMaintenance {
       !Option(metaDir(dstDir).listFiles()).exists(_.exists(
         _.getName.endsWith(".metadata.json"))),
       s"snapshotTable: target $dstDir already has table metadata")
-    val cur = currentSnapshot(spark, srcDir).getOrElse(sys.error(
-      s"snapshotTable($srcDir): source has no snapshots"))
-    val (defId, allSpecs) = IcebergManifestSource.partitionSpecs(spark, srcDir)
+    // the SOURCE, read from one pinned document like a commit base
+    val src = new CommitBase(spark, srcDir)
+    require(src.snaps.nonEmpty, s"snapshotTable($srcDir): source has no snapshots")
+    val cur = src.curId
+    val (defId, allSpecs) = IcebergManifestSource.partitionSpecsOf(src.root)
     val maxSpecId = allSpecs.map(_._1).maxOption.getOrElse(-1)
     require(maxSpecId < 0 ||
       (allSpecs.map(_._1).sorted == (0 to maxSpecId) && defId == maxSpecId),
@@ -1687,7 +1557,7 @@ object LayoutMaintenance {
       if (maxSpecId < 0) Nil
       else (0 to maxSpecId).map(id =>
         allSpecs.find(_._1 == id).map(_._2).getOrElse(Nil))
-    carriedEntriesOpt(spark, srcDir, cur, driverEntryCap(spark)) match {
+    src.carry match {
       case Some(raw) =>
         // manifests store paths the SOURCE resolves; make them absolute
         // so the clone (a different root) still points at the same bytes
@@ -1700,7 +1570,7 @@ object LayoutMaintenance {
         }
         // one manifest per partition SHAPE (manifestRecords derives its
         // Avro schema from the first entry, so shapes must not mix in a
-        // manifest); per-entry spec ids carried by carriedEntries split
+        // manifest); per-entry spec ids carried by the walk split
         // further inside writeTableSnapshots' (content, specId, group)
         // manifests
         val shapes = entries.map(_.partition.map(_._1))
@@ -1721,17 +1591,14 @@ object LayoutMaintenance {
         // location drives resolution), so the bytes are shared exactly
         // like the driver-walk clone; expiry on the clone never deletes
         // files it does not own (ownedByTable guards both expire paths).
-        val list = IcebergManifestSource
-          .resolveManifestList(spark, srcDir, Some(cur))
-          .getOrElse(sys.error(
-            s"snapshotTable($srcDir): snapshot $cur has no manifest list"))
         IcebergLayoutWriter.writeTableFromList(new java.io.File(dstDir),
-          cur, new java.io.File(list),
+          cur, new java.io.File(src.listPath.get),
           partitionSpecs = specsForClone,
           sortOrder = IcebergManifestSource.sortOrder(spark, srcDir),
           // the clone references the source's manifests verbatim — its
           // feature level (row lineage, DVs) carries over with them
-          formatVersion = tableFormatVersion(spark, srcDir))
+          formatVersion = Option(src.root.get("format-version"))
+            .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2))
         val files = IcebergManifestSource
           .statsFromTableDir(spark, dstDir, "t", Nil).count().toInt
         (cur, files)
@@ -1749,66 +1616,17 @@ object LayoutMaintenance {
     * Returns (newSnapshotId, nUpserts, nDeletes = keys − upserts). */
   def commitMerge(spark: SparkSession, tableDir: String,
       changes: org.apache.spark.sql.DataFrame, keyCols: Seq[String],
-      opCol: String): (Long, Long, Long) =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
+      opCol: String): (Long, Long, Long) = {
     require(keyCols.nonEmpty, "commitMerge needs at least one key column")
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // append-with-tombstones shape: nothing removed, so past the driver
-    // ceiling the carry is MANIFEST REUSE — at 100 TB a CDC merge's
-    // commit cost stays O(change set + manifest list)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
+    produce(spark, tableDir, retry = true) { b =>
+      val up = dataEntry(b, changes.filter(col(opCol) =!= "D").drop(opCol)
+        .sort(keyCols.map(col): _*), "merge")
+      val ed = eqDeleteEntry(b, changes, keyCols,
+        b.firstDataFile.orElse(Some(up.filePath)))
+      (Some(ChangeSet(Seq(up, ed), operation = "overwrite")),
+        (b.newId, up.recordCount, ed.recordCount - up.recordCount))
     }
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
-    // data honors write.format.default; tombstones honor
-    // write.delete.format.default
-    val fmt = tableWriteFormat(spark, tableDir)
-    val delFmt = tableDeleteFormat(spark, tableDir)
-    val up = freshFile(dataDir,
-      s"merge-$newId.${graft.sources.v2.GraftFormatWriters.extensionOf(fmt)}")
-    val ed = freshFile(dataDir,
-      s"eqdel-$newId.${graft.sources.v2.GraftFormatWriters.extensionOf(delFmt)}")
-    val n = IcebergLayoutWriter.writeSingleData(
-      changes.filter(col(opCol) =!= "D").drop(opCol)
-        .sort(keyCols.map(col): _*), up, fmt)
-    val nk = IcebergLayoutWriter.writeSingleData(
-      changes.select(keyCols.map(col): _*).distinct()
-        .sort(keyCols.map(col): _*), ed, delFmt)
-    val added = withHarvestedBounds(Seq(
-      IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-        filePath = up.getAbsolutePath, recordCount = n,
-        sizeBytes = up.length(), sequenceNumber = newId,
-        fileFormat = fmt.toUpperCase)),
-      fmt, declaredStatFieldsFor(spark, tableDir)) ++ Seq(
-      IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 2,
-        filePath = ed.getAbsolutePath, recordCount = nk,
-        sizeBytes = ed.length(), sequenceNumber = newId,
-        fileFormat = delFmt.toUpperCase,
-        equalityIds =
-          keyFieldIds(carriedOpt.getOrElse(Nil), Some(up), keyCols)))
-    carriedOpt match {
-      case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          movedRefs, base, operation = "overwrite")
-      case None =>
-        commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-          all, curId, base, newId, operation = "overwrite",
-          totalDeltaDataFiles = 1L, totalDeltaRecords = n,
-          totalDeltaDeleteFiles = 1L)
-    }
-    (newId, n, nk - n)
-  } }
+  }
 
   /** DELETE commit: an equality-delete file on `keyCols` with NO
     * replacement rows — together with [[commitUpsert]] this closes CRUD
@@ -1816,70 +1634,14 @@ object LayoutMaintenance {
     * above every live file). Returns (newSnapshotId, nDeleteKeys). */
   def commitDelete(spark: SparkSession, tableDir: String,
       deleteKeys: org.apache.spark.sql.DataFrame,
-      keyCols: Seq[String]): (Long, Long) =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
+      keyCols: Seq[String]): (Long, Long) = {
     require(keyCols.nonEmpty, "commitDelete needs at least one key column")
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
+    produce(spark, tableDir, retry = true) { b =>
+      val ed = eqDeleteEntry(b, deleteKeys, keyCols, b.firstDataFile)
+      (Some(ChangeSet(Seq(ed), operation = "delete")), (b.newId, ed.recordCount))
     }
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
-    val delFmt = tableDeleteFormat(spark, tableDir)
-    val ed = freshFile(dataDir,
-      s"eqdel-$newId.${graft.sources.v2.GraftFormatWriters.extensionOf(delFmt)}")
-    val nk = IcebergLayoutWriter.writeSingleData(
-      deleteKeys.select(keyCols.map(col): _*).distinct()
-        .sort(keyCols.map(col): _*), ed, delFmt)
-    // equality-id resolution needs ONE live data file; past the ceiling
-    // that's a head-of-first-manifest stream, never an entry walk
-    val idProbe = carriedOpt.getOrElse(
-      firstDataFilePath(spark, tableDir, curId).toSeq.map(p =>
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-          filePath = p, recordCount = 0L, sizeBytes = 0L)))
-    val added = Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
-      content = 2, filePath = ed.getAbsolutePath, recordCount = nk,
-      sizeBytes = ed.length(), sequenceNumber = newId,
-      fileFormat = delFmt.toUpperCase,
-      equalityIds = keyFieldIds(idProbe, None, keyCols)))
-    carriedOpt match {
-      case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          movedRefs, base, operation = "delete")
-      case None =>
-        commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-          all, curId, base, newId, operation = "delete",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles = 1L)
-    }
-    (newId, nk)
-  } }
+  }
 
-  /** Predicate DELETE via POSITION tombstones — the other half of the
-    * row-level delete write path ([[commitDelete]] writes equality
-    * tombstones): read the current state WITH row lineage
-    * ([[MorRead.readTableLineage]]), evaluate the predicate, and commit
-    * the matching (file_path, pos) pairs as a position-delete file
-    * (sorted by file then position, the spec's required order). Position
-    * visibility is `data_seq <= delete_seq`, and this commit adds no
-    * data, so the tombstones hit exactly the matched rows. At 100 TB
-    * the predicate scan is an ordinary distributed read; only the
-    * matched positions move. Same eqKeys hazard as [[rewriteDataFiles]]:
-    * if the current snapshot carries equality-delete files and eqKeys is
-    * empty, the predicate is evaluated over un-tombstoned state — rows
-    * already equality-deleted can be re-matched (wasted tombstones) and
-    * the deleted-row count over-reports. Pass the equality keys whenever
-    * content==2 files are live. Returns (newSnapshotId, rowsDeleted). */
   /** Position-style deletes require a row ordinal. ORC files whose rows
     * match the predicate read with real ordinals via
     * [[MorRead.orcFilesMatching]] + [[OrcPosRead]], so this guard is
@@ -1898,6 +1660,27 @@ object LayoutMaintenance {
         "use equality deletes or rewrite the files to parquet")
   }
 
+  /** The (file_path, pos) pairs `predicate` matches in the current
+    * state, read WITH row lineage ([[MorRead.readTableLineage]]) —
+    * reject-sized by contract, collected once so the ordinal-less
+    * backstop fires BEFORE any tombstone byte is written. ORC files
+    * with matches are prefiltered so exactly they read with real row
+    * ordinals ([[OrcPosRead]]). */
+  private def matchedPositions(spark: SparkSession, tableDir: String,
+      predicate: org.apache.spark.sql.Column, eqKeys: Seq[String],
+      renames: Map[String, Seq[String]],
+      dataSchema: Option[org.apache.spark.sql.types.StructType],
+      op: String): Seq[(String, Long)] = {
+    val hitRows = MorRead
+      .readTableLineage(spark, tableDir, eqKeys, renames, dataSchema,
+        orcPosPaths = MorRead.orcFilesMatching(spark, tableDir, predicate))
+      .filter(predicate)
+      .select(col("file_path"), col("pos"))
+      .collect()
+    requireOrdinals(hitRows, op, tableDir)
+    hitRows.map(r => (r.getString(0), r.getLong(1))).toSeq
+  }
+
   /** One MERGE-ON-READ delta commit: task-written data files (content=0)
     * and position-delete files (content=1) land together in ONE snapshot
     * at a fresh sequence number, previous entries carried verbatim —
@@ -1905,171 +1688,102 @@ object LayoutMaintenance {
     * UPDATE/MERGE/DELETE under write.<command>.mode = merge-on-read).
     * Position visibility (data_seq <= delete_seq) lets the tombstones
     * hit the pre-existing files they address; the new data files share
-    * the sequence but no tombstone references their paths. Append-shaped
-    * (nothing removed), so a lost CAS race retries. Returns the new
-    * snapshot id. */
+    * the sequence but no tombstone references their paths. Task DVs fold
+    * with live ones through [[dvChange]]. Append-shaped (nothing removed
+    * but superseded vectors), so a lost CAS race retries. Returns the
+    * new snapshot id. */
   def commitDeltaFiles(spark: SparkSession, tableDir: String,
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       referencedDataFiles: Seq[String] = Nil): Long =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    // Iceberg's validateDataFilesExist: the (file, pos) tombstones were
-    // computed by a scan of an EARLIER snapshot; if a concurrent
-    // rewrite/compaction/COW commit removed any referenced data file,
-    // landing them would silently drop the DELETE half of the
-    // UPDATE/MERGE (dangling tombstones) while the inserts still land —
-    // duplicated rows. Not retryable: a newer base can only confirm the
-    // files are gone; the STATEMENT must re-run its scan. Past the
-    // ceiling the liveness check runs DISTRIBUTED (one small job over
-    // manifests, the referenced list is commit-sized).
-    if (referencedDataFiles.nonEmpty) {
-      val wanted = referencedDataFiles.map(norm).distinct
-      val gone: Seq[String] = carriedOpt match {
-        case Some(carried) =>
-          val live = carried.filter(_.content == 0)
-            .map(e => norm(e.filePath)).toSet
-          wanted.filterNot(live)
-        case None =>
-          val liveHits = IcebergManifestSource
-            .statsFromTableDir(spark, tableDir, "t", Nil)
-            .filter(col("content") === 0)
-            .select(regexp_replace(col("file_path"), "^file:/+", "/")
-              .as("fp"))
-            .filter(col("fp").isin(wanted: _*))
-            .distinct().collect().map(_.getString(0)).toSet
-          wanted.filterNot(liveHits)
+    produce(spark, tableDir, retry = true) { b =>
+      // Iceberg's validateDataFilesExist: the (file, pos) tombstones were
+      // computed by a scan of an EARLIER snapshot; if a concurrent
+      // rewrite/compaction/COW commit removed any referenced data file,
+      // landing them would silently drop the DELETE half of the
+      // UPDATE/MERGE (dangling tombstones) while the inserts still land —
+      // duplicated rows. Not retryable: a newer base can only confirm the
+      // files are gone; the STATEMENT must re-run its scan.
+      if (referencedDataFiles.nonEmpty) {
+        val wanted = referencedDataFiles.map(IcebergManifestSource.localPath)
+        val gone = wanted.distinct.filterNot(b.liveDataAmong(wanted))
+        if (gone.nonEmpty) throw new CommitConflictException(
+          s"commitDeltaFiles($tableDir): data files referenced by this " +
+            s"delta's position deletes are no longer live in snapshot " +
+            s"${b.curId} (a concurrent commit replaced them): " +
+            s"${gone.take(3).mkString(", ")} — re-run the statement",
+          retryable = false)
       }
-      if (gone.nonEmpty) throw new CommitConflictException(
-        s"commitDeltaFiles($tableDir): data files referenced by this " +
-          s"delta's position deletes are no longer live in snapshot " +
-          s"$curId (a concurrent commit replaced them): " +
-          s"${gone.take(3).mkString(", ")} — re-run the statement",
-        retryable = false)
+      val (dv, rest) =
+        added.partition(e => e.content == 1 && e.fileFormat == "PUFFIN")
+      (Some(dvChange(b, rest, dv, "overwrite")), b.newId)
     }
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
+
+  /** The change of a commit adding deletion vectors `dv` (task-written
+    * or staged, not yet committed) next to `others`. v3 invariant: AT
+    * MOST ONE deletion vector per data file — a conforming external
+    * reader loads ONE vector per file, so a second would silently drop
+    * deletes. New vectors and any live carried vector sharing a target
+    * fold into ONE fresh puffin holding one blob per target (a
+    * superseded puffin's non-overlapping blobs are carried into it, so
+    * no delete is lost); superseded entries leave the snapshot (their
+    * files stay — history references them). Re-stamping carried
+    * positions at the new (higher) sequence targets the same rows —
+    * paths are never reused in this layout, the same argument as
+    * [[rewritePositionDeletes]]. The DVs are read driver-side
+    * (commit-sized by the MOR contract), from the delete side only, so
+    * the fold costs the same on both producer arms. */
+  private def dvChange(b: CommitBase,
+      others: Seq[IcebergLayoutWriter.ManifestEntrySpec],
+      dv: Seq[IcebergLayoutWriter.ManifestEntrySpec],
+      operation: String): ChangeSet =
+    if (dv.isEmpty) ChangeSet(others, operation = operation)
+    else {
+      val addedBlobs = dv.flatMap(e =>
+        DeletionVectors.read(new java.io.File(e.filePath)))
+      val newTargets =
+        addedBlobs.map(t => IcebergManifestSource.localPath(t._1)).toSet
+      val superseded = b.deleteSide
+        .filter(e => e.content == 1 && e.fileFormat == "PUFFIN")
+        .map(e => e -> DeletionVectors.read(new java.io.File(e.filePath)))
+        .filter(_._2.exists(t =>
+          newTargets(IcebergManifestSource.localPath(t._1))))
+      val perTarget = (addedBlobs ++ superseded.flatMap(_._2))
+        .groupBy(t => IcebergManifestSource.localPath(t._1))
+        .toSeq.sortBy(_._1)
+        .map { case (_, bs) => (bs.head._1, bs.flatMap(_._2).distinct) }
+      val f = freshFile(new java.io.File(b.tableDir, "data"),
+        s"dv-${b.newId}.puffin")
+      DeletionVectors.write(f, b.newId, perTarget)
+      val merged = IcebergLayoutWriter.ManifestEntrySpec(status = 1,
+        content = 1, filePath = f.getAbsolutePath,
+        recordCount = perTarget.map(_._2.size.toLong).sum,
+        sizeBytes = f.length(), fileFormat = "PUFFIN")
+      val gone = superseded.map(_._1.filePath).toSet
+      // the input puffins are the RETRY's input too: a commit re-run
+      // after a lost CAS race re-reads them, so they are removed only
+      // once the commit has landed
+      ChangeSet(others :+ merged, KeepDeletes(e => !gone(e.filePath)),
+        operation, afterCommit = () => dv.foreach(e =>
+          org.apache.commons.io.FileUtils.deleteQuietly(
+            new java.io.File(e.filePath))))
     }
-    val stamped = added.map(_.copy(sequenceNumber = newId))
-    val stampedDv =
-      stamped.filter(e => e.content == 1 && e.fileFormat == "PUFFIN")
-    val stampedKept =
-      stamped.filterNot(e => e.content == 1 && e.fileFormat == "PUFFIN")
-    carriedOpt match {
-      case Some(carried) =>
-        // v3 invariant: AT MOST ONE deletion vector per data file. Task
-        // DVs and previously-committed DVs sharing a target fold into
-        // one fresh puffin; superseded carried entries leave the
-        // snapshot (their files stay — history references them).
-        val (carriedKept, mergedDv) =
-          mergeDeletionVectors(tableDir, carried, stampedDv, newId)
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir,
-          carriedKept ++ stampedKept ++ mergedDv, newId, newId,
-          movedRefs, base, operation = "overwrite")
-        deleteSupersededTaskFiles(stampedDv, mergedDv)
-      case None =>
-        // past the ceiling: DATA manifests ride verbatim; when this
-        // delta carries DVs, the DELETE side (commit-count shaped, the
-        // small side) re-files through the same DV-supersede fold, so
-        // tombstone semantics are identical to the driver walk at
-        // O(delete-side) cost — a DV-less delta reuses EVERY manifest
-        val (delKept, mergedDv, dropped, delDelta) =
-          if (stampedDv.isEmpty)
-            (Nil, Nil, Set.empty[String], 0L)
-          else {
-            val delCarried = deleteCarriedEntries(spark, tableDir, curId)
-            val (kept, merged) =
-              mergeDeletionVectors(tableDir, delCarried, stampedDv, newId)
-            (kept, merged, deleteManifestPaths(spark, tableDir, curId),
-              (kept.size + merged.size - delCarried.size).toLong)
-          }
-        commitCarryReuse(spark, tableDir, stampedKept ++ mergedDv,
-          refiledCarry = delKept,
-          dropManifests = dropped,
-          all, curId, base, newId, operation = "overwrite",
-          totalDeltaDataFiles = stampedKept.count(_.content == 0),
-          totalDeltaRecords =
-            stampedKept.filter(_.content == 0).map(_.recordCount).sum,
-          totalDeltaDeleteFiles =
-            stampedKept.count(_.content != 0) + delDelta)
-        deleteSupersededTaskFiles(stampedDv, mergedDv)
-    }
-    newId
-  } }
 
-  /** Fold task-written / freshly-computed DV entries (`addedDv`, all
-    * content=1 fileFormat=PUFFIN, files not yet committed) together with
-    * any live carried DVs sharing a target file into ONE puffin holding
-    * one blob per target — the v3 spec's at-most-one-DV-per-data-file
-    * invariant, which a conforming external reader depends on (it loads
-    * ONE vector per file; a second would silently drop deletes). Carried
-    * puffins that share no target are kept verbatim; a superseded
-    * puffin's non-overlapping blobs are carried into the merged file so
-    * no delete is lost. Re-stamping carried positions at the new (higher)
-    * sequence targets the same rows — paths are never reused in this
-    * layout, the same argument as [[rewritePositionDeletes]]. Returns
-    * (carried entries kept, merged DV entries to add). */
-  private def mergeDeletionVectors(tableDir: String,
-      carried: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      addedDv: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      newId: Long)
-      : (Seq[IcebergLayoutWriter.ManifestEntrySpec],
-         Seq[IcebergLayoutWriter.ManifestEntrySpec]) = {
-    if (addedDv.isEmpty) return (carried, Nil)
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    // commit-sized by the MOR contract: DV payloads are matched-row
-    // ordinals, read driver-side exactly like the manifest walk
-    val addedBlobs = addedDv.flatMap(e =>
-      DeletionVectors.read(new java.io.File(e.filePath)))
-    val newTargets = addedBlobs.map(b => norm(b._1)).toSet
-    val carriedDv = carried.filter(e =>
-      e.content == 1 && e.fileFormat == "PUFFIN")
-    val carriedRead = carriedDv.map(e =>
-      e -> DeletionVectors.read(new java.io.File(e.filePath)))
-    val (superseded, untouched) = carriedRead.partition {
-      case (_, blobs) => blobs.exists(b => newTargets(norm(b._1))) }
-    val allBlobs = addedBlobs ++ superseded.flatMap(_._2)
-    val perTarget = allBlobs.groupBy(b => norm(b._1))
-      .toSeq.sortBy(_._1)
-      .map { case (_, bs) => (bs.head._1, bs.flatMap(_._2).distinct) }
-    val dataDir = new java.io.File(tableDir, "data")
-    val dv = freshFile(dataDir, s"dv-$newId.puffin")
-    DeletionVectors.write(dv, newId, perTarget)
-    // the task puffins were never committed, but they are the RETRY's
-    // input too: a commit body re-run after a lost CAS race re-reads
-    // them — deletion belongs to the caller AFTER its commit succeeds
-    // ([[deleteSupersededTaskFiles]]), never inside the merge
-    val merged = IcebergLayoutWriter.ManifestEntrySpec(status = 1,
-      content = 1, filePath = dv.getAbsolutePath,
-      recordCount = perTarget.map(_._2.size.toLong).sum,
-      sizeBytes = dv.length(), sequenceNumber = newId,
-      fileFormat = "PUFFIN")
-    (carried.filterNot(superseded.map(_._1).toSet), Seq(merged))
-  }
-
-  /** Remove the task-written DV puffins a successful commit superseded —
-    * called AFTER the metadata CAS landed (a retryable conflict re-runs
-    * the commit body, which must still find its inputs on disk). */
-  private def deleteSupersededTaskFiles(
-      addedDv: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      merged: Seq[IcebergLayoutWriter.ManifestEntrySpec]): Unit = {
-    val kept = merged.map(_.filePath).toSet
-    addedDv.filterNot(e => kept(e.filePath)).foreach(e =>
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(e.filePath)))
-  }
-
+  /** Predicate DELETE via POSITION tombstones — the other half of the
+    * row-level delete write path ([[commitDelete]] writes equality
+    * tombstones): evaluate the predicate over the current state
+    * ([[matchedPositions]]) and commit the matching (file_path, pos)
+    * pairs as a position-delete file (sorted by file then position, the
+    * spec's required order) — or, on a declared-v3 table, as a deletion
+    * vector ([[commitDeleteWhereDv]]). Position visibility is
+    * `data_seq <= delete_seq`, and this commit adds no data, so the
+    * tombstones hit exactly the matched rows. At 100 TB the predicate
+    * scan is an ordinary distributed read; only the matched positions
+    * move. Same eqKeys hazard as [[rewriteDataFiles]]: if the current
+    * snapshot carries equality-delete files and eqKeys is empty, the
+    * predicate is evaluated over un-tombstoned state — rows already
+    * equality-deleted can be re-matched (wasted tombstones) and the
+    * deleted-row count over-reports. Pass the equality keys whenever
+    * content==2 files are live. Returns (newSnapshotId, rowsDeleted). */
   def commitDeleteWhere(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       eqKeys: Seq[String] = Nil,
@@ -2090,152 +1804,63 @@ object LayoutMaintenance {
         p.get("write.delete.format").forall(_.toLowerCase == "dv"))
       return commitDeleteWhereDv(spark, tableDir, predicate, eqKeys,
         renames, dataSchema)
-    commitDeleteWhereFiles(spark, tableDir, predicate, eqKeys, renames,
-      dataSchema)
+    produce(spark, tableDir, retry = true) { b =>
+      val hits = matchedPositions(spark, tableDir, predicate, eqKeys,
+        renames, dataSchema, "commitDeleteWhere").sorted
+      // the tombstone FILE honors write.delete.format.default; pairs are
+      // already driver-local — written directly, no Spark job for a
+      // KB-sized file
+      val pd = freshFile(new java.io.File(tableDir, "data"),
+        s"posdel-${b.newId}." +
+          graft.sources.v2.GraftFormatWriters.extensionOf(b.deleteFormat))
+      val n = b.deleteFormat match {
+        case "orc" => IcebergLayoutWriter.writePosDeleteOrc(pd, hits,
+          spark.sparkContext.hadoopConfiguration)
+        case "avro" => IcebergLayoutWriter.writePosDeleteAvro(pd, hits)
+        case _ => IcebergLayoutWriter.writePosDeleteParquet(pd, hits,
+          spark.sparkContext.hadoopConfiguration)
+      }
+      (Some(ChangeSet(Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
+        content = 1, filePath = pd.getAbsolutePath, recordCount = n,
+        sizeBytes = pd.length(), fileFormat = b.deleteFormat.toUpperCase)),
+        operation = "delete")), (b.newId, n))
+    }
   }
-
-  private def commitDeleteWhereFiles(spark: SparkSession, tableDir: String,
-      predicate: org.apache.spark.sql.Column,
-      eqKeys: Seq[String] = Nil,
-      renames: Map[String, Seq[String]] = Map.empty,
-      dataSchema: Option[org.apache.spark.sql.types.StructType] = None): (Long, Long) =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    import spark.implicits._
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
-    // reject-sized by contract (same as the DV twin): collect once so the
-    // ordinal-less backstop fires BEFORE any tombstone byte is written.
-    // ORC files with predicate matches are prefiltered so exactly they
-    // read with real row ordinals ([[OrcPosRead]]) — position deletes
-    // apply to both data formats.
-    val hitRows = MorRead
-      .readTableLineage(spark, tableDir, eqKeys, renames, dataSchema,
-        orcPosPaths = MorRead.orcFilesMatching(spark, tableDir, predicate))
-      .filter(predicate)
-      .select(col("file_path"), col("pos"))
-      .collect()
-    requireOrdinals(hitRows, "commitDeleteWhere", tableDir)
-    val hits = hitRows.map(r => (r.getString(0), r.getLong(1)))
-      .sortBy(identity).toSeq
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
-    // the tombstone FILE honors write.delete.format.default (Iceberg's
-    // delete-file format knob); pairs are already driver-local — write
-    // directly, no Spark job for a KB-sized file
-    val delFmt = tableDeleteFormat(spark, tableDir)
-    val pd = freshFile(dataDir, s"posdel-$newId." +
-      graft.sources.v2.GraftFormatWriters.extensionOf(delFmt))
-    val n = delFmt match {
-      case "orc" => IcebergLayoutWriter.writePosDeleteOrc(pd, hits,
-        spark.sparkContext.hadoopConfiguration)
-      case "avro" => IcebergLayoutWriter.writePosDeleteAvro(pd, hits)
-      case _ => IcebergLayoutWriter.writePosDeleteParquet(pd, hits,
-        spark.sparkContext.hadoopConfiguration)
-    }
-    val added = Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
-      content = 1, filePath = pd.getAbsolutePath, recordCount = n,
-      sizeBytes = pd.length(), sequenceNumber = newId,
-      fileFormat = delFmt.toUpperCase))
-    carriedOpt match {
-      case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          movedRefs, base, operation = "delete")
-      case None => // tombstone-append shape: every manifest rides verbatim
-        commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-          all, curId, base, newId, operation = "delete",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles = 1L)
-    }
-    (newId, n)
-  } }
 
   /** Predicate DELETE committing a DELETION VECTOR (Iceberg v3 shape)
     * instead of a parquet tombstone file: matched (file, pos) pairs fold
     * into ONE Puffin container with one blob per affected data file
     * ([[DeletionVectors]]), committed as a content=1 entry with
-    * fileFormat=PUFFIN. Matched pairs are reject-sized by assumption
-    * (the same contract as [[commitDeleteWhere]]'s single tombstone
-    * file); the grouping is a driver fold over them. Readers apply DVs
-    * exactly like position tombstones — same (file, pos, seq)
-    * visibility — so the two delete commits are interchangeable.
-    * Returns (newSnapshotId, deletedRowCount). */
+    * fileFormat=PUFFIN through the [[dvChange]] fold (successive DELETEs
+    * supersede, not accumulate). Matched pairs are reject-sized by
+    * assumption (the same contract as [[commitDeleteWhere]]'s single
+    * tombstone file). Readers apply DVs exactly like position
+    * tombstones — same (file, pos, seq) visibility — so the two delete
+    * commits are interchangeable. Returns (newSnapshotId,
+    * deletedRowCount). */
   def commitDeleteWhereDv(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       eqKeys: Seq[String] = Nil,
       renames: Map[String, Seq[String]] = Map.empty,
       dataSchema: Option[org.apache.spark.sql.types.StructType] = None): (Long, Long) =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
+    produce(spark, tableDir, retry = true) { b =>
+      val hits = matchedPositions(spark, tableDir, predicate, eqKeys,
+        renames, dataSchema, "commitDeleteWhereDv")
+      if (hits.isEmpty) (None, (b.curId, 0L))
+      else {
+        // staging name: the fold owns the final dv-<id>.puffin name
+        val stage = freshFile(new java.io.File(tableDir, "data"),
+          s"dv-stage-${b.newId}.puffin")
+        DeletionVectors.write(stage, b.newId,
+          hits.groupBy(_._1).toSeq.map { case (f, ps) => (f, ps.map(_._2)) })
+        val staged = IcebergLayoutWriter.ManifestEntrySpec(status = 1,
+          content = 1, filePath = stage.getAbsolutePath,
+          recordCount = hits.size, sizeBytes = stage.length(),
+          fileFormat = "PUFFIN")
+        (Some(dvChange(b, Nil, Seq(staged), "delete")),
+          (b.newId, hits.size.toLong))
+      }
     }
-    val hitRows = MorRead
-      .readTableLineage(spark, tableDir, eqKeys, renames, dataSchema,
-        orcPosPaths = MorRead.orcFilesMatching(spark, tableDir, predicate))
-      .filter(predicate)
-      .select(col("file_path"), col("pos"))
-      .collect() // reject-sized, same contract as commitDeleteWhere
-    requireOrdinals(hitRows, "commitDeleteWhereDv", tableDir)
-    val hits = hitRows.map(r => (r.getString(0), r.getLong(1)))
-    if (hits.isEmpty) return (curId, 0L)
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
-    // staging name: mergeDeletionVectors folds this commit's vector
-    // together with any live DV sharing a target (v3's one-DV-per-file
-    // invariant — successive DELETEs must supersede, not accumulate)
-    // and owns the final dv-<id>.puffin name
-    val dvStage = freshFile(dataDir, s"dv-stage-$newId.puffin")
-    DeletionVectors.write(dvStage, newId,
-      hits.groupBy(_._1).toSeq.map { case (f, ps) => (f, ps.map(_._2).toSeq) })
-    val staged = IcebergLayoutWriter.ManifestEntrySpec(status = 1,
-      content = 1, filePath = dvStage.getAbsolutePath,
-      recordCount = hits.length, sizeBytes = dvStage.length(),
-      sequenceNumber = newId, fileFormat = "PUFFIN")
-    carriedOpt match {
-      case Some(carried) =>
-        val (carriedKept, added) =
-          mergeDeletionVectors(tableDir, carried, Seq(staged), newId)
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, carriedKept ++ added, newId, newId,
-          movedRefs, base, operation = "delete")
-        deleteSupersededTaskFiles(Seq(staged), added)
-      case None =>
-        // DATA manifests ride verbatim; the delete side re-files through
-        // the DV-supersede fold (small side, same as commitDeltaFiles)
-        val delCarried = deleteCarriedEntries(spark, tableDir, curId)
-        val (delKept, merged) =
-          mergeDeletionVectors(tableDir, delCarried, Seq(staged), newId)
-        commitCarryReuse(spark, tableDir, merged, refiledCarry = delKept,
-          dropManifests = deleteManifestPaths(spark, tableDir, curId),
-          all, curId, base, newId, operation = "delete",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles =
-            (merged.size + delKept.size - delCarried.size).toLong)
-        deleteSupersededTaskFiles(Seq(staged), merged)
-    }
-    (newId, hits.length.toLong)
-  } }
 
   /** Predicate DELETE, COPY-ON-WRITE mode (Iceberg's
     * `write.delete.mode=copy-on-write`; the SQL `DELETE FROM` behind
@@ -2249,128 +1874,69 @@ object LayoutMaintenance {
     * files by path, so partial carry would need reading every delete
     * file to prove safety). At 100 TB the common path costs O(affected
     * files) — the same bill Iceberg's own COW delete pays — and a
-    * predicate that matches nothing commits nothing. Returns
-    * (snapshotId after, rowsDeleted). */
-  // NOTE: the consolidated replacement file records no column bounds or
-  // partition values (survivors of MANY files fold into one); on tables
-  // that lean on file skipping, a rewrite_data_files with a sort order
-  // restores it. The row-level SQL path (GraftCowBatchWrite) does NOT
-  // share this limit — it rewrites per group with bounds + partitions.
+    * predicate that matches nothing commits nothing. Replace-shaped:
+    * which files get rewritten is decided against THIS base, so a
+    * version conflict fails loudly (no retry), Iceberg's own
+    * COW-conflict behavior. Returns (snapshotId after, rowsDeleted).
+    *
+    * The consolidated replacement file records no partition values
+    * (survivors of MANY files fold into one); on tables that lean on
+    * file skipping, a rewrite_data_files with a sort order restores it.
+    * The row-level SQL path (GraftCowBatchWrite) does NOT share this
+    * limit — it rewrites per group with bounds + partitions. */
   def commitDeleteWhereCow(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       eqKeys: Seq[String] = Nil,
       renames: Map[String, Seq[String]] = Map.empty,
       dataSchema: Option[org.apache.spark.sql.types.StructType] = None): (Long, Long) =
-      commitLock(tableDir).synchronized {
-    // replace-shaped: which files get rewritten is decided against THIS
-    // base — a version conflict fails loudly (no retry), Iceberg's own
-    // COW-conflict behavior
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val hasTombstones = carriedOpt match {
-      case Some(c) => c.exists(_.content != 0)
-      case None => deleteManifestPaths(spark, tableDir, curId).nonEmpty
+    produce(spark, tableDir, retry = false) { b =>
+      // a lineage-assigned parquet table MATERIALIZES row lineage into
+      // the survivors file (spec v3: a COW delete must keep the
+      // surviving rows' ids and last-updated sequences — only the dying
+      // rows disappear)
+      val lineageOn = b.writeFormat == "parquet" && b.nextRowId > 0
+      val lineage0 = MorRead.readTableLineage(spark, tableDir, eqKeys,
+        renames, dataSchema, withLineage = lineageOn)
+      val lineage =
+        if (lineageOn) MorRead.resolveRowLineage(spark, tableDir, lineage0)
+        else lineage0
+      // tombstoned tables rewrite the WHOLE state — modeled as affected =
+      // None so no all-files set ever materializes. ONE action serves
+      // the affected-file set AND the deleted count; an empty table or
+      // no-match predicate short-circuits through the empty map / zero
+      // count below.
+      val affectedCounts: Option[Map[String, Long]] =
+        if (b.hasDeletes) None
+        else Some(lineage.filter(predicate).groupBy(col("file_path"))
+          .count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      val inScopeRaw = affectedCounts.fold(lineage)(a =>
+        lineage.filter(col("file_path")
+          .isin(a.keys.map(IcebergManifestSource.localPath).toSeq: _*)))
+      // checkpoint only when a count action AND the write both read it
+      // (the tombstoned whole-state arm); the affected-files arm has one
+      // consumer — the survivor write — so materializing first is waste
+      val inScope =
+        if (affectedCounts.isDefined) inScopeRaw
+        else inScopeRaw.localCheckpoint()
+      val deleted = affectedCounts.map(_.valuesIterator.sum)
+        .getOrElse(inScope.filter(predicate).count())
+      if (deleted == 0L) (None, (b.curId, 0L)) // nothing matched
+      else {
+        // DELETE removes rows where the predicate is TRUE; null keeps
+        val rw = dataEntry(b, inScope.filter(not(coalesce(predicate, lit(false))))
+          .drop("file_path", "pos", "data_seq"), "cowdel")
+        val added =
+          if (rw.recordCount > 0L) Seq(rw)
+          else { // every in-scope row died: no empty file in the commit
+            org.apache.commons.io.FileUtils.deleteQuietly(
+              new java.io.File(rw.filePath)); Nil
+          }
+        (Some(ChangeSet(added, affectedCounts.fold[Removal](RemoveAll)(a =>
+          RemovePaths(a.keys.toSeq)), operation = "delete")),
+          (b.newId, deleted))
+      }
     }
-    // the survivors file honors write.format.default; a lineage-assigned
-    // parquet table also MATERIALIZES row lineage into it (spec v3: a
-    // COW delete must keep the surviving rows' ids and last-updated
-    // sequences — only the dying rows disappear)
-    val cowFmt = tableWriteFormat(spark, tableDir)
-    val lineageOn = cowFmt == "parquet" && nextRowId(spark, tableDir) > 0
-    val lineage0 = MorRead.readTableLineage(spark, tableDir, eqKeys,
-      renames, dataSchema, withLineage = lineageOn)
-    val lineage =
-      if (lineageOn) MorRead.resolveRowLineage(spark, tableDir, lineage0)
-      else lineage0
-    // DELETE removes rows where the predicate is TRUE; null keeps
-    val keep = not(coalesce(predicate, lit(false)))
-    // tombstoned tables rewrite the WHOLE state (tombstone contents
-    // reference files by path, partial carry cannot prove safety) —
-    // modeled as affected = None so no all-files set ever materializes.
-    // ONE action serves the affected-file set AND the deleted count
-    // (r16: the set, the count, and a separate isEmpty probe were three
-    // scans; an empty table or no-match predicate still short-circuits
-    // through the empty map / zero count below).
-    val affectedCounts: Option[Map[String, Long]] =
-      if (hasTombstones) None
-      else Some(lineage.filter(predicate).groupBy(col("file_path"))
-        .count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    if (affectedCounts.exists(_.isEmpty)) return (curId, 0L) // nothing matched
-    val normAffected = affectedCounts.map(_.keySet.map(
-      _.replaceFirst("^file:/+", "/")))
-    val inScopeRaw = normAffected
-      .fold(lineage)(a => lineage.filter(col("file_path")
-        .isin(a.toSeq: _*)))
-    // checkpoint only when a count action AND the write both read it
-    // (the tombstoned whole-state arm); the affected-files arm has one
-    // consumer — the survivor write — so materializing first is waste
-    val inScope =
-      if (affectedCounts.isDefined) inScopeRaw
-      else inScopeRaw.localCheckpoint()
-    val deleted = affectedCounts.map(_.valuesIterator.sum)
-      .getOrElse(inScope.filter(predicate).count())
-    if (deleted == 0L) return (curId, 0L)
-    val survivors = inScope.filter(keep).drop("file_path", "pos", "data_seq")
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
-    // the survivors file honors write.format.default — a COW delete on
-    // an ORC/AVRO-default table must not flip it to parquet
-    val fmt = cowFmt
-    val rw = freshFile(dataDir,
-      s"cowdel-$newId.${graft.sources.v2.GraftFormatWriters.extensionOf(fmt)}")
-    val n = IcebergLayoutWriter.writeSingleData(survivors, rw, fmt)
-    val added =
-      if (n == 0L) { // every in-scope row died: no empty file in the commit
-        org.apache.commons.io.FileUtils.deleteQuietly(rw); Nil
-      } else withHarvestedBounds(
-        Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
-          content = 0, filePath = rw.getAbsolutePath, recordCount = n,
-          sizeBytes = rw.length(), sequenceNumber = newId,
-          fileFormat = fmt.toUpperCase)),
-        fmt, declaredStatFieldsFor(spark, tableDir))
-    (carriedOpt, affectedCounts.map(_.keySet)) match {
-      case (Some(carried), aff) =>
-        val kept = aff match {
-          case None => Nil // whole-state rewrite
-          case Some(affected) =>
-            val norm = normAffected.get
-            carried.filter(e =>
-              e.content == 0 && !affected(e.filePath) &&
-                !norm(e.filePath.replaceFirst("^file:/+", "/")))
-        }
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, kept ++ added, newId, newId,
-          movedRefs, base, operation = "delete")
-      case (None, None) =>
-        // past the ceiling, whole-state rewrite: nothing carried
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, added, newId, newId,
-          movedRefs, base, operation = "delete")
-      case (None, Some(affected)) =>
-        // past the ceiling, targeted COW: distributed manifest carry —
-        // untouched manifests ride verbatim, touched ones rewrite in
-        // tasks (same machinery as the group-replace commit)
-        replaceReuse(spark, tableDir, Some(affected.toSeq: Seq[String]),
-          added, dropDeletes = false, all, curId, base,
-          operation = "delete")
-    }
-    (newId, deleted)
-  }
 
   /** Group-replace commit — the copy-on-write primitive behind SQL
     * row-level operations (`UPDATE`/`MERGE INTO` through the connector's
@@ -2380,20 +1946,19 @@ object LayoutMaintenance {
     * The group contract makes this correct at any filter granularity:
     * every surviving row of a removed file is in the added set, so
     * read-before minus matched-rows-delta equals read-after. Tombstones
-    * are refused (a carried delete file could reference a replaced data
-    * file, and the group write has already applied row-level truth), the
-    * same fail-fast as streaming's initial load; SQL-born tables never
-    * carry them. Commit cost is O(change set) metadata + the rewritten
-    * groups' data — with runtime group filtering the groups are only the
-    * matched files, the same bill Iceberg's own COW pays at 100 TB. */
+    * are refused unless `dropDeletes` (a carried delete file could
+    * reference a replaced data file, and the group write has already
+    * applied row-level truth), the same fail-fast as streaming's initial
+    * load; SQL-born tables never carry them. Every removed path must
+    * still be live, or the statement fails as a concurrent-commit
+    * conflict. Commit cost is O(change set) metadata + the rewritten
+    * groups' data — past the entry cap, untouched manifests ride
+    * verbatim and touched ones rewrite in tasks. */
   def commitReplaceFiles(spark: SparkSession, tableDir: String,
       removedPaths: Seq[String],
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       dropDeletes: Boolean = false): Long =
-      commitLock(tableDir).synchronized {
-    replaceFilesLocked(spark, tableDir, Some(removedPaths), added,
-      dropDeletes)
-  }
+    replaceFiles(spark, tableDir, RemovePaths(removedPaths, dropDeletes), added)
 
   /** Replace EVERY current data file with `added` — RTAS's commit shape.
     * The replace set is derived from the SAME pinned base the commit's
@@ -2404,9 +1969,7 @@ object LayoutMaintenance {
     * Tombstones drop with the files they reference (full overwrite). */
   def commitReplaceAll(spark: SparkSession, tableDir: String,
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec]): Long =
-      commitLock(tableDir).synchronized {
-    replaceFilesLocked(spark, tableDir, None, added, dropDeletes = true)
-  }
+    replaceFiles(spark, tableDir, RemoveAll, added)
 
   /** Canonical string form of an entry's partition values — the match
     * key partition-scoped replaces compare on (same canon the dynamic
@@ -2424,239 +1987,28 @@ object LayoutMaintenance {
   def commitReplacePartitions(spark: SparkSession, tableDir: String,
       touched: Set[Map[String, String]],
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec]): Long =
-      commitLock(tableDir).synchronized {
-    replaceFilesLocked(spark, tableDir, None, added, dropDeletes = false,
-      partitionFilter = Some(touched))
-  }
+    replaceFiles(spark, tableDir, RemovePartitions(touched), added)
 
-  private def replaceFilesLocked(spark: SparkSession, tableDir: String,
-      removedPathsOpt: Option[Seq[String]],
-      added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      dropDeletes: Boolean,
-      partitionFilter: Option[Set[Map[String, String]]] = None): Long = {
-    val base = metaBase(spark, tableDir) // replace-shaped: conflict = loud
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // past the driver ceiling the carry is DISTRIBUTED: untouched
-    // manifests ride verbatim, touched ones are rewritten in tasks
-    val carried = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark)) match {
-      case Some(c) => c
-      case None =>
-        return replaceReuse(spark, tableDir, removedPathsOpt, added,
-          dropDeletes, all, curId, base,
-          partitionFilter = partitionFilter)
+  /** The group-replace commits: replace-shaped, so a lost race fails
+    * loudly. Only a FULL overwrite (every data file replaced, so
+    * tombstones reference nothing live and drop with them) may run on a
+    * tombstoned table. */
+  private def replaceFiles(spark: SparkSession, tableDir: String,
+      removal: Removal,
+      added: Seq[IcebergLayoutWriter.ManifestEntrySpec]): Long =
+    produce(spark, tableDir, retry = false) { b =>
+      removal match {
+        case RemoveAll | RemovePaths(_, true) => ()
+        case _ => requireNoTombstones(b)
+      }
+      (Some(ChangeSet(added, removal, operation = "replace")), b.newId)
     }
-    // the removed set, from THIS pinned base: an explicit path list, a
-    // partition predicate, or None = replace ALL current data files —
-    // never a caller-side read that predates the lock
-    val removedPaths = partitionFilter match {
-      case Some(t) =>
-        // a data file WITHOUT recorded partition values can never match
-        // the predicate, yet may hold touched partitions' rows — silently
-        // retaining them would corrupt the overwrite, silently dropping
-        // the file would lose its OTHER partitions' rows. Refuse loudly.
-        val blind = carried.filter(e =>
-          e.content == 0 && e.partition.isEmpty)
-        require(blind.isEmpty,
-          s"commitReplacePartitions($tableDir): data files without " +
-            s"recorded partition values (${blind.take(3).map(_.filePath)
-              .mkString(", ")}) cannot be partition-matched; rewrite " +
-            "them with a partition-preserving compaction first")
-        carried.filter(e =>
-          e.content == 0 && t(canonPartition(e.partition))).map(_.filePath)
-      case None => removedPathsOpt.getOrElse(
-        carried.filter(_.content == 0).map(_.filePath))
-    }
-    // dropDeletes is the FULL-overwrite mode (every data file replaced,
-    // so tombstones reference nothing live and drop with them); partial
-    // group replacement must refuse tombstoned tables instead
-    require(dropDeletes || !carried.exists(_.content != 0),
-      s"commitReplaceFiles($tableDir): current snapshot carries delete " +
+
+  private def requireNoTombstones(b: CommitBase): Unit =
+    require(!b.hasDeletes,
+      s"commitReplaceFiles(${b.tableDir}): current snapshot carries delete " +
         "files; a group-replace commit cannot preserve their visibility. " +
         "Run rewrite_data_files first.")
-    val removed = removedPaths.toSet
-    val removedNorm = removed.map(_.replaceFirst("^file:/+", "/"))
-    // OCC validation (Iceberg's commit-conflict semantics): every file
-    // this operation scanned must still be live at commit time. A
-    // concurrent commit that already replaced one of them would make
-    // this group swap resurrect/duplicate rows — fail the statement
-    // instead; the caller re-runs against the new snapshot.
-    val carriedNorm = carried
-      .map(_.filePath.replaceFirst("^file:/+", "/")).toSet
-    val gone = removedNorm.filterNot(carriedNorm)
-    require(gone.isEmpty,
-      s"commitReplaceFiles($tableDir): concurrent commit conflict — " +
-        s"scanned files no longer in snapshot $curId: ${gone.take(3).mkString(", ")}")
-    val kept = carried.filter(e => (!dropDeletes || e.content == 0) &&
-      !removed(e.filePath) &&
-      !removedNorm(e.filePath.replaceFirst("^file:/+", "/")))
-    val newId = (all.map(_.id) ++
-      carried.map(_.sequenceNumber.longValue)).max + 1
-    val stamped = added.map(_.copy(sequenceNumber = newId))
-    val movedRefs = refs(spark, tableDir).map {
-      case (name, id, "branch") if id == curId => (name, newId, "branch")
-      case other => other
-    }
-    appendSnapshot(spark, tableDir, kept ++ stamped, newId, newId,
-      movedRefs, base, operation = "replace")
-    newId
-  }
-
-  /** Replace-shaped commit PAST the driver-entry ceiling — the
-    * distributed manifest carry real Iceberg gets from its
-    * manifest-rewrite machinery: one task per DATA manifest classifies
-    * it against the (broadcast, change-set-sized) removed set; untouched
-    * manifests are referenced VERBATIM in the new list, touched ones are
-    * rewritten in the task minus their removed entries (original
-    * sequence numbers, bounds, spec ids preserved via the shared
-    * [[specFromStats]] mapping). The driver handles manifest-count rows
-    * and the KB-sized list — never a per-file entry. OCC contract
-    * unchanged: every removed path must be found live in this base or
-    * the statement fails. At 100 TB this is what makes COW UPDATE/MERGE
-    * and RTAS commit cost O(touched manifests), not O(files). */
-  private def replaceReuse(spark: SparkSession, tableDir: String,
-      removedPathsOpt: Option[Seq[String]],
-      added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      dropDeletes: Boolean,
-      all: Seq[Snap], curId: Long, base: MetaBase,
-      operation: String = "replace",
-      partitionFilter: Option[Set[Map[String, String]]] = None): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val list = IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(curId))
-      .getOrElse(sys.error(
-        s"replaceReuse($tableDir): snapshot $curId has no manifest list"))
-    val newId = reuseNewId(spark, tableDir, all, curId)
-    val rows = IcebergManifestSource.manifestPathSeqContents(conf, list)
-    val hasDeleteManifests = rows.exists(_._3 == 1)
-    require(dropDeletes || !hasDeleteManifests,
-      s"commitReplaceFiles($tableDir): current snapshot carries delete " +
-        "files; a group-replace commit cannot preserve their visibility. " +
-        "Run rewrite_data_files first.")
-    val stamped = added.map(_.copy(sequenceNumber = newId))
-    (removedPathsOpt, partitionFilter) match {
-      case (None, None) =>
-        // replace-ALL (RTAS / full rewrite): nothing is carried at all —
-        // the new snapshot is exactly the added set, a fresh list
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, stamped, newId, newId,
-          movedRefs, base, operation = operation)
-      case (removedOpt, partOpt) =>
-        def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-        val removedNorm = removedOpt.getOrElse(Nil).map(norm).toSet
-        val listDir = new java.io.File(list).getParentFile
-        val specOf = IcebergManifestSource.manifestSpecIds(conf, list)
-          .map { case (p, sid) =>
-            IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
-        val dataRows = rows.filter(_._3 == 0)
-          .map { case (p, inherit, _) => (p, inherit, specOf.getOrElse(p, 0)) }
-        val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
-        val metaDirPath = metaDir(tableDir).getAbsolutePath
-        val removedB = spark.sparkContext.broadcast(removedNorm)
-        val partB = spark.sparkContext.broadcast(partOpt)
-        val par = math.max(1, math.min(dataRows.size,
-          spark.sparkContext.defaultParallelism))
-        // (srcPath, reusedVerbatim, rewrittenPathOrNull, specId,
-        //  foundRemovedPaths, removedRecords)
-        val results = spark.sparkContext
-          .parallelize(dataRows.zipWithIndex, par)
-          .map { case ((p, inherit, specId), idx) =>
-            val entries = IcebergManifestSource
-              .readManifestStats(p, sconf.value, inherit)
-              .map(s => specFromStats(s, specId)).toSeq
-            val rm = removedB.value
-            val pf = partB.value
-            // partition mode: a pval-less data file is un-matchable —
-            // surface it so the driver refuses (same contract as the
-            // under-ceiling arm)
-            if (pf.isDefined && entries.exists(_.partition.isEmpty))
-              sys.error(
-                s"commitReplacePartitions: manifest $p holds data files " +
-                  "without recorded partition values; rewrite them with " +
-                  "a partition-preserving compaction first")
-            val (hit, survivors) = entries.partition(e =>
-              pf match {
-                case Some(t) => t(canonPartition(e.partition))
-                case None => rm(e.filePath.replaceFirst("^file:/+", "/"))
-              })
-            if (hit.isEmpty) (p, true, null: String, specId,
-              Seq.empty[String], 0L)
-            else {
-              val out =
-                if (survivors.isEmpty) null
-                else {
-                  val f = new java.io.File(metaDirPath,
-                    s"manifest-$newId-rw-$idx.avro")
-                  IcebergLayoutWriter.writeManifest(f, survivors)
-                  f.getAbsolutePath
-                }
-              (p, false, out, specId,
-                hit.map(e => e.filePath.replaceFirst("^file:/+", "/")),
-                hit.map(_.recordCount).sum)
-            }
-          }.collect().toSeq
-        removedB.destroy(); partB.destroy()
-        // OCC validation, same contract as the driver-walk arm (a
-        // PARTITION-predicate replace has no expected path set — its
-        // removal derives from this base by construction, and the CAS
-        // catches racers)
-        if (partOpt.isEmpty) {
-          val found = results.flatMap(_._5).toSet
-          val gone = removedNorm.filterNot(found)
-          require(gone.isEmpty,
-            s"commitReplaceFiles($tableDir): concurrent commit conflict — " +
-              s"scanned files no longer in snapshot $curId: " +
-              s"${gone.take(3).mkString(", ")}")
-        }
-        val dropPaths = results.filterNot(_._2).map(_._1).toSet ++
-          (if (dropDeletes) rows.filter(_._3 == 1).map(_._1).toSet
-           else Set.empty[String])
-        // delete entries retired wholesale (small side — only read when
-        // the summary needs their count)
-        val droppedDeleteEntries =
-          if (dropDeletes && hasDeleteManifests)
-            deleteCarriedEntries(spark, tableDir, curId).size.toLong
-          else 0L
-        val rewrittenRows = results
-          .collect { case (_, false, np, sid, _, _) if np != null =>
-            (new java.io.File(np), 0, sid) }
-        val m = metaDir(tableDir)
-        val addGroups = stamped
-          .groupBy(e =>
-            (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
-          .toSeq.sortBy { case ((c, sid, names), _) =>
-            (c, sid, names.mkString(",")) }
-        val defaultSpecId = IcebergManifestSource.partitionSpecs(
-          spark, tableDir)._1
-        val addManifests = addGroups.zipWithIndex.map {
-          case (((c, sid, _), es), i) =>
-            val effSid = if (sid < 0) defaultSpecId else sid
-            val f = freshFile(m, s"manifest-$newId-$c-s$effSid-g$i.avro")
-            IcebergLayoutWriter.writeManifest(f,
-              es.map(e => e.copy(specId = effSid)))
-            (f, c, effSid)
-        }
-        val dataAdded = stamped.filter(_.content == 0)
-        finishReuseCommit(spark, tableDir, dropPaths,
-          rewrittenRows ++ addManifests,
-          all, curId, base, newId, operation = operation,
-          addedDataFiles = dataAdded.size,
-          addedRecords = dataAdded.map(_.recordCount).sum,
-          addedDeleteFiles = stamped.count(_.content != 0),
-          totalDeltaDataFiles =
-            dataAdded.size - results.flatMap(_._5).size,
-          totalDeltaRecords =
-            dataAdded.map(_.recordCount).sum - results.map(_._6).sum,
-          totalDeltaDeleteFiles =
-            stamped.count(_.content != 0) - droppedDeleteEntries,
-          v3Construct = stamped.exists(_.fileFormat == "PUFFIN"))
-    }
-  }
 
   /** EXECUTED rewrite_data_files — the data-moving compaction that
     * [[commitCompaction]]'s metadata-only commit deliberately is not:
@@ -2676,23 +2028,10 @@ object LayoutMaintenance {
       renames: Map[String, Seq[String]] = Map.empty,
       dataSchema: Option[org.apache.spark.sql.types.StructType] = None,
       targetFileSizeBytes: Option[Long] = None)
-      : (Long, Long, Int, Int) = commitLock(tableDir).synchronized {
-    val base = metaBase(spark, tableDir) // replace-shaped: conflict = loud
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // the commit replaces EVERYTHING, so per-file carry is never needed;
-    // past the driver ceiling the three remaining uses substitute:
-    // eq-tombstone detection walks the DELETE side only (the small
-    // side), the before-count is a distributed manifest scan, and the
-    // id floor comes from the manifest list
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val hasEqDeletes = carriedOpt match {
-      case Some(c) => c.exists(_.content == 2)
-      case None =>
-        deleteCarriedEntries(spark, tableDir, curId).exists(_.content == 2)
-    }
+      : (Long, Long, Int, Int) =
+      produce(spark, tableDir, retry = false) { b => // conflict = loud
+    // the commit replaces EVERYTHING, so per-file carry is never needed
+    val hasEqDeletes = b.deleteSide.exists(_.content == 2)
     // Equality tombstones need the equality keys: the caller's, or —
     // since eq-delete commits record spec `equality_ids` in their
     // manifest entries — resolved from METADATA (the real-Iceberg
@@ -2709,21 +2048,14 @@ object LayoutMaintenance {
         "delete files with no equality_ids in their metadata and no " +
         "eqKeys given; the rewrite would drop the tombstones without " +
         "applying them. Pass the equality keys.")
-    val filesBefore = carriedOpt match {
-      case Some(c) => c.count(_.content == 0)
-      case None => IcebergManifestSource
-        .statsFromTableDir(spark, tableDir, "t", Nil)
-        .filter(col("content") === 0).count().toInt
-    }
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val filesBefore = b.carry.fold(
+      b.liveStats.filter(col("content") === 0).count().toInt)(
+      _.count(_.content == 0))
+    val newId = b.newId
     // rewritten data lands in the table's declared write.format.default
     // (both arms) — a full rewrite is the LAST place a format flip may
     // hide, since it touches every byte of the table
-    val fmt = tableWriteFormat(spark, tableDir)
+    val fmt = b.writeFormat
     // v3 row lineage: a rewrite of a lineage-assigned PARQUET table
     // MATERIALIZES _row_id / _last_updated_sequence_number into the
     // compacted files (spec "Row Lineage": rewrites must preserve row
@@ -2731,7 +2063,7 @@ object LayoutMaintenance {
     // last-updated sequence even though the file's own sequence moves).
     // ORC/AVRO-default tables skip materialization (ids reassign — the
     // spec's permitted fallback for engines without the encoding).
-    val lineageOn = fmt == "parquet" && nextRowId(spark, tableDir) > 0
+    val lineageOn = fmt == "parquet" && b.nextRowId > 0
     val state =
       if (lineageOn) MorRead.readTableRowLineage(spark, tableDir, effKeys,
         renames, dataSchema)
@@ -2761,13 +2093,10 @@ object LayoutMaintenance {
         // This is the 100 TB arm: one file per ~target, never one
         // driver-fed file for the whole table.
         require(target > 0, "rewriteDataFiles: target size must be > 0")
-        val totalBytes = carriedOpt match {
-          case Some(c) => c.filter(_.content == 0).map(_.sizeBytes).sum
-          case None => IcebergManifestSource
-            .statsFromTableDir(spark, tableDir, "t", Nil)
-            .filter(col("content") === 0)
-            .agg(sum(col("sizeBytes"))).head.getLong(0)
-        }
+        val totalBytes = b.carry.fold(b.liveStats
+          .filter(col("content") === 0)
+          .agg(sum(col("sizeBytes"))).head.getLong(0))(
+          _.filter(_.content == 0).map(_.sizeBytes).sum)
         val nFiles = math.max(1L,
           (totalBytes + target - 1) / target).toInt
         val shaped =
@@ -2837,31 +2166,9 @@ object LayoutMaintenance {
     // be harvested from natively-written files (no typed subcolumns),
     // so those re-establish on subsequent connector writes; until then
     // the rewritten files are conservatively never skipped.
-    val bounded = withHarvestedBounds(added, fmt,
-      declaredStatFieldsFor(spark, tableDir))
-    val movedRefs = refs(spark, tableDir).map {
-      case (name, id, "branch") if id == curId => (name, newId, "branch")
-      case other => other
-    }
-    appendSnapshot(spark, tableDir, bounded, newId, newId, movedRefs, base,
-      operation = "replace")
-    (newId, n, filesBefore, added.size)
-  }
-
-  /** The table's declared `pushdown.fields` stat fields as
-    * (fieldId, name, type-letter) — descriptor wins over metadata
-    * properties, same resolution as [[tableWriteFormat]]. */
-  private def declaredStatFieldsFor(spark: SparkSession,
-      tableDir: String): Seq[(Int, String, String)] = {
-    val decl = descriptorProps(tableDir).get("pushdown.fields")
-      .orElse(metadataProps(spark, tableDir).get("pushdown.fields"))
-    decl.toSeq.flatMap(_.split(',')).filter(_.nonEmpty).flatMap { s =>
-      s.split(':') match {
-        case Array(n, id, t) if Set("long", "double", "string")(t) =>
-          id.toIntOption.map(i => (i, n, t))
-        case _ => None
-      }
-    }
+    (Some(ChangeSet(withHarvestedBounds(added, fmt, b.statFields),
+      RemoveAll, operation = "replace")),
+      (newId, n, filesBefore, added.size))
   }
 
   /** Per-file lower/upper bounds for the declared stat fields,
@@ -3059,14 +2366,10 @@ object LayoutMaintenance {
       maxGroupBytes: Long = graft.model.EngineConfig.default.maxGroupBytes,
       smallFileBytes: Long =
         graft.model.EngineConfig.default.maxGroupBytes / 2)
-      : (Long, Int, Int) = commitLock(tableDir).synchronized {
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
+      : (Long, Int, Int) = produce(spark, tableDir, retry = false) { b =>
     // candidate listing is DISTRIBUTED; only small files' (path, size,
     // format, partition) land on the driver — the operation's own size
-    val smallRows = IcebergManifestSource
-      .statsFromTableDir(spark, tableDir, "t", Nil)
+    val smallRows = b.liveStats
       .filter(col("content") === 0 && col("sizeBytes") < smallFileBytes)
       .select("file_path", "sizeBytes", "file_format", "partitionKey",
         "sequence_number", "first_row_id")
@@ -3075,12 +2378,11 @@ object LayoutMaintenance {
       r.getString(2), r.getString(3))).toSeq
     // v3 row lineage across the pack (parquet groups only): per-file
     // sequence numbers and first_row_ids, driver-known, group-sized
-    def normPath(p: String): String = p.replaceFirst("^file:/+", "/")
-    val seqOf: Map[String, Long] = smallRows
-      .map(r => normPath(r.getString(0)) -> r.getLong(4)).toMap
+    val seqOf: Map[String, Long] = smallRows.map(r =>
+      IcebergManifestSource.localPath(r.getString(0)) -> r.getLong(4)).toMap
     val friOf: Map[String, Long] = smallRows
-      .flatMap(r => Option(r.getAs[java.lang.Long](5))
-        .map(v => normPath(r.getString(0)) -> v.longValue)).toMap
+      .flatMap(r => Option(r.getAs[java.lang.Long](5)).map(v =>
+        IcebergManifestSource.localPath(r.getString(0)) -> v.longValue)).toMap
     // groups never mix physical formats (one read per group) and never
     // span PARTITIONS — a consolidated file keeps its group's partition
     // values, so partition pruning, SPJ, and partition-predicate
@@ -3093,70 +2395,73 @@ object LayoutMaintenance {
         packGroups(files.sortBy(_._2).map(f => (f._1, f._2)), maxGroupBytes)
           .filter(_.length >= 2).map(g => (fmt, pk, g))
       }
-    if (groups.isEmpty) return (curId, 0, 0)
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
-    val outFmt = tableWriteFormat(spark, tableDir)
-    val outExt = graft.sources.v2.GraftFormatWriters.extensionOf(outFmt)
-    // a lineage-assigned parquet→parquet pack MATERIALIZES row lineage
-    // into the group file (spec v3: compaction preserves row ids) —
-    // same rule as rewrite_data_files; other format pairs reassign
-    val packLineage = outFmt == "parquet" && nextRowId(spark, tableDir) > 0
-    val added = groups.zipWithIndex.map { case ((fmt, pk, g), i) =>
-      val paths = g.map(_._1)
-      val df = fmt match {
-        case "ORC" => spark.read.orc(paths: _*)
-        case "AVRO" =>
-          AvroDataRead.readWithPos(spark, paths).drop("file_path", "pos")
-        case _ if !packLineage => spark.read.parquet(paths: _*)
-        case _ =>
-          // a group file that already materializes lineage (a prior
-          // COW/rewrite output) binds its columns via mergeSchema;
-          // groups of plain files — the common case — skip the
-          // schema-merge pass entirely (driver footer sniff: these are
-          // SMALL files by definition)
-          val conf = spark.sparkContext.hadoopConfiguration
-          val anyMaterialized = paths.exists { p =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(p), conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getFooter.getFileMetaData.getSchema
-              .containsField("_row_id")
-            finally r.close()
-          }
-          val base =
-            if (anyMaterialized) spark.read.option("mergeSchema", "true")
-              .parquet(paths: _*)
-            else spark.read.parquet(paths: _*)
-          val own = regexp_replace(col("_metadata.file_path"),
-            "^file:/+", "/")
-          val matRid =
-            if (base.columns.contains("_row_id")) col("_row_id")
-            else lit(null).cast("long")
-          val matSeq =
-            if (base.columns.contains("_last_updated_sequence_number"))
-              col("_last_updated_sequence_number")
-            else lit(null).cast("long")
-          val fri =
-            if (friOf.isEmpty) lit(null).cast("long")
-            else element_at(typedLit(friOf), own)
-          base
-            .withColumn("_row_id",
-              coalesce(matRid, fri + col("_metadata.row_index")))
-            .withColumn("_last_updated_sequence_number",
-              coalesce(matSeq, element_at(typedLit(seqOf), own)))
+    if (groups.isEmpty) (None, (b.curId, 0, 0))
+    else {
+      // a carried tombstone could reference a rewritten file
+      requireNoTombstones(b)
+      val dataDir = new java.io.File(tableDir, "data")
+      val outFmt = b.writeFormat
+      val outExt = graft.sources.v2.GraftFormatWriters.extensionOf(outFmt)
+      // a lineage-assigned parquet→parquet pack MATERIALIZES row lineage
+      // into the group file (spec v3: compaction preserves row ids) —
+      // same rule as rewrite_data_files; other format pairs reassign
+      val packLineage = outFmt == "parquet" && b.nextRowId > 0
+      val added = groups.zipWithIndex.map { case ((fmt, pk, g), i) =>
+        val paths = g.map(_._1)
+        val df = fmt match {
+          case "ORC" => spark.read.orc(paths: _*)
+          case "AVRO" =>
+            AvroDataRead.readWithPos(spark, paths).drop("file_path", "pos")
+          case _ if !packLineage => spark.read.parquet(paths: _*)
+          case _ =>
+            // a group file that already materializes lineage (a prior
+            // COW/rewrite output) binds its columns via mergeSchema;
+            // groups of plain files — the common case — skip the
+            // schema-merge pass entirely (driver footer sniff: these are
+            // SMALL files by definition)
+            val conf = spark.sparkContext.hadoopConfiguration
+            val anyMaterialized = paths.exists { p =>
+              val in = org.apache.parquet.hadoop.util.HadoopInputFile
+                .fromPath(new org.apache.hadoop.fs.Path(p), conf)
+              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+              try r.getFooter.getFileMetaData.getSchema
+                .containsField("_row_id")
+              finally r.close()
+            }
+            val base =
+              if (anyMaterialized) spark.read.option("mergeSchema", "true")
+                .parquet(paths: _*)
+              else spark.read.parquet(paths: _*)
+            val own = IcebergManifestSource.localPath(
+              col("_metadata.file_path"))
+            val matRid =
+              if (base.columns.contains("_row_id")) col("_row_id")
+              else lit(null).cast("long")
+            val matSeq =
+              if (base.columns.contains("_last_updated_sequence_number"))
+                col("_last_updated_sequence_number")
+              else lit(null).cast("long")
+            val fri =
+              if (friOf.isEmpty) lit(null).cast("long")
+              else element_at(typedLit(friOf), own)
+            base
+              .withColumn("_row_id",
+                coalesce(matRid, fri + col("_metadata.row_index")))
+              .withColumn("_last_updated_sequence_number",
+                coalesce(matSeq, element_at(typedLit(seqOf), own)))
+        }
+        val f = freshFile(dataDir, s"binpack-${b.curId}-g$i.$outExt")
+        val n = IcebergLayoutWriter.writeSingleData(df, f, outFmt)
+        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
+          filePath = f.getAbsolutePath, recordCount = n,
+          sizeBytes = f.length(), partition = partitionPairsOf(pk),
+          fileFormat = outFmt.toUpperCase)
       }
-      val f = freshFile(dataDir, s"binpack-$curId-g$i.$outExt")
-      val n = IcebergLayoutWriter.writeSingleData(df, f, outFmt)
-      IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-        filePath = f.getAbsolutePath, recordCount = n,
-        sizeBytes = f.length(), partition = partitionPairsOf(pk),
-        fileFormat = outFmt.toUpperCase)
+      val removed = groups.flatMap(_._3.map(_._1))
+      (Some(ChangeSet(withHarvestedBounds(added, outFmt, b.statFields),
+        RemovePaths(removed), operation = "replace")),
+        (b.newId, removed.size, groups.size))
     }
-    val removed = groups.flatMap(_._3.map(_._1))
-    val bounded = withHarvestedBounds(added, outFmt,
-      declaredStatFieldsFor(spark, tableDir))
-    val snap = commitReplaceFiles(spark, tableDir, removed, bounded)
-    (snap, removed.size, groups.size)
   }
 
   /** `rewrite_position_deletes` — Iceberg's delete-file compaction: the
@@ -3173,28 +2478,33 @@ object LayoutMaintenance {
     * files instead of O(delete commits). Returns (newSnapshotId,
     * posFilesBefore, posFilesAfter, pairsKept). */
   def rewritePositionDeletes(spark: SparkSession, tableDir: String)
-      : (Long, Int, Int, Long) = commitLock(tableDir).synchronized {
-    import spark.implicits._
-    val base = metaBase(spark, tableDir) // replace-shaped: conflict = loud
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // past the driver ceiling: the DELETE side (the thing being
-    // rewritten — commit-count shaped) walks driver-side as always, the
-    // data side stays distributed (liveness below) and its manifests
-    // ride verbatim into the commit
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val delSide = carriedOpt.map(_.filter(_.content != 0))
-      .getOrElse(deleteCarriedEntries(spark, tableDir, curId))
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    val posFiles = delSide.filter(_.content == 1)
-    if (posFiles.isEmpty) return (curId, 0, 0, 0L)
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
+      : (Long, Int, Int, Long) =
+    produce(spark, tableDir, retry = false) { b => // conflict = loud
+      val posFiles = b.deleteSide.filter(_.content == 1)
+      foldPositionDeletes(spark, b, posFiles) match {
+        case None => (None, (b.curId, 0, 0, 0L))
+        case Some(newEntry) =>
+          val nPairs = newEntry.headOption.map(_.recordCount).getOrElse(0L)
+          // eq-tombstones carried, position files consolidated to one
+          (Some(ChangeSet(newEntry, KeepDeletes(_.content == 2),
+            operation = "replace")),
+            (b.newId, posFiles.size, if (nPairs == 0) 0 else 1, nPairs))
+      }
     }
+
+  /** [[rewritePositionDeletes]]' fold: the ONE consolidated tombstone
+    * entry (none when every pair dangles), or None when there is nothing
+    * to rewrite. The DELETE side (the thing being rewritten — commit-count
+    * shaped) is read driver-side; the data side's liveness comes from the
+    * carry under the cap, a distributed manifest scan past it. */
+  private def foldPositionDeletes(spark: SparkSession, b: CommitBase,
+      posFiles: Seq[IcebergLayoutWriter.ManifestEntrySpec])
+      : Option[Seq[IcebergLayoutWriter.ManifestEntrySpec]] = {
+    import spark.implicits._
+    if (posFiles.isEmpty) return None
+    val carriedOpt = b.carry
+    val newId = b.newId
+    def norm(p: String): String = IcebergManifestSource.localPath(p)
     // tombstone rows with their owning file's sequence number attached;
     // deletion-vector entries (fileFormat=PUFFIN) decode driver-side and
     // fold into the SAME consolidated parquet output — a rewrite is how
@@ -3217,10 +2527,10 @@ object LayoutMaintenance {
         val seqDf = fs.map(e => (norm(e.filePath),
           e.sequenceNumber.longValue)).toDF("__fp", "seq")
         Some(read(fs.map(_.filePath).toIndexedSeq)
-          .withColumn("__own", regexp_replace(
-            col("_metadata.file_path"), "^file:/+", "/"))
+          .withColumn("__own", IcebergManifestSource.localPath(
+            col("_metadata.file_path")))
           .join(broadcast(seqDf), col("__own") === col("__fp"))
-          .select(regexp_replace(col("file_path"), "^file:/+", "/")
+          .select(IcebergManifestSource.localPath(col("file_path"))
             .as("file_path"), col("pos"), col("seq")))
       }
     }
@@ -3238,11 +2548,11 @@ object LayoutMaintenance {
     // scan arm — their rows were never driver-materialized.
     val hasFileScanTombs = fileTombEntries.exists(e =>
       e.fileFormat == "PARQUET" || e.fileFormat == "ORC")
+    if (!hasFileScanTombs && dvTombRows.isEmpty && avroTombRows.isEmpty)
+      return None // no tombstone rows at all
     val keptDriver: Option[Seq[(String, Long)]] =
       if (hasFileScanTombs || carriedOpt.isEmpty) None
       else {
-        if (dvTombRows.isEmpty && avroTombRows.isEmpty)
-          return (curId, 0, 0, 0L) // no tombstone rows at all
         val liveSeqMap = carriedOpt.get.filter(_.content == 0)
           .map(e => norm(e.filePath) -> e.sequenceNumber.longValue).toMap
         Some((dvTombRows ++ avroTombRows)
@@ -3269,10 +2579,9 @@ object LayoutMaintenance {
             case Some(carried) => broadcast(carried.filter(_.content == 0)
               .map(e => (norm(e.filePath), e.sequenceNumber.longValue))
               .toDF("file_path", "data_seq"))
-            case None => IcebergManifestSource
-              .statsFromTableDir(spark, tableDir, "t", Nil)
+            case None => b.liveStats
               .filter(col("content") === 0)
-              .select(regexp_replace(col("file_path"), "^file:/+", "/")
+              .select(IcebergManifestSource.localPath(col("file_path"))
                 .as("file_path"), col("sequence_number").as("data_seq"))
           }
           tomb.join(liveSeq, Seq("file_path"))
@@ -3281,7 +2590,6 @@ object LayoutMaintenance {
             .sort(col("file_path"), col("pos"))
         }
     }
-    if (keptDriver.isEmpty && keptDf.isEmpty) return (curId, 0, 0, 0L)
     // sorted distinct (file_path, pos) pairs, streamed: driver fold →
     // plain iterator; DataFrame fold → toLocalIterator over the sorted
     // frame (driver memory bounded by one group either way)
@@ -3296,13 +2604,13 @@ object LayoutMaintenance {
           }
         }
     }
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
+    val dataDir = new java.io.File(b.tableDir, "data")
     // the consolidated output honors the table's DECLARED version: a
     // format-version-3 table folds into ONE puffin of deletion vectors
     // (the v3 spec prohibits new position-delete FILES); v2/unset
     // tables keep the parquet tombstone shape
     val newEntry =
-      if (declaredFormatVersion(spark, tableDir).contains(3)) {
+      if (b.declaredFv.contains(3)) {
         val it = pairIter()
         if (!it.hasNext) Nil
         else {
@@ -3350,28 +2658,7 @@ object LayoutMaintenance {
             content = 1, filePath = pd.getAbsolutePath, recordCount = n,
             sizeBytes = pd.length(), sequenceNumber = newId))
       }
-    val nPairs = newEntry.headOption.map(_.recordCount).getOrElse(0L)
-    carriedOpt match {
-      case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir,
-          carried.filterNot(_.content == 1) ++ newEntry, newId, newId,
-          movedRefs, base, operation = "replace")
-      case None =>
-        // data manifests ride verbatim; the delete side re-files:
-        // eq-tombstones carried, position files consolidated to one
-        commitCarryReuse(spark, tableDir, newEntry,
-          refiledCarry = delSide.filter(_.content == 2),
-          dropManifests = deleteManifestPaths(spark, tableDir, curId),
-          all, curId, base, newId, operation = "replace",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles = newEntry.size.toLong +
-            delSide.count(_.content == 2) - delSide.size)
-    }
-    (newId, posFiles.size, if (nPairs == 0) 0 else 1, nPairs)
+    Some(newEntry)
   }
 
   /** `convert_equality_deletes` — eq→pos tombstone maintenance: resolve
@@ -3412,51 +2699,51 @@ object LayoutMaintenance {
   def convertEqualityDeletes(spark: SparkSession, tableDir: String,
       renames: Map[String, Seq[String]] = Map.empty,
       dataSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : (Long, Int, Long) = commitLock(tableDir).synchronized {
+      : (Long, Int, Long) =
+    produce(spark, tableDir, retry = false) { b => // conflict = loud
+      val eqFiles = b.deleteSide.filter(_.content == 2)
+      if (eqFiles.isEmpty) (None, (b.curId, 0, 0L))
+      else {
+        // the eq entries leave; existing pos/DV entries are carried
+        val newEntry = eqToPositions(spark, b, eqFiles, renames, dataSchema)
+        (Some(ChangeSet(newEntry, KeepDeletes(_.content == 1),
+          operation = "replace")),
+          (b.newId, eqFiles.size, newEntry.map(_.recordCount).sum))
+      }
+    }
+
+  /** [[convertEqualityDeletes]]' conversion: the ONE position-delete
+    * entry the live `eqFiles` resolve to (none when every eq tombstone
+    * dangles). */
+  private def eqToPositions(spark: SparkSession, b: CommitBase,
+      eqFiles: Seq[IcebergLayoutWriter.ManifestEntrySpec],
+      renames: Map[String, Seq[String]],
+      dataSchema: Option[org.apache.spark.sql.types.StructType])
+      : Seq[IcebergLayoutWriter.ManifestEntrySpec] = {
     import spark.implicits._
-    val base = metaBase(spark, tableDir) // replace-shaped: conflict = loud
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // the delete side is commit-count-sized and walks driver-side either
-    // way; past the ceiling the data side stays distributed and its
-    // manifests ride verbatim into the commit
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val delSide = carriedOpt.map(_.filter(_.content != 0))
-      .getOrElse(deleteCarriedEntries(spark, tableDir, curId))
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    val eqFiles = delSide.filter(_.content == 2)
-    if (eqFiles.isEmpty) return (curId, 0, 0L)
+    val tableDir = b.tableDir
+    def norm(p: String): String = IcebergManifestSource.localPath(p)
     val eqKeys = MorRead.metadataEqKeys(spark, tableDir)
     require(eqKeys.nonEmpty,
       s"convertEqualityDeletes($tableDir): live equality-delete files " +
         "carry no (or disagreeing) equality_ids; converting without the " +
         "keys would drop the tombstones unapplied. Rewrite the table " +
         "instead (rewriteDataFiles with explicit eqKeys).")
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = b.newId
     // every ORC data file needs real ordinals: an eq key may match rows
     // anywhere, and a NULL-pos row cannot become a (file, pos) pair
-    val orcPaths: Set[String] = carriedOpt match {
+    val orcPaths: Set[String] = b.carry match {
       case Some(c) => c.filter(e => e.content == 0 && e.fileFormat == "ORC")
         .map(e => norm(e.filePath)).toSet
-      case None => IcebergManifestSource
-        .statsFromTableDir(spark, tableDir, "t", Nil)
+      case None => b.liveStats
         .filter(col("content") === 0 && col("file_format") === "ORC")
         .select("file_path").collect().map(r => norm(r.getString(0))).toSet
     }
-    val hasData = carriedOpt match {
-      case Some(c) => c.exists(_.content == 0)
-      case None => IcebergManifestSource
-        .statsFromTableDir(spark, tableDir, "t", Nil)
-        .filter(col("content") === 0).limit(1).count() > 0
-    }
-    val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
-    val pd = freshFile(dataDir, s"posdel-conv-$newId.parquet")
+    val hasData = b.carry.fold(b.liveStats
+      .filter(col("content") === 0).limit(1).count() > 0)(
+      _.exists(_.content == 0))
+    val pd = freshFile(new java.io.File(tableDir, "data"),
+      s"posdel-conv-$newId.parquet")
     // a data-less table converts to ZERO pairs (every eq tombstone is
     // dangling) and the commit below still drops the eq entries
     val n = if (!hasData) 0L else {
@@ -3470,7 +2757,7 @@ object LayoutMaintenance {
       def seqJoin(df: org.apache.spark.sql.DataFrame,
           pathCol: org.apache.spark.sql.Column)
           : org.apache.spark.sql.DataFrame =
-        df.withColumn("__own", regexp_replace(pathCol, "^file:/+", "/"))
+        df.withColumn("__own", IcebergManifestSource.localPath(pathCol))
           .join(broadcast(eqSeqDf), col("__own") === col("__fp"))
           .select(
             eqKeys.map(k => col(k).as(s"ed_$k")) :+ col("ed_seq"): _*)
@@ -3503,33 +2790,11 @@ object LayoutMaintenance {
         .sort(col("file_path"), col("pos"))
       IcebergLayoutWriter.writeSingleParquet(pairs, pd)
     }
-    val newEntry =
-      if (n == 0) { // every eq tombstone was dangling: none to convert
-        org.apache.commons.io.FileUtils.deleteQuietly(pd); Nil
-      } else Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
-        content = 1, filePath = pd.getAbsolutePath, recordCount = n,
-        sizeBytes = pd.length(), sequenceNumber = newId))
-    carriedOpt match {
-      case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir,
-          carried.filterNot(_.content == 2) ++ newEntry, newId, newId,
-          movedRefs, base, operation = "replace")
-      case None =>
-        // data manifests ride verbatim; the delete side re-files with
-        // the eq entries gone and existing pos/DV entries carried
-        commitCarryReuse(spark, tableDir, newEntry,
-          refiledCarry = delSide.filter(_.content == 1),
-          dropManifests = deleteManifestPaths(spark, tableDir, curId),
-          all, curId, base, newId, operation = "replace",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles = newEntry.size.toLong +
-            delSide.count(_.content == 1) - delSide.size)
-    }
-    (newId, eqFiles.size, n)
+    if (n == 0) { // every eq tombstone was dangling: none to convert
+      org.apache.commons.io.FileUtils.deleteQuietly(pd); Nil
+    } else Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
+      content = 1, filePath = pd.getAbsolutePath, recordCount = n,
+      sizeBytes = pd.length(), sequenceNumber = newId))
   }
 
   /** Cherry-pick an append snapshot onto the CURRENT head — Iceberg's
@@ -3543,130 +2808,43 @@ object LayoutMaintenance {
     * rewrote), and a path collision with the head refuses — both are
     * Iceberg's own restrictions. Returns the new head snapshot id. */
   def cherryPick(spark: SparkSession, tableDir: String,
-      snapshotId: Long): Long = commitLock(tableDir).synchronized {
-      withCommitRetry(tableDir) {
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.exists(_.id == snapshotId),
-      s"cherryPick($tableDir): snapshot $snapshotId not in history")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val cap = driverEntryCap(spark)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId, cap)
-    // the PICKED additions are one commit's worth of entries — past the
-    // ceiling, walk only the staged snapshot's OWN manifests (its list
-    // rows carry its sequence number on reuse-shaped commits) instead of
-    // every entry it carries
-    val picked = carriedOpt match {
-      case Some(_) => carriedEntries(spark, tableDir, snapshotId)
-        .filter(_.sequenceNumber.longValue == snapshotId)
-      case None =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        val list = IcebergManifestSource
-          .resolveManifestList(spark, tableDir, Some(snapshotId))
-          .getOrElse(sys.error(
-            s"cherryPick($tableDir): snapshot $snapshotId has no list"))
-        val listDir = new java.io.File(list).getParentFile
-        val specOf = IcebergManifestSource.manifestSpecIds(conf, list)
-          .map { case (p, sid) =>
-            IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
-        IcebergManifestSource.manifestPathSeqContents(conf, list)
-          .filter(_._2 == snapshotId) // the commit's OWN manifests
-          .flatMap { case (p, inherit, _) =>
-            IcebergManifestSource.readManifestStats(p, conf, inherit)
-              .filter(_.sequenceNumber == snapshotId)
-              .map(s => specFromStats(s, specOf.getOrElse(p, 0))).toSeq }
+      snapshotId: Long): Long =
+    produce(spark, tableDir, retry = true) { b =>
+      val staged = b.snaps.find(_.id == snapshotId).getOrElse(sys.error(
+        s"cherryPick($tableDir): snapshot $snapshotId not in history"))
+      // the PICKED additions are one commit's worth of entries: walk only
+      // the manifests its list rows stamp with its sequence number (every
+      // row of a driver-walk list, only its own rows of a reuse list)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val picked = walkEntries(conf,
+        listRowsOf(conf, staged.listPath).filter(_._2 == snapshotId),
+        Int.MaxValue).get.filter(_.sequenceNumber.longValue == snapshotId)
+      require(picked.nonEmpty,
+        s"cherryPick($tableDir): snapshot $snapshotId added no files")
+      require(picked.forall(_.content == 0),
+        s"cherryPick($tableDir): snapshot $snapshotId carries delete " +
+          "files; only append snapshots can be cherry-picked")
+      val clash = b.liveDataAmong(picked.map(_.filePath))
+      require(clash.isEmpty,
+        s"cherryPick($tableDir): head already contains ${clash.take(3)}")
+      (Some(ChangeSet(picked)), b.newId)
     }
-    require(picked.nonEmpty,
-      s"cherryPick($tableDir): snapshot $snapshotId added no files")
-    require(picked.forall(_.content == 0),
-      s"cherryPick($tableDir): snapshot $snapshotId carries delete " +
-        "files; only append snapshots can be cherry-picked")
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    val clash = carriedOpt match {
-      case Some(carried) => picked.map(_.filePath).toSet
-        .intersect(carried.map(_.filePath).toSet)
-      case None =>
-        val wanted = picked.map(e => norm(e.filePath))
-        IcebergManifestSource.statsFromTableDir(spark, tableDir, "t", Nil)
-          .select(regexp_replace(col("file_path"), "^file:/+", "/").as("fp"))
-          .filter(col("fp").isin(wanted: _*))
-          .distinct().collect().map(_.getString(0)).toSet
-    }
-    require(clash.isEmpty,
-      s"cherryPick($tableDir): head already contains ${clash.take(3)}")
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
-    val stamped = picked.map(_.copy(sequenceNumber = newId))
-    carriedOpt match {
-      case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
-        appendSnapshot(spark, tableDir, carried ++ stamped, newId, newId,
-          movedRefs, base)
-      case None => // publish is append-shaped: head manifests ride verbatim
-        commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-          all, curId, base, newId, operation = "append",
-          totalDeltaDataFiles = stamped.size,
-          totalDeltaRecords = stamped.map(_.recordCount).sum,
-          totalDeltaDeleteFiles = 0L)
-    }
-    newId
-  } }
 
   /** Stage an append WITHOUT moving the table head — the write half of
     * write-audit-publish (Iceberg's WAP / branch commits): the new
     * snapshot lands in history and `branch` points at it, but
     * `current-snapshot-id` (and `main`) stay put, so readers of the
-    * table see nothing until [[fastForward]] publishes. Returns the
-    * staged snapshot id. */
+    * table see nothing until [[fastForward]] publishes. Staged commits
+    * STACK: when the branch already exists, the append carries from the
+    * BRANCH head (Iceberg's branch-commit semantics — a second staged
+    * write must not silently drop the first), else from the table head
+    * it forks from. Returns the staged snapshot id. */
   def stageAppend(spark: SparkSession, tableDir: String,
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       branch: String): Long =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // staged commits STACK: when the branch already exists, the append
-    // carries from the BRANCH head (Iceberg's branch-commit semantics —
-    // a second staged write must not silently drop the first), else
-    // from the table head it forks from
-    val stageBase = refs(spark, tableDir)
-      .collectFirst { case (`branch`, id, "branch") => id }
-      .getOrElse(curId)
-    // append-shaped: past the driver ceiling the BRANCH HEAD's manifests
-    // ride verbatim — WAP staging on a 100 TB table costs O(added)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, stageBase,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, stageBase)
+    produce(spark, tableDir, retry = true, target = StageBranch(branch)) {
+      b => (Some(ChangeSet(added)), b.newId)
     }
-    val stamped = added.map(e => e.copy(sequenceNumber = newId))
-    val refsAfter = refs(spark, tableDir).filterNot(_._1 == branch) :+
-      ((branch, newId, "branch"))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ stamped, newId, curId,
-          refsAfter.sortBy(_._1), base)
-      case None =>
-        commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-          all, stageBase, base, newId, operation = "append",
-          totalDeltaDataFiles = stamped.count(_.content == 0),
-          totalDeltaRecords =
-            stamped.filter(_.content == 0).map(_.recordCount).sum,
-          totalDeltaDeleteFiles = stamped.count(_.content != 0),
-          currentAfter = curId,
-          refsAfterOpt = Some(refsAfter.sortBy(_._1)))
-    }
-    newId
-  } }
 
   /** WAP staging by AUDIT ID (Iceberg's `spark.wap.id` flavor — the
     * branchless twin of [[stageAppend]]): the snapshot lands in history
@@ -3676,44 +2854,14 @@ object LayoutMaintenance {
   def stageAppendWap(spark: SparkSession, tableDir: String,
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       wapId: String): Long =
-      commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    val base = metaBase(spark, tableDir)
-    val all = snapshots(spark, tableDir)
-    require(all.nonEmpty, s"no snapshots under $tableDir (stage the " +
-      "first commit normally; there is no head to isolate)")
-    val dup = snapshotSummaries(spark, tableDir)
-      .collectFirst { case (id, _, kv) if kv.get("wap.id")
-        .contains(wapId) => id }
-    require(dup.isEmpty,
-      s"stageAppendWap($tableDir): wap.id '$wapId' already staged as " +
-        s"snapshot ${dup.get}; publish or expire it first")
-    val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
+    produce(spark, tableDir, retry = true, target = StageOnly) { b =>
+      val dup = b.snaps.collectFirst {
+        case s if s.summary.exists(_.contains("wap.id" -> wapId)) => s.id }
+      require(dup.isEmpty,
+        s"stageAppendWap($tableDir): wap.id '$wapId' already staged as " +
+          s"snapshot ${dup.get}; publish or expire it first")
+      (Some(ChangeSet(added, extraSummary = Seq("wap.id" -> wapId))), b.newId)
     }
-    val stamped = added.map(e => e.copy(sequenceNumber = newId))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ stamped, newId, curId,
-          refs(spark, tableDir), base,
-          extraSummary = Seq("wap.id" -> wapId))
-      case None => // append-shaped: manifests ride verbatim past the cap
-        commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-          all, curId, base, newId, operation = "append",
-          totalDeltaDataFiles = stamped.count(_.content == 0),
-          totalDeltaRecords =
-            stamped.filter(_.content == 0).map(_.recordCount).sum,
-          totalDeltaDeleteFiles = stamped.count(_.content != 0),
-          currentAfter = curId,
-          refsAfterOpt = Some(refs(spark, tableDir)),
-          extraSummary = Seq("wap.id" -> wapId))
-    }
-    newId
-  } }
 
   /** Iceberg's `publish_changes`: resolve the staged snapshot whose
     * summary carries `wap.id = <id>` and cherry-pick its additions onto
@@ -3733,8 +2881,9 @@ object LayoutMaintenance {
     * replace_tag): point `name` at a snapshot in history — the current
     * head when none is given. Metadata-only; `main` is refused (it is
     * the published head, moved by commits / rollback / fastForward, not
-    * by ref DDL). Returns the snapshot the ref points at. */
-  /** @param maxRefAgeMs spec `max-ref-age-ms` — how long the REF itself
+    * by ref DDL). Returns the snapshot the ref points at.
+    *
+    * @param maxRefAgeMs spec `max-ref-age-ms` — how long the REF itself
     *   lives (branches and tags)
     * @param minSnapshotsToKeep / @param maxSnapshotAgeMs branch-only
     *   snapshot-retention knobs (spec `min-snapshots-to-keep`,
@@ -3752,22 +2901,18 @@ object LayoutMaintenance {
     require(kind == "branch" ||
       (minSnapshotsToKeep.isEmpty && maxSnapshotAgeMs.isEmpty),
       "setRef: snapshot-retention fields apply to BRANCHES only")
-    val base = metaBase(spark, tableDir)
-    val snaps = snapshots(spark, tableDir)
-    require(snaps.nonEmpty, s"setRef($tableDir): table has no snapshots")
-    val cur = currentSnapshotId(spark, tableDir).getOrElse(snaps.last.id)
-    val target = snapshotId.getOrElse(cur)
-    require(snaps.exists(_.id == target),
+    val b = new CommitBase(spark, tableDir)
+    require(b.snaps.nonEmpty, s"setRef($tableDir): table has no snapshots")
+    val target = snapshotId.getOrElse(b.curId)
+    require(b.snaps.exists(_.id == target),
       s"setRef($tableDir): no snapshot $target in history " +
-        s"(have: ${snaps.map(_.id).mkString(", ")})")
-    val rs = refs(spark, tableDir)
+        s"(have: ${b.snaps.map(_.id).mkString(", ")})")
     val retention: Seq[(String, Long)] =
       maxRefAgeMs.map("max-ref-age-ms" -> _).toSeq ++
         minSnapshotsToKeep.map(v => "min-snapshots-to-keep" -> v.toLong) ++
         maxSnapshotAgeMs.map("max-snapshot-age-ms" -> _)
-    writeMetadataVersion(spark, tableDir, snaps, cur,
-      (rs.filterNot(_._1 == name) :+ ((name, target, kind))).sortBy(_._1),
-      base,
+    writeMetadataVersion(b, b.snaps, b.curId,
+      (b.refs.filterNot(_._1 == name) :+ ((name, target, kind))).sortBy(_._1),
       refRetention =
         if (retention.isEmpty) Map.empty else Map(name -> retention))
     target
@@ -3785,8 +2930,12 @@ object LayoutMaintenance {
     * expire applies are Iceberg's (refs live forever, branches keep
     * their head only). */
   def refRetention(spark: SparkSession, tableDir: String)
+      : Map[String, (Option[Long], Option[Int], Option[Long])] =
+    refRetentionOf(readMetadata(spark, tableDir))
+
+  private def refRetentionOf(meta: com.fasterxml.jackson.databind.JsonNode)
       : Map[String, (Option[Long], Option[Int], Option[Long])] = {
-    val node = readMetadata(spark, tableDir).get("refs")
+    val node = meta.get("refs")
     if (node == null || !node.isObject) return Map.empty
     val out = Map.newBuilder[String, (Option[Long], Option[Int], Option[Long])]
     node.fields().forEachRemaining { e =>
@@ -3806,13 +2955,9 @@ object LayoutMaintenance {
   def dropRef(spark: SparkSession, tableDir: String, name: String): Unit =
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
     require(name != "main", "refusing to drop 'main' (roll back instead)")
-    val base = metaBase(spark, tableDir)
-    val rs = refs(spark, tableDir)
-    require(rs.exists(_._1 == name), s"no ref named '$name' in $tableDir")
-    writeMetadataVersion(spark, tableDir, snapshots(spark, tableDir),
-      currentSnapshotId(spark, tableDir)
-        .getOrElse(snapshots(spark, tableDir).last.id),
-      rs.filterNot(_._1 == name), base)
+    val b = new CommitBase(spark, tableDir)
+    require(b.refs.exists(_._1 == name), s"no ref named '$name' in $tableDir")
+    writeMetadataVersion(b, b.snaps, b.curId, b.refs.filterNot(_._1 == name))
   } }
 
   /** Publish a staged branch: fast-forward `to` (default the table head
@@ -3824,14 +2969,11 @@ object LayoutMaintenance {
   def fastForward(spark: SparkSession, tableDir: String,
       from: String, to: String = "main"): Long =
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    val base = metaBase(spark, tableDir)
-    val rs = refs(spark, tableDir)
-    val target = rs.collectFirst { case (`from`, id, _) => id }
+    val b = new CommitBase(spark, tableDir)
+    val target = b.refs.collectFirst { case (`from`, id, _) => id }
       .getOrElse(sys.error(s"no ref named '$from' in $tableDir"))
-    val refsAfter = (rs.filterNot(_._1 == to) :+ ((to, target, "branch")))
-      .sortBy(_._1)
-    writeMetadataVersion(spark, tableDir, snapshots(spark, tableDir),
-      target, refsAfter, base)
+    writeMetadataVersion(b, b.snaps, target,
+      (b.refs.filterNot(_._1 == to) :+ ((to, target, "branch"))).sortBy(_._1))
     target
   } }
 
@@ -3840,9 +2982,9 @@ object LayoutMaintenance {
     * (field-name, transform, source-id) — as a new spec with id
     * max+1 and make it the table default. Metadata-only: no file is
     * touched; existing manifests keep the spec ids their manifest-list
-    * rows record, [[carriedEntries]] carries them per entry, and
-    * [[appendSnapshot]] files future adds under the new default while
-    * re-filing old entries under their original specs — so readers
+    * rows record, the commit carry keeps them per entry, and the
+    * producer files future adds under the new default while re-filing
+    * old entries under their original specs — so readers
     * interpret every file's partition values with the spec it was
     * written under. Field-ids continue above the highest already
     * assigned (evolution never reuses one, spec rule). Returns the new
@@ -3854,12 +2996,9 @@ object LayoutMaintenance {
     import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
     // an EMPTY field list is legal: dropping the last partition field
     // evolves to the unpartitioned spec (still a fresh spec id)
-    val m = metaDir(tableDir)
-    val cur = currentMetadataFile(spark, tableDir)
-    val curV = "^v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(cur.getName)
-      .map(_.group(1).toLong).getOrElse(0L)
+    val base = metaBase(spark, tableDir)
     val mapper = new ObjectMapper()
-    val root = mapper.readTree(cur).asInstanceOf[ObjectNode]
+    val root = mapper.readTree(base.file).asInstanceOf[ObjectNode]
     val arr = mapper.createArrayNode()
     var maxSpec = -1
     var maxField = 999
@@ -3897,17 +3036,7 @@ object LayoutMaintenance {
     arr.add(entry)
     root.set[ArrayNode]("partition-specs", arr)
     root.put("default-spec-id", newId)
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${curV + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"evolvePartitionSpec($tableDir): version conflict at v$curV", e)
-    }
-    writeHintAtomic(m, curV + 1)
+    casWrite(tableDir, base, root, "partition spec evolution")
     newId
   } }
 
@@ -3944,10 +3073,11 @@ object LayoutMaintenance {
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
     require(mode == "auto" || mode == "full",
       s"computePartitionStats: mode must be auto|full, got '$mode'")
-    val all = snapshots(spark, tableDir)
+    val b = new CommitBase(spark, tableDir)
+    val all = b.snaps
     require(all.nonEmpty,
       s"computePartitionStats($tableDir): table has no snapshots")
-    val cur = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
+    val cur = b.curId
     val statsSchema = "partition STRING, file_count BIGINT, " +
       "record_count BIGINT, total_size BIGINT, " +
       "position_delete_file_count BIGINT, " +
@@ -3957,7 +3087,7 @@ object LayoutMaintenance {
     val prior: Option[(Long, String)] =
       if (mode != "auto") None
       else {
-        val arr = readMetadata(spark, tableDir).get("partition-statistics")
+        val arr = b.root.get("partition-statistics")
         if (arr == null || !arr.isArray) None
         else {
           val ids = all.map(_.id)
@@ -3979,10 +3109,8 @@ object LayoutMaintenance {
         }
       }
     def manifestsOfSnap(id: Long): Seq[(String, Long)] =
-      IcebergManifestSource.resolveManifestList(spark, tableDir, Some(id))
-        .map(p => IcebergManifestSource.manifestPathSeqs(
-          spark.sparkContext.hadoopConfiguration, p))
-        .getOrElse(Nil)
+      all.find(_.id == id).toSeq.flatMap(s => IcebergManifestSource
+        .manifestPathSeqs(spark.sparkContext.hadoopConfiguration, s.listPath))
     val (rollup0, arm) = prior match {
       case Some((baseId, basePath)) =>
         val before = manifestsOfSnap(baseId)
@@ -4035,39 +3163,24 @@ object LayoutMaintenance {
     val m = metaDir(tableDir)
     val f = freshFile(m, s"partition-stats-$cur.parquet")
     val n = IcebergLayoutWriter.writeSingleParquet(rollup, f)
-    // register under `partition-statistics`, same read-modify-write +
-    // version bump discipline as attachStatistics below
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-    val curFile = currentMetadataFile(spark, tableDir)
-    val curV = "^v(\\d+)\\.metadata\\.json$".r
-      .findFirstMatchIn(curFile.getName).map(_.group(1).toLong).getOrElse(0L)
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(curFile).asInstanceOf[ObjectNode]
-    val arr = mapper.createArrayNode()
+    // register under `partition-statistics`: read-modify-write of the
+    // pinned document + version CAS, like every commit
+    import com.fasterxml.jackson.databind.node.ArrayNode
+    val root = b.root
+    val arr = root.arrayNode()
     val orig = root.get("partition-statistics")
     if (orig != null && orig.isArray) orig.forEach { nd =>
       val sid = nd.get("snapshot-id")
       if (sid == null || !sid.canConvertToLong || sid.asLong() != cur)
         arr.add(nd)
     }
-    val entry = mapper.createObjectNode()
+    val entry = root.objectNode()
     entry.put("snapshot-id", cur)
     entry.put("statistics-path", f.getAbsolutePath)
     entry.put("file-size-in-bytes", f.length())
     arr.add(entry)
     root.set[ArrayNode]("partition-statistics", arr)
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${curV + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"computePartitionStats($tableDir): version conflict at v$curV", e)
-    }
-    writeHintAtomic(m, curV + 1)
+    casWrite(tableDir, b.meta, root, "partition statistics")
     (f.getAbsolutePath, cur, n, arm)
   } }
 
@@ -4109,12 +3222,9 @@ object LayoutMaintenance {
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
     import com.fasterxml.jackson.databind.ObjectMapper
     import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-    val m = metaDir(tableDir)
-    val cur = currentMetadataFile(spark, tableDir)
-    val curV = "^v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(cur.getName)
-      .map(_.group(1).toLong).getOrElse(0L)
+    val base = metaBase(spark, tableDir)
     val mapper = new ObjectMapper()
-    val root = mapper.readTree(cur).asInstanceOf[ObjectNode]
+    val root = mapper.readTree(base.file).asInstanceOf[ObjectNode]
     val arr = mapper.createArrayNode()
     val orig = root.get("statistics")
     if (orig != null && orig.isArray) orig.forEach { n =>
@@ -4140,17 +3250,6 @@ object LayoutMaintenance {
     entry.set[ArrayNode]("blob-metadata", blobs)
     arr.add(entry)
     root.set[ArrayNode]("statistics", arr)
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${curV + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"attachStatistics($tableDir): version conflict at v$curV", e)
-    }
-    writeHintAtomic(m, curV + 1)
-    curV + 1
+    casWrite(tableDir, base, root, "table statistics")
   } }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import IcebergManifestSource.localPath
 
 /** Iceberg-style metadata tables over a written v2 layout — the
   * inspection surface real engines expose as `table$files`,
@@ -243,13 +244,12 @@ object MetadataTables {
   def positionDeletes(spark: SparkSession, tableDir: String,
       snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
     val posFiles = IcebergManifestSource
       .statsFromTableDir(spark, tableDir, "t", Nil, snapshotId)
       .filter(col("content") === 1)
       .select(col("file_path"), col("file_format"))
       .collect() // metadata-sized: one row per tombstone FILE
-      .map(r => (norm(r.getString(0)), r.getString(1)))
+      .map(r => (localPath(r.getString(0)), r.getString(1)))
     val (dv, fileTombs) = posFiles.partition(_._2 == "PUFFIN")
     def arm(fmt: String,
         read: Seq[String] => DataFrame): Option[DataFrame] = {
@@ -257,7 +257,7 @@ object MetadataTables {
       if (paths.isEmpty) None
       else Some(read(paths)
         .select(col("file_path"), col("pos"),
-          regexp_replace(col("_metadata.file_path"), "^file:/+", "/")
+          localPath(col("_metadata.file_path"))
             .as("delete_file_path"),
           lit(fmt).as("delete_file_format")))
     }
@@ -280,7 +280,7 @@ object MetadataTables {
       else Some(dv.toSeq.flatMap { case (p, _) =>
         DeletionVectors.read(new java.io.File(p)).flatMap {
           case (target, poss) => poss.map(pos =>
-            (norm(target), pos, p, "PUFFIN"))
+            (localPath(target), pos, p, "PUFFIN"))
         }
       }.toDF("file_path", "pos", "delete_file_path", "delete_file_format"))
     Seq(parqDf, orcDf, avroDf, dvDf).flatten

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IcebergManifestSource.localPath
 
 /** Merge-on-read delete application — the Iceberg v2 read-path semantics
   * (public spec, "Row-level deletes"): a data row survives a snapshot iff
@@ -124,7 +125,7 @@ object MorRead {
         case other => sys.error(s"unknown tombstone file format $other ($p)")
       }
       pairs.map { case (t, pos) =>
-        (t.replaceFirst("^file:/+", "/"), pos, seq) }
+        (localPath(t), pos, seq) }
     })
     catch { case scala.util.control.NonFatal(_) => None }
   }
@@ -226,7 +227,6 @@ object MorRead {
     * COW rewrites still need them to pick affected files. */
   def resolveRowLineage(spark: SparkSession, tableDir: String,
       lin: DataFrame): DataFrame = {
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
     // (path → first_row_id) is file-count-sized and driver-known
     val friPairs = IcebergManifestSource
       .statsFromTableDir(spark, tableDir, "t", Nil)
@@ -234,7 +234,7 @@ object MorRead {
       .select(col("file_path"), col("first_row_id"))
       .collect()
       .flatMap(r => Option(r.getAs[java.lang.Long](1))
-        .map(v => norm(r.getString(0)) -> v.longValue))
+        .map(v => localPath(r.getString(0)) -> v.longValue))
       .toMap
     // same literal-map-below-a-cap / broadcast-join-past-it split as
     // the sequence-number attach (a 100k-entry literal bloats the plan)
@@ -308,7 +308,6 @@ object MorRead {
       withLineage: Boolean = false)
       : DataFrame = {
     import spark.implicits._
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
     // uuid lake columns (graft.lake-type.<col> = uuid): parquet stores
     // the spec's 16 fixed bytes, which Spark's native scan can read
     // only as BINARY — declare them binary and decode post-scan. The
@@ -375,7 +374,7 @@ object MorRead {
             .flatMap(id =>
               LayoutMaintenance.firstDataFilePath(spark, tableDir, id))
             .map(p => stripLineage(
-              graft.sources.v2.GraftIcebergSource.inferFrom(norm(p))))
+              graft.sources.v2.GraftIcebergSource.inferFrom(localPath(p))))
         }
       }
     // TIME columns: the ORC/AVRO dialects store micros-from-midnight as
@@ -460,14 +459,12 @@ object MorRead {
             else coalesce(gens.map(col): _*))
           .drop(away.filterNot(_ == cur): _*)
       }
-    val normCol = (c: org.apache.spark.sql.Column) =>
-      regexp_replace(c, "^file:/+", "/")
     val entries = IcebergManifestSource
       .statsFromTableDir(spark, tableDir, "t", Nil)
       .select(col("file_path"), col("content"), col("sequence_number"),
         col("file_format"))
       .collect() // metadata-sized: one row per FILE
-      .map(r => (norm(r.getString(0)), r.getInt(1), r.getLong(2), r.getString(3)))
+      .map(r => (localPath(r.getString(0)), r.getInt(1), r.getLong(2), r.getString(3)))
     val dataFiles = entries.filter(_._2 == 0)
     if (dataFiles.isEmpty) return spark.emptyDataFrame
     val posFiles = entries.filter(_._2 == 1)
@@ -527,7 +524,7 @@ object MorRead {
             .parquet(paths.map(_._1).toIndexedSeq: _*)
         }
       attachSeq(lineageCols(foldAliases(timeDecode(uuidDecode(raw)))),
-        paths, seqName, normCol(col("_metadata.file_path")))
+        paths, seqName, localPath(col("_metadata.file_path")))
     }
 
     // DELETION VECTORS (fileFormat=PUFFIN content=1 entries) decode
@@ -546,7 +543,7 @@ object MorRead {
     val dvPairs: Seq[(String, Long, Long)] = dvFiles.toSeq.flatMap {
       case (p, _, seq, _) =>
         DeletionVectors.read(new java.io.File(p)).flatMap {
-          case (target, poss) => poss.map(pos => (norm(target), pos, seq))
+          case (target, poss) => poss.map(pos => (localPath(target), pos, seq))
         }
     }
     val dvTomb: Option[DataFrame] =
@@ -564,8 +561,8 @@ object MorRead {
         read: Seq[String] => DataFrame): Option[DataFrame] =
       if (files.isEmpty) None
       else Some(attachSeq(read(files.map(_._1).toIndexedSeq),
-        files, "seq", normCol(col("_metadata.file_path")))
-        .select(normCol(col("file_path")).as("file_path"),
+        files, "seq", localPath(col("_metadata.file_path")))
+        .select(localPath(col("file_path")).as("file_path"),
           col("pos"), col("seq")))
     // declaring the fixed schema (spec "Position-based delete files")
     // skips the footer-inference pass a schemaless read pays
@@ -585,7 +582,7 @@ object MorRead {
             val sq = seqOf(p)
             AvroDataRead.readPosDeletes(p).map { case (t, pos) =>
               org.apache.spark.sql.Row(
-                t.replaceFirst("^file:/+", "/"), pos, sq) }
+                localPath(t), pos, sq) }
           }
         Some(spark.createDataFrame(rows, org.apache.spark.sql.types
           .StructType(Seq(
@@ -640,17 +637,17 @@ object MorRead {
         }
         (dvPairs.iterator.map(_._1).toSet ++ fileTargets).intersect(orcPaths)
       }
-    val needPos = (orcPosPaths.map(norm) ++ targetedOrc).intersect(orcPaths)
+    val needPos = (orcPosPaths.map(localPath) ++ targetedOrc).intersect(orcPaths)
     val (orcPosData, orcFastData) = orcData.partition(e => needPos(e._1))
     val parq =
       if (parqData.isEmpty) None
       else Some(withSeq(parqData, "data_seq", declared = true)
-        .withColumn("file_path", normCol(col("_metadata.file_path")))
+        .withColumn("file_path", localPath(col("_metadata.file_path")))
         .withColumn("pos", col("_metadata.row_index")))
     val orcFast =
       if (orcFastData.isEmpty) None
       else Some(withSeq(orcFastData, "data_seq", orc = true)
-        .withColumn("file_path", normCol(col("_metadata.file_path")))
+        .withColumn("file_path", localPath(col("_metadata.file_path")))
         .withColumn("pos", lit(null).cast("long")))
     def posArm(files: Array[(String, Int, Long, String)],
         read: Seq[String] => DataFrame): Option[DataFrame] =
@@ -701,17 +698,16 @@ object MorRead {
     * KB-sized objects); a batched Spark read past the cap. Paths come
     * back normalized (`file:` scheme stripped). */
   def posTombstoneTargets(spark: SparkSession, tableDir: String): Set[String] = {
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
     val entries = IcebergManifestSource
       .statsFromTableDir(spark, tableDir, "t", Nil)
       .filter(col("content") === 1)
       .select(col("file_path"), col("sequence_number"), col("file_format"))
       .collect()
-      .map(r => (norm(r.getString(0)), r.getLong(1), r.getString(2)))
+      .map(r => (localPath(r.getString(0)), r.getLong(1), r.getString(2)))
       .toIndexedSeq
     val (dv, files) = entries.partition(_._3 == "PUFFIN")
     val dvTargets = dv.iterator.flatMap { case (p, _, _) =>
-      DeletionVectors.read(new java.io.File(p)).map(t => norm(t._1))
+      DeletionVectors.read(new java.io.File(p)).map(t => localPath(t._1))
     }.toSet
     val fileTargets: Set[String] = fileTombPairsLocal(spark, files) match {
       case Some(pairs) => pairs.iterator.map(_._1).toSet
@@ -720,7 +716,7 @@ object MorRead {
         else spark.read.schema("file_path STRING, pos BIGINT")
           .parquet(files.map(_._1): _*)
           .select(col("file_path")).distinct()
-          .collect().map(r => norm(r.getString(0))).toSet
+          .collect().map(r => localPath(r.getString(0))).toSet
     }
     dvTargets ++ fileTargets
   }
@@ -739,18 +735,17 @@ object MorRead {
     * minimal. */
   def orcFilesMatching(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column): Set[String] = {
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
     val orcPaths = IcebergManifestSource
       .statsFromTableDir(spark, tableDir, "t", Nil)
       .select(col("file_path"), col("content"), col("file_format"))
       .collect() // metadata-sized: one row per FILE
       .filter(r => r.getInt(1) == 0 && r.getString(2) == "ORC")
-      .map(r => norm(r.getString(0)))
+      .map(r => localPath(r.getString(0)))
     if (orcPaths.isEmpty) Set.empty
     else try {
       spark.read.orc(orcPaths.toIndexedSeq: _*)
         .filter(predicate)
-        .select(regexp_replace(col("_metadata.file_path"), "^file:/+", "/")
+        .select(localPath(col("_metadata.file_path"))
           .as("fp"))
         .distinct().collect().map(_.getString(0)).toSet
     } catch {
@@ -779,7 +774,7 @@ object MorRead {
     // schema (the dialect's id convention: field id N = Nth column) —
     // any format serves, each read at footer/header grain
     val dataFile = raw.filter(_.getInt(1) == 0)
-      .map(r => (r.getString(0).replaceFirst("^file:/+", "/"),
+      .map(r => (localPath(r.getString(0)),
         r.getString(3)))
       .sortBy { case (_, fmt) => if (fmt == "PARQUET") 0 else 1 }
       .headOption

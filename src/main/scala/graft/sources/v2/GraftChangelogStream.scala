@@ -7,6 +7,7 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.IcebergManifestSource.localPath
 
 /** CDC (change-data-capture) STREAMING reads:
   * `spark.readStream.format("graft-iceberg").option("read-changes",
@@ -150,7 +151,7 @@ private[v2] class GraftChangelogStream(dir: String, baseSchema: StructType)
       val targets = addedPos.flatMap(p =>
         GraftPartitionReader.posMapOf(p).keySet).distinct.sorted
       val norm = after.map { case (p, v) =>
-        p.replaceFirst("^file:/+", "/") -> v }
+        localPath(p) -> v }
       val targetMeta: Seq[(String, java.lang.Long, Long)] =
         targets.flatMap { t =>
           norm.get(t).map(v => (t, v._4, v._3))
@@ -493,12 +494,11 @@ private[v2] class GraftChangelogReaderFactory(baseSchema: StructType)
           (if (graft.sources.DeletionVectors.isDvPath(path))
             graft.sources.DeletionVectors.read(new java.io.File(path))
               .map { case (t, ps) =>
-                (t.replaceFirst("^file:/+", "/"), ps.toSet) }
+                (localPath(t), ps.toSet) }
           else
             GraftPartitionReader.readRows(path, Seq("file_path", "pos"))
-              .map(g => (String.valueOf(
-                  GraftPartitionReader.prim(g, "file_path"))
-                  .replaceFirst("^file:/+", "/"),
+              .map(g => (localPath(String.valueOf(
+                  GraftPartitionReader.prim(g, "file_path"))),
                 GraftPartitionReader.prim(g, "pos").asInstanceOf[Long]))
               .toSeq.groupBy(_._1).view.mapValues(_.map(_._2).toSet)
               .toSeq).sortBy(_._1)

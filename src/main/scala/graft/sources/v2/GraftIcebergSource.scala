@@ -18,6 +18,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.IcebergManifestSource.localPath
 
 /** A real DataSourceV2 over the on-disk v2 layout:
   * `spark.read.format("graft-iceberg").load(tableDir)` resolves the
@@ -629,9 +630,7 @@ private[graft] class GraftTable(private[v2] val dir: String, snapshot: Option[Lo
     * input partition per manifest; see [[GraftScan.planInputPartitions]]).
     * Conf-overridable so the fallback is testable at toy scale. */
   private def planningCap: Int =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.maxDriverFileEntries",
-        graft.sources.LayoutMaintenance.MaxDriverFileEntries.toString).toInt
+    graft.sources.LayoutMaintenance.driverEntryCap(SparkSession.active)
 
   /** True when the table's file count exceeds [[planningCap]] — per-file
     * driver planning (and everything built on it: SPJ grouping,
@@ -1815,7 +1814,6 @@ private[v2] class GraftReaderFactory(required: StructType,
 }
 
 private[v2] object GraftPartitionReader {
-  private def norm(p: String): String = p.replaceFirst("^file:/+", "/")
 
   /** EXECUTOR-SIDE tombstone cache: a MOR scan opens each delete file
     * once per DATA-FILE task, so a snapshot with F data files and D
@@ -1831,8 +1829,8 @@ private[v2] object GraftPartitionReader {
   private val TombCacheMax = 512
 
   private def cached[T <: AnyRef](path: String, tag: String)(load: => T): T = {
-    val f = new java.io.File(norm(path))
-    val key = (norm(path), f.length(), f.lastModified(), tag)
+    val f = new java.io.File(localPath(path))
+    val key = (localPath(path), f.length(), f.lastModified(), tag)
     if (tombCache.size > TombCacheMax) tombCache.clear()
     tombCache.computeIfAbsent(key, _ => load).asInstanceOf[T]
   }
@@ -1931,11 +1929,11 @@ private[v2] object GraftPartitionReader {
     cached(p, "pos") {
       if (graft.sources.DeletionVectors.isDvPath(p))
         graft.sources.DeletionVectors.read(new java.io.File(p))
-          .map { case (t, ps) => norm(t) -> ps.toArray }.toMap
+          .map { case (t, ps) => localPath(t) -> ps.toArray }.toMap
       else if (p.endsWith(".orc") || p.endsWith(".avro")) {
         // write.delete.format.default=orc|avro tombstone files: read
         // through the connector's own format readers
-        val rows = GraftFormatReaders.open(norm(p),
+        val rows = GraftFormatReaders.open(localPath(p),
           if (p.endsWith(".orc")) "ORC" else "AVRO")
         try {
           val fi = rows.names.indexOf("file_path")
@@ -1943,14 +1941,14 @@ private[v2] object GraftPartitionReader {
           require(fi >= 0 && pi >= 0,
             s"graft-iceberg: tombstone file $p lacks (file_path, pos)")
           rows.iterator
-            .map(a => (norm(String.valueOf(a(fi))),
+            .map(a => (localPath(String.valueOf(a(fi))),
               a(pi).asInstanceOf[Long]))
             .toSeq.groupBy(_._1).map { case (t, ps) =>
               t -> ps.map(_._2).toArray }
         } finally rows.close()
       }
       else readRows(p, Seq("file_path", "pos"))
-        .map(g => (norm(String.valueOf(prim(g, "file_path"))),
+        .map(g => (localPath(String.valueOf(prim(g, "file_path"))),
           prim(g, "pos").asInstanceOf[Long]))
         .toSeq.groupBy(_._1).map { case (t, ps) =>
           t -> ps.map(_._2).toArray }
@@ -1959,7 +1957,7 @@ private[v2] object GraftPartitionReader {
   /** The row ordinals of `dataPath` deleted by the position-tombstone
     * files (spec: pos-delete rows are (file_path, pos)). */
   def positionsFor(dataPath: String, posDeletes: Seq[String]): Set[Long] = {
-    val target = norm(dataPath)
+    val target = localPath(dataPath)
     posDeletes.iterator
       .flatMap(p => posMapOf(p).getOrElse(target, Array.empty[Long]))
       .toSet
@@ -1976,7 +1974,7 @@ private[v2] object GraftPartitionReader {
     eqDeletes.map { case (p, keys) =>
       (keys, cached(p, "eq:" + keys.mkString(",")) {
         if (p.endsWith(".orc") || p.endsWith(".avro")) {
-          val rows = GraftFormatReaders.open(norm(p),
+          val rows = GraftFormatReaders.open(localPath(p),
             if (p.endsWith(".orc")) "ORC" else "AVRO")
           try {
             val idx = keys.map { k =>

@@ -118,7 +118,7 @@ object GraftProcedures {
         // to a bare path, matching the rest of the layout's path dialect
         val files = statuses.map { st =>
           val p = st.getPath.toString
-          (if (p.startsWith("file:")) p.replaceFirst("^file:/+", "/") else p,
+          (IcebergManifestSource.localPath(p),
             st.getLen)
         }.sortBy(_._1)
         val hasMeta = {
@@ -131,7 +131,7 @@ object GraftProcedures {
           val existing = IcebergManifestSource
             .statsFromTableDir(spark, dir, "t", Nil)
             .select("file_path").collect()
-            .map(_.getString(0).replaceFirst("^file:/+", "/")).toSet
+            .map(r => IcebergManifestSource.localPath(r.getString(0))).toSet
           val dup = files.map(_._1).filter(existing.contains)
           require(dup.isEmpty,
             s"add_files($dir): already referenced by the current " +

@@ -557,6 +557,118 @@ class CommitScaleSpec extends AnyFunSuite {
     assert(LayoutMaintenance.snapshotIds(spark, tbl.getPath).size == 4)
   }
 
+  /** The newest snapshot's id, entry relation, manifest list and summary
+    * counters, plus the table's current id and refs — everything a commit
+    * writes, read back independently of the commit path. */
+  private def committed(tbl: java.io.File) = {
+    val id = LayoutMaintenance.snapshotIds(spark, tbl.getPath).last
+    val rel = IcebergManifestSource
+      .statsFromTableDir(spark, tbl.getPath, "t", Seq((1, "k", LongType)),
+        Some(id))
+      .select(col("file_path"), col("content"), col("record_count"),
+        col("sequence_number"), col("lo_k"), col("hi_k"),
+        col("file_format"), col("equality_ids"))
+      .collect().map(r => r.getString(0).split('/').last +: r.toSeq.tail)
+      .sortBy(_.head.toString).toSeq
+    val summary = LayoutMaintenance.snapshotSummaries(spark, tbl.getPath)
+      .find(_._1 == id).map(_._3).getOrElse(Map.empty).filter { case (k, _) =>
+        k == "operation" || k == "wap.id" || k.startsWith("added-") ||
+          k.startsWith("total-") }
+    val md = new java.io.File(tbl, "metadata")
+    val hint = java.nio.file.Files.readString(
+      new java.io.File(md, "version-hint.text").toPath).trim
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(md, s"v$hint.metadata.json"))
+    val refs = Option(meta.get("refs")).toSeq.flatMap { rs =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
+      rs.fields().forEachRemaining(e => out += ((e.getKey,
+        e.getValue.get("snapshot-id").asLong(),
+        e.getValue.get("type").asText())))
+      out.sorted.toSeq
+    }
+    (id, rel, summary, meta.get("current-snapshot-id").asLong(), refs)
+  }
+
+  test("both producer arms commit the same entries, summary, refs and current id for every append-shaped and delete-side verb") {
+    import spark.implicits._
+    def posdel(tbl: java.io.File, name: String, target: String,
+        pos: Long): ManifestEntrySpec = {
+      val f = new java.io.File(new java.io.File(tbl, "data"), name)
+      val n = IcebergLayoutWriter.writeSingleParquet(Seq((new java.io.File(
+        new java.io.File(tbl, "data"), target).getAbsolutePath, pos))
+        .toDF("file_path", "pos"), f)
+      ManifestEntrySpec(status = 1, content = 1,
+        filePath = f.getAbsolutePath, recordCount = n, sizeBytes = f.length())
+    }
+    val none: java.io.File => Unit = _ => ()
+    // (verb, set-up run on both twins under no cap, the verb itself)
+    val cases: Seq[(String, java.io.File => Unit, java.io.File => Unit)] = Seq(
+      ("commitAppend", none, t => LayoutMaintenance.commitAppend(spark,
+        t.getPath, Seq(dataFile(t, "x.parquet", 3)))),
+      ("commitUpsert", none, t => LayoutMaintenance.commitUpsert(spark,
+        t.getPath, Seq((5L, 99L), (450L, 1L)).toDF("k", "b"), Seq("k"))),
+      ("commitMerge", none, t => LayoutMaintenance.commitMerge(spark,
+        t.getPath, Seq((5L, 99L, "U"), (150L, 0L, "D")).toDF("k", "b", "op"),
+        Seq("k"), "op")),
+      ("commitDelete", none, t => LayoutMaintenance.commitDelete(spark,
+        t.getPath, Seq(7L, 107L).toDF("k"), Seq("k"))),
+      ("commitDeleteWhere (posdel)", none, t => LayoutMaintenance
+        .commitDeleteWhere(spark, t.getPath, col("k") === 9L)),
+      ("commitDeleteWhere (DV)",
+        t => LayoutMaintenance.commitDeleteWhereDv(spark, t.getPath,
+          col("k") === 3L),
+        t => LayoutMaintenance.commitDeleteWhereDv(spark, t.getPath,
+          col("k") === 4L || col("k") === 104L)),
+      ("commitDeltaFiles", none, t => LayoutMaintenance.commitDeltaFiles(
+        spark, t.getPath, Seq(posdel(t, "pd.parquet", "f0.parquet", 0L),
+          dataFile(t, "delta.parquet", 5)),
+        referencedDataFiles = Seq(new java.io.File(
+          new java.io.File(t, "data"), "f0.parquet").getAbsolutePath))),
+      ("cherryPick",
+        t => LayoutMaintenance.stageAppendWap(spark, t.getPath,
+          Seq(dataFile(t, "picked.parquet", 6)), "pick-1"),
+        t => LayoutMaintenance.publishChanges(spark, t.getPath, "pick-1")),
+      ("stageAppend", none, t => LayoutMaintenance.stageAppend(spark,
+        t.getPath, Seq(dataFile(t, "staged.parquet", 7)), "audit")),
+      ("stageAppendWap", none, t => LayoutMaintenance.stageAppendWap(spark,
+        t.getPath, Seq(dataFile(t, "wap.parquet", 8)), "wap-1")),
+      ("rewritePositionDeletes",
+        t => {
+          LayoutMaintenance.commitDeleteWhere(spark, t.getPath, col("k") === 5L)
+          LayoutMaintenance.commitDeleteWhere(spark, t.getPath, col("k") === 105L)
+        },
+        t => LayoutMaintenance.rewritePositionDeletes(spark, t.getPath)),
+      ("convertEqualityDeletes",
+        t => LayoutMaintenance.commitDelete(spark, t.getPath,
+          Seq(11L, 111L).toDF("k"), Seq("k")),
+        t => LayoutMaintenance.convertEqualityDeletes(spark, t.getPath)))
+    cases.zipWithIndex.foreach { case ((verb, setUp, run), i) =>
+      val capped = build(s"arms$i-cap", 3)
+      val walked = build(s"arms$i-walk", 3)
+      Seq(capped, walked).foreach(setUp)
+      val parentList = IcebergManifestSource.manifestListPath(spark,
+        capped.getPath).get
+      atToyCap { run(capped) }
+      run(walked)
+      val (cid, crel, csum, ccur, crefs) = committed(capped)
+      val (wid, wrel, wsum, wcur, wrefs) = committed(walked)
+      assert(cid == wid, verb)
+      assert(crel == wrel, s"$verb: entry relations differ")
+      assert(csum == wsum, s"$verb: summaries differ")
+      assert(csum.contains("total-data-files") &&
+        csum.contains("total-delete-files"), s"$verb: totals missing $csum")
+      assert((ccur, crefs) == (wcur, wrefs), s"$verb: refs/current differ")
+      // the capped twin really took the reuse arm: its new list still
+      // references the parent's (data) manifests verbatim
+      val conf = spark.sparkContext.hadoopConfiguration
+      val reused = IcebergManifestSource.manifestPaths(conf, parentList).toSet
+        .intersect(IcebergManifestSource.manifestPaths(conf,
+          IcebergManifestSource.manifestListPath(spark, capped.getPath,
+            Some(cid)).get).toSet)
+      assert(reused.nonEmpty, s"$verb: the capped twin did not reuse manifests")
+    }
+  }
+
   private def dataFile(tbl: java.io.File, name: String,
       i: Int): ManifestEntrySpec = {
     import spark.implicits._

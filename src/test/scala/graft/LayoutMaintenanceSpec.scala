@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{IcebergLayoutWriter, IcebergManifestSource, LayoutMaintenance}
+import graft.sources.{IcebergLayoutWriter, IcebergManifestSource, LayoutMaintenance,
+  MorRead}
 import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
 
 /** EXECUTED metadata maintenance on real on-disk layouts: snapshot
@@ -321,5 +322,54 @@ class LayoutMaintenanceSpec extends AnyFunSuite {
       ("old1.parquet", 0, 1L), ("old2.parquet", 0, 1L),
       ("pos.parquet", 1, 2L)).sorted,
       s"pinned files must survive byte-identical with their seqs: $now")
+  }
+
+  test("commitCompaction carries every uncompacted entry with its full identity") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.LongType
+    val session = spark
+    import session.implicits._
+    val tbl = new java.io.File("target/tmp-maint-carry")
+    org.apache.commons.io.FileUtils.deleteQuietly(tbl)
+    val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
+    def append(name: String, lo: Long, hi: Long): Unit = {
+      val f = new java.io.File(dataDir, name)
+      val n = IcebergLayoutWriter.writeSingleParquet(
+        (lo to hi).map(k => (k, k % 7)).toDF("k", "b"), f)
+      LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(
+        ManifestEntrySpec(status = 1, content = 0,
+          filePath = f.getAbsolutePath, recordCount = n,
+          sizeBytes = f.length(),
+          lower = Map(1 -> IcebergLayoutWriter.boundLong(lo)),
+          upper = Map(1 -> IcebergLayoutWriter.boundLong(hi)))))
+    }
+    // an equality delete (with equality_ids) and a PUFFIN deletion
+    // vector, then newer small appends the compaction may pack
+    append("base.parquet", 0L, 99L)
+    LayoutMaintenance.commitUpsert(spark, tbl.getPath,
+      Seq((5L, 50L)).toDF("k", "b"), Seq("k"))
+    LayoutMaintenance.commitDeleteWhereDv(spark, tbl.getPath, col("k") === 7L)
+    (0 until 3).foreach(i =>
+      append(s"small$i.parquet", 1000L + 10 * i, 1009L + 10 * i))
+    def relation: Map[String, Seq[Any]] = IcebergManifestSource
+      .statsFromTableDir(spark, tbl.getPath, "t", Seq((1, "k", LongType)))
+      .select(col("file_path"), col("content"), col("file_format"),
+        col("equality_ids"), col("lo_k"), col("hi_k"),
+        col("sequence_number"))
+      .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    val before = relation
+    val keysBefore = MorRead.metadataEqKeys(spark, tbl.getPath)
+    assert(keysBefore == Seq("k"))
+    assert(before.values.count(_(1) == "PUFFIN") == 1)
+    val (_, filesBefore, filesAfter) =
+      LayoutMaintenance.commitCompaction(spark, tbl.getPath, 1L << 30)
+    // base + upsert are pinned under the deletes; the 3 small files pack
+    assert(filesBefore == 5 && filesAfter == 3)
+    val after = relation
+    assert(after.filter(!_._1.contains("compact-")) ==
+      before.filter(!_._1.contains("small")),
+      "every uncompacted entry must keep its format, equality ids, " +
+        "bounds and sequence number")
+    assert(MorRead.metadataEqKeys(spark, tbl.getPath) == keysBefore)
   }
 }
