@@ -1,26 +1,39 @@
 package graft.metrics
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model._
 import graft.functions.Pure
 
-/** Distributed re-expression of the reference's metrics pipeline
-  * (`/root/reference/icebergdiag/metrics/table_metrics.py:46-155`).
+/** Re-expression of the reference's metrics pipeline
+  * (`icebergdiag/metrics/table_metrics.py:46-155`) with
+  * two arms that give identical rows.
   *
-  * Scale design (the part that must survive 100 TB / 1000 executors):
-  *   - ONE wide shuffle: `groupByKey((table, partitionKey))`. Everything the
+  * Driver arm: when both inputs are already on the driver (their
+  * optimised plans are local relations, as the manifest readers return
+  * under `spark.graft.driverManifestStats`), [[computeMetricsWide]] folds
+  * the 9 metrics in-process, like the reference's own loop, and launches
+  * no Spark job. The rows come back as a local relation.
+  *
+  * Cluster arm, the part that must survive 100 TB / 1000 executors:
+  *   - ONE wide shuffle on (table, partitionKey). Everything the
   *     reference computes per partition — counts, sums, overheads, and the
-  *     sequential bin-packing simulation — is produced in a single pass over
-  *     each group (`mapGroups`), holding only the data-file sizes (8 B each)
-  *     per group in memory, exactly the reference's own bound.
+  *     sequential bin-packing simulation — is produced in a single
+  *     streaming pass over each sorted group, O(1) memory per group.
   *   - The per-table rollup then runs over `Dataset[PartitionStats]`, whose
   *     cardinality is #partitions (tiny vs #files), with declarative
   *     aggregates (codegen'd) and deterministic `max_by` tie-breaks.
   *   - Thousands of tables fan in as ONE union-all plan with `table` as a
   *     grouping column — no driver-side loop over tables.
   *
-  * The bin-packer is a sequential scan-with-carry whose groups overshoot the
+  * Both arms run the one per-partition fold ([[foldPartitions]]). The
+  * bin-packer is a sequential scan-with-carry whose groups overshoot the
   * cap (see [[Pure.buildPartitionGroups]]); a closed-form window cumsum is
   * deliberately NOT used because `floor(cumsum/cap)` changes group shapes.
   */
@@ -45,51 +58,57 @@ object MetricsCalculator {
       .repartition(col("table"), col("partitionKey"))
       .sortWithinPartitions(col("table"), col("partitionKey"), col("sizeBytes"))
       .as[FileEntry]
-      .mapPartitions { it =>
-        new Iterator[PartitionStats] {
-          private var pending: Option[FileEntry] = None
-          private def nextEntry(): Option[FileEntry] = {
-            val e = pending.orElse(if (it.hasNext) Some(it.next()) else None)
-            pending = None
-            e
-          }
-          private var lookahead: Option[FileEntry] = None
-          def hasNext: Boolean = {
-            if (lookahead.isEmpty) lookahead = nextEntry()
-            lookahead.isDefined
-          }
-          def next(): PartitionStats = {
-            if (!hasNext) throw new NoSuchElementException
-            val first = lookahead.get; lookahead = None
-            val table = first.table; val pk = first.partitionKey
-            var fileCount = 0L; var totalSize = 0L; var scanOverhead = 0L
-            var dataCount = 0L; var dataSize = 0L
-            // streaming bin-pack carry (sizes arrive ascending for the group)
-            var groups = 0L; var costSum = 0L; var curSize = 0L; var open = false
-            var cur: Option[FileEntry] = Some(first)
-            while (cur.isDefined && cur.get.table == table && cur.get.partitionKey == pk) {
-              val f = cur.get
-              fileCount += 1
-              totalSize += f.sizeBytes
-              scanOverhead += Pure.readFileCost(f.sizeBytes, cfg.fetchSize) * cfg.msPerScan
-              if (f.content == FileContent.Data) {
-                dataCount += 1; dataSize += f.sizeBytes
-                if (curSize > cfg.maxGroupBytes) {
-                  groups += 1; costSum += Pure.readFileCost(curSize, cfg.fetchSize)
-                  curSize = 0L; open = false
-                }
-                curSize += f.sizeBytes; open = true
-              }
-              cur = nextEntry()
-            }
-            pending = cur // first entry of the NEXT group (or None)
-            if (open) { groups += 1; costSum += Pure.readFileCost(curSize, cfg.fetchSize) }
-            PartitionStats(table, pk, fileCount, totalSize, scanOverhead, dataCount, dataSize,
-              groups, costSum * cfg.msPerScan)
-          }
-        }
-      }
+      .mapPartitions(foldPartitions(_, cfg))
   }
+
+  /** The per-partition fold: entries sorted by (table, partitionKey,
+    * sizeBytes) in, one [[PartitionStats]] per (table, partitionKey) run
+    * out. A boundary-detecting stream that folds every aggregate AND the
+    * sequential bin-pack carry in one pass with O(1) state. */
+  private def foldPartitions(it: Iterator[FileEntry],
+      cfg: EngineConfig): Iterator[PartitionStats] =
+    new Iterator[PartitionStats] {
+      private var pending: Option[FileEntry] = None
+      private def nextEntry(): Option[FileEntry] = {
+        val e = pending.orElse(if (it.hasNext) Some(it.next()) else None)
+        pending = None
+        e
+      }
+      private var lookahead: Option[FileEntry] = None
+      def hasNext: Boolean = {
+        if (lookahead.isEmpty) lookahead = nextEntry()
+        lookahead.isDefined
+      }
+      def next(): PartitionStats = {
+        if (!hasNext) throw new NoSuchElementException
+        val first = lookahead.get; lookahead = None
+        val table = first.table; val pk = first.partitionKey
+        var fileCount = 0L; var totalSize = 0L; var scanOverhead = 0L
+        var dataCount = 0L; var dataSize = 0L
+        // streaming bin-pack carry (sizes arrive ascending for the group)
+        var groups = 0L; var costSum = 0L; var curSize = 0L; var open = false
+        var cur: Option[FileEntry] = Some(first)
+        while (cur.isDefined && cur.get.table == table && cur.get.partitionKey == pk) {
+          val f = cur.get
+          fileCount += 1
+          totalSize += f.sizeBytes
+          scanOverhead += Pure.readFileCost(f.sizeBytes, cfg.fetchSize) * cfg.msPerScan
+          if (f.content == FileContent.Data) {
+            dataCount += 1; dataSize += f.sizeBytes
+            if (curSize > cfg.maxGroupBytes) {
+              groups += 1; costSum += Pure.readFileCost(curSize, cfg.fetchSize)
+              curSize = 0L; open = false
+            }
+            curSize += f.sizeBytes; open = true
+          }
+          cur = nextEntry()
+        }
+        pending = cur // first entry of the NEXT group (or None)
+        if (open) { groups += 1; costSum += Pure.readFileCost(curSize, cfg.fetchSize) }
+        PartitionStats(table, pk, fileCount, totalSize, scanOverhead, dataCount, dataSize,
+          groups, costSum * cfg.msPerScan)
+      }
+    }
 
   /** Buffered formulation (groupByKey + in-memory sort per group) — kept as
     * the reference implementation for the equivalence spec; memory bound is
@@ -199,12 +218,127 @@ object MetricsCalculator {
   }
 
   /** End-to-end, multi-table: `Dataset[FileEntry]` (+ per-table manifest
-    * counts) -> one wide metrics row per table. */
+    * counts) -> one wide metrics row per table. When both inputs are
+    * already on the driver (local relations, or unions of them) the
+    * metrics fold on the driver into a local relation, with no Spark job;
+    * otherwise [[tableMetrics]] over [[partitionStats]]. */
   def computeMetricsWide(
       files: Dataset[FileEntry],
       manifestCounts: Dataset[(String, Long)],
-      cfg: EngineConfig = EngineConfig.default): Dataset[TableMetricsWide] =
-    tableMetrics(partitionStats(files, cfg), manifestCounts, cfg)
+      cfg: EngineConfig = EngineConfig.default): Dataset[TableMetricsWide] = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    (localRelations(files), localRelations(manifestCounts)) match {
+      case (Some(f), Some(m)) =>
+        driverTableMetrics(localRows[FileEntry](f), localRows[(String, java.lang.Long)](m),
+          cfg).toDS()
+      case _ => tableMetrics(partitionStats(files, cfg), manifestCounts, cfg)
+    }
+  }
+
+  /** The local relations a Dataset's optimised plan consists of, with the
+    * plan's output: one `LocalRelation`, or a `Union` of them. */
+  private def localRelations(ds: Dataset[_]): Option[(Seq[Attribute], Seq[LocalRelation])] =
+    if (ds.isStreaming) None
+    else ds.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some((l.output, Seq(l)))
+      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+        Some((u.output, u.children.collect { case l: LocalRelation => l }))
+      case _ => None
+    }
+
+  private def localRows[T: TypeTag](rels: (Seq[Attribute], Seq[LocalRelation])): Seq[T] = {
+    val decode = ExpressionEncoder[T]().resolveAndBind(rels._1).createDeserializer()
+    rels._2.flatMap(_.data.map(decode))
+  }
+
+  /** [[tableMetrics]] over [[partitionStats]], folded on the driver. It
+    * reproduces the cluster arm row for row: one row per (table, manifest
+    * row) of the full outer join on `table` (a null table joins nothing),
+    * the argmax on (reduction, partitionKey) with keys in UTF-8 byte
+    * order as Spark compares them, the `worst*` pair zeroed unless the
+    * best reduction is positive, and exact long arithmetic where ANSI
+    * mode would raise on overflow. A null manifest count reads 0. */
+  private def driverTableMetrics(files: Seq[FileEntry],
+      manifestCounts: Seq[(String, java.lang.Long)],
+      cfg: EngineConfig): Seq[TableMetricsWide] = {
+    val byKey: Ordering[FileEntry] = (x, y) => {
+      val t = nullsFirst(x.table, y.table)
+      if (t != 0) t else {
+        val k = nullsFirst(x.partitionKey, y.partitionKey)
+        if (k != 0) k else java.lang.Long.compare(x.sizeBytes, y.sizeBytes)
+      }
+    }
+    val tables = scala.collection.mutable.LinkedHashMap.empty[String, TableFold]
+    foldPartitions(files.sorted(byKey).iterator, cfg).foreach { p =>
+      tables.getOrElseUpdate(p.table, new TableFold).add(p)
+    }
+    val counts = manifestCounts.map(m => (m._1, Option(m._2).fold(0L)(_.longValue)))
+    val countsOf = counts.filter(_._1 != null).groupMap(_._1)(_._2)
+    val joined = tables.toSeq.flatMap { case (t, f) =>
+      val ms = if (t == null) Nil else countsOf.getOrElse(t, Nil)
+      if (ms.isEmpty) Seq(f.row(t, 0L, cfg)) else ms.map(f.row(t, _, cfg))
+    }
+    joined ++ counts.collect { case (t, m) if t == null || !tables.contains(t) =>
+      new TableFold().row(t, m, cfg)
+    }
+  }
+
+  private def nullsFirst(a: String, b: String): Int =
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** One table's rollup of its partitions — the aggregates of
+    * [[tableMetrics]]. An instance that saw no partition is the all-zero
+    * side of a manifest-only row. */
+  private final class TableFold {
+    private var scanOverhead, afterOverhead, fileCount, afterGroups = 0L
+    private var dataSize, dataCount, largest, totalSize, partitions = 0L
+    private var worstAvg = 0.0
+    // argmax key (reduction, partitionKey) and its (before, after) pair
+    private var bestFc, bestSo: (Long, String) = _
+    private var worstFc, worstSo = (0L, 0L)
+
+    def add(p: PartitionStats): Unit = {
+      scanOverhead = Math.addExact(scanOverhead, p.scanOverhead)
+      afterOverhead = Math.addExact(afterOverhead, p.afterOverhead)
+      fileCount = Math.addExact(fileCount, p.fileCount)
+      afterGroups = Math.addExact(afterGroups, p.afterGroupCount)
+      dataSize = Math.addExact(dataSize, p.dataFileSize)
+      dataCount = Math.addExact(dataCount, p.dataFileCount)
+      totalSize = Math.addExact(totalSize, p.totalSize)
+      val avg = p.totalSize.toDouble / p.fileCount.toDouble
+      worstAvg = if (partitions == 0L) avg else math.min(worstAvg, avg)
+      largest = if (partitions == 0L) p.totalSize else math.max(largest, p.totalSize)
+      partitions += 1
+      val fc = (Math.subtractExact(p.fileCount, p.afterGroupCount), p.partitionKey)
+      if (bestFc == null || above(fc, bestFc)) {
+        bestFc = fc; worstFc = (p.fileCount, p.afterGroupCount)
+      }
+      val so = (Math.subtractExact(p.scanOverhead, p.afterOverhead), p.partitionKey)
+      if (bestSo == null || above(so, bestSo)) {
+        bestSo = so; worstSo = (p.scanOverhead, p.afterOverhead)
+      }
+    }
+
+    private def above(a: (Long, String), b: (Long, String)): Boolean = {
+      val c = java.lang.Long.compare(a._1, b._1)
+      c > 0 || (c == 0 && nullsFirst(a._2, b._2) > 0)
+    }
+
+    def row(table: String, manifestCount: Long, cfg: EngineConfig): TableMetricsWide = {
+      def worst(best: (Long, String), pair: (Long, Long)) =
+        if (best != null && best._1 > 0) pair else (0L, 0L)
+      val (wsoB, wsoA) = worst(bestSo, worstSo)
+      val (wfcB, wfcA) = worst(bestFc, worstFc)
+      TableMetricsWide(table,
+        Math.addExact(scanOverhead, Math.multiplyExact(manifestCount, cfg.msPerScan)),
+        afterOverhead, wsoB, wsoA, fileCount, afterGroups, wfcB, wfcA,
+        if (dataCount == 0L) 0.0 else dataSize.toDouble / dataCount.toDouble,
+        worstAvg, totalSize, largest, partitions)
+    }
+  }
 
   /** The SIZE-FAMILY metrics (SURVEY §2.4 A5–A9: avg data-file size,
     * worst per-partition average, total table size, largest partition,

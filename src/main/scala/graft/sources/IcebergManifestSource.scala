@@ -26,14 +26,15 @@ import graft.model.FileEntry
   *
   *   - the snapshot's MANIFEST LIST (one small Avro file, driver-side:
   *     it is a list of manifest paths, KBs);
-  *   - each MANIFEST file DISTRIBUTED — one task per manifest via an RDD
-  *     of paths, streamed lazily (the Avro reader hands out one entry at
-  *     a time; per-task memory stays O(1) even on a pathological
-  *     multi-GB manifest). Manifest reading is the one per-partition
-  *     imperative step in this engine (Spark has no built-in reader for
-  *     the format); at 100 TB a table has thousands of manifests and
-  *     this scan parallelizes across executors exactly like Iceberg's
-  *     own planning.
+  *   - the MANIFEST files, on one of two arms chosen by manifest count
+  *     ([[driverManifestCap]], `spark.graft.driverManifestStats`). Up to
+  *     the cap the driver decodes them, as the reference's own client
+  *     does, into a local relation: a small table's diagnosis then costs
+  *     no Spark job at all. Past it, one task per manifest via an RDD of
+  *     paths, streamed lazily (the Avro reader hands out one entry at a
+  *     time, so per-task memory stays O(1) even on a multi-GB
+  *     manifest); at 100 TB a table has thousands of manifests and the
+  *     scan parallelizes across executors like Iceberg's own planning.
   *
   * Schema handling matches the spec duality: v2 manifests carry
   * `data_file.content` (0=data, 1=position deletes, 2=equality deletes);
@@ -382,13 +383,7 @@ object IcebergManifestSource {
     * (no sort-orders field, or default-sort-order-id 0 / unresolvable). */
   def sortOrder(spark: SparkSession,
       tableDir: String): Seq[(Int, String, String, String)] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val p = currentMetadataPath(spark, tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val root =
-      try new ObjectMapper().readTree(in)
-      finally in.close()
+    val root = readCurrentMetadata(spark, tableDir)
     val orders = root.get("sort-orders")
     val defaultId =
       Option(root.get("default-sort-order-id")).filter(_.canConvertToLong)
@@ -502,14 +497,7 @@ object IcebergManifestSource {
     * carries no statistics. */
   def statisticsFiles(spark: SparkSession,
       tableDir: String): Seq[(Long, String)] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val p = currentMetadataPath(spark, tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val root =
-      try new ObjectMapper().readTree(in)
-      finally in.close()
-    val arr = root.get("statistics")
+    val arr = readCurrentMetadata(spark, tableDir).get("statistics")
     if (arr == null || !arr.isArray) Nil
     else {
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
@@ -573,7 +561,7 @@ object IcebergManifestSource {
     val p = currentMetadataPath(spark, tableDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
-    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+    try graft.Json.mapper.readTree(in)
     finally in.close()
   }
 
@@ -643,23 +631,29 @@ object IcebergManifestSource {
     }.toSeq
   }
 
-  /** Distributed manifest scan: one task per manifest file. The SESSION's
-    * Hadoop configuration ships to tasks as a SerializableConfiguration
-    * (the OrphanFiles pattern) — a fresh executor-side Configuration
-    * would drop every spark.hadoop.* setting (s3a credentials, endpoints)
-    * and break exactly the remote filesystems manifests live on. */
+  /** The live entries of `manifestPaths` as the metrics pipeline's input.
+    * Up to [[driverManifestCap]] manifests the driver decodes them now
+    * and returns a local relation, which
+    * [[graft.metrics.MetricsCalculator.computeMetricsWide]] folds on the
+    * driver too. Past the cap the scan is lazy, one task per manifest;
+    * the SESSION's Hadoop configuration ships to tasks as a
+    * SerializableConfiguration (the OrphanFiles pattern) — a fresh
+    * executor-side Configuration would drop every spark.hadoop.* setting
+    * (s3a credentials, endpoints) and break exactly the remote
+    * filesystems manifests live on. */
   def fromManifests(spark: SparkSession, manifestPaths: Seq[String],
       table: String): Dataset[FileEntry] = {
     import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val n = math.max(1, math.min(manifestPaths.size, spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(manifestPaths, n)
-      .flatMap(p => readManifestEntries(p, conf.value))
-      .toDF("content", "partitionKey", "sizeBytes")
-      .select(lit(table).as("table"), col("content"), col("partitionKey"),
-        col("sizeBytes"))
-      .as[FileEntry]
+    if (manifestPaths.size <= driverManifestCap(spark)) {
+      val hconf = spark.sparkContext.hadoopConfiguration
+      manifestPaths.flatMap(readManifestEntries(_, hconf, table)).toDS()
+    } else {
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      val n = math.max(1, math.min(manifestPaths.size, spark.sparkContext.defaultParallelism))
+      spark.sparkContext.parallelize(manifestPaths, n)
+        .flatMap(readManifestEntries(_, conf.value, table)).toDS()
+    }
   }
 
   /** Typed per-file statistics relation from manifests: one row per live
@@ -709,8 +703,8 @@ object IcebergManifestSource {
     // reads (the .collect()s all over the MOR/commit paths) then cost
     // ZERO Spark jobs, and a join against the result broadcasts
     // trivially. Manifests are KB-sized, so the threshold is a manifest
-    // COUNT, the same ≤8 convention the ORC/AVRO planning tails use.
-    // Past it, one task per manifest — the 100k-manifest shape.
+    // COUNT (driverManifestCap). Past it, one task per manifest — the
+    // 100k-manifest shape.
     if (manifests.size <= driverManifestCap(spark)) {
       val hconf = spark.sparkContext.hadoopConfiguration
       val rows = manifests.flatMap { case (p, inheritSeq, specId) =>
@@ -738,14 +732,22 @@ object IcebergManifestSource {
     }
   }
 
-  /** Manifest-count ceiling for driver-side metadata materialization —
-    * `spark.graft.driverManifestStats`, default 32. Manifests are
-    * KB-sized, so a few dozen read driver-side cost no Spark job at
-    * all; the distributed one-task-per-manifest arm covers the
-    * 100k-manifest shape past the cap. */
-  private[sources] def driverManifestCap(spark: SparkSession): Int =
-    try spark.conf.get("spark.graft.driverManifestStats", "32").toInt
-    catch { case _: NumberFormatException => 32 }
+  /** Manifest-count ceiling for driver-side manifest decoding —
+    * `spark.graft.driverManifestStats`, default 32. It gates both
+    * manifest readers: the metrics input ([[fromManifests]]) and the
+    * statistics and entries relations ([[statsFromManifestSpecSeqs]],
+    * [[entriesFromManifests]]). Manifests are KB-sized, so a few dozen
+    * decoded on the driver cost no Spark job at all; the distributed
+    * one-task-per-manifest arm covers the 100k-manifest shape past the
+    * cap. A value that is not an integer is refused, not defaulted. */
+  private[sources] def driverManifestCap(spark: SparkSession): Int = {
+    val key = "spark.graft.driverManifestStats"
+    val v = spark.conf.get(key, "32")
+    try v.toInt
+    catch { case _: NumberFormatException =>
+      throw new IllegalArgumentException(
+        s"$key must be an integer manifest count, got '$v'") }
+  }
 
   private def statsSchema(fields: Seq[(Int, String, DataType)]): StructType =
     StructType(
@@ -779,12 +781,14 @@ object IcebergManifestSource {
       nanValueCounts: Map[Int, Long] = Map.empty,
       columnSizes: Map[Int, Long] = Map.empty)
 
-  /** Live entries of one manifest as (content, partitionJson, sizeBytes).
-    * Runs inside tasks with the session conf shipped by the caller. */
-  private[sources] def readManifestEntries(path: String,
-      conf: Configuration): Iterator[(Int, String, Long)] =
+  /** Live entries of one manifest as `table`'s metrics input rows — on
+    * the driver, or inside tasks with the session conf shipped by the
+    * caller. */
+  private def readManifestEntries(path: String, conf: Configuration,
+      table: String): Iterator[FileEntry] =
     liveEntries(path, conf).map { case (_, df) =>
-      (fileContent(df), partitionKeyOf(df), df.get("file_size_in_bytes").asInstanceOf[Long])
+      FileEntry(table, fileContent(df), partitionKeyOf(df),
+        df.get("file_size_in_bytes").asInstanceOf[Long])
     }
 
   /** Stats projection of one manifest's live entries (task-side).

@@ -113,8 +113,7 @@ object LayoutMaintenance {
     * commit on the write path). */
   private def readMetadata(spark: SparkSession,
       tableDir: String): com.fasterxml.jackson.databind.JsonNode =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(currentMetadataFile(spark, tableDir))
+    graft.Json.mapper.readTree(currentMetadataFile(spark, tableDir))
 
   /** The catalog descriptor's `properties` map (graft-table.json) —
     * empty for descriptor-less layouts or unreadable docs. One
@@ -126,8 +125,8 @@ object LayoutMaintenance {
   private[graft] def descriptorProps(tableDir: String): Map[String, String] = {
     val d = new java.io.File(tableDir, "graft-table.json")
     if (!d.exists()) return Map.empty
-    try Option(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(d).get("properties")).map(propsOf).getOrElse(Map.empty)
+    try Option(graft.Json.mapper.readTree(d).get("properties"))
+        .map(propsOf).getOrElse(Map.empty)
     catch { case scala.util.control.NonFatal(_) =>
       Map.empty[String, String] }
   }
@@ -189,8 +188,7 @@ object LayoutMaintenance {
         _.getName.endsWith(".metadata.json")))
     if (!hasMeta) return
     val base = metaBase(spark, tableDir)
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(base.file)
+    val root = graft.Json.mapper.readTree(base.file)
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     val cur = Option(root.get("format-version"))
       .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2)
@@ -323,7 +321,7 @@ object LayoutMaintenance {
     private def conf = spark.sparkContext.hadoopConfiguration
     val meta: MetaBase = metaBase(spark, tableDir)
     val root: com.fasterxml.jackson.databind.node.ObjectNode =
-      new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta.file) match {
+      graft.Json.mapper.readTree(meta.file) match {
         case o: com.fasterxml.jackson.databind.node.ObjectNode => o
         case other => throw new IllegalStateException(
           s"${meta.file} is not a JSON object: ${other.getNodeType}")
@@ -449,7 +447,7 @@ object LayoutMaintenance {
     val next = base.version + 1
     try java.nio.file.Files.write(
       new java.io.File(m, s"v$next.metadata.json").toPath,
-      new com.fasterxml.jackson.databind.ObjectMapper()
+      graft.Json.mapper
         .writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
       java.nio.file.StandardOpenOption.CREATE_NEW,
       java.nio.file.StandardOpenOption.WRITE)
@@ -944,7 +942,7 @@ object LayoutMaintenance {
   private def partitionPairsOf(pk: String): Seq[(String, Any)] =
     if (pk == null || pk.isEmpty || pk == "{}") Nil
     else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(pk)
+      val node = graft.Json.mapper.readTree(pk)
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Any)]
       node.fields().forEachRemaining { e =>
         val v: Any = e.getValue match {
@@ -2992,12 +2990,11 @@ object LayoutMaintenance {
   def evolvePartitionSpec(spark: SparkSession, tableDir: String,
       fields: Seq[(String, String, Int)]): Int =
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    import com.fasterxml.jackson.databind.ObjectMapper
     import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
     // an EMPTY field list is legal: dropping the last partition field
     // evolves to the unpartitioned spec (still a fresh spec id)
     val base = metaBase(spark, tableDir)
-    val mapper = new ObjectMapper()
+    val mapper = graft.Json.mapper
     val root = mapper.readTree(base.file).asInstanceOf[ObjectNode]
     val arr = mapper.createArrayNode()
     var maxSpec = -1
@@ -3220,10 +3217,9 @@ object LayoutMaintenance {
       snapshotId: Long, statsFile: java.io.File,
       blobMeta: Seq[(String, Seq[Int], Map[String, String])]): Long =
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    import com.fasterxml.jackson.databind.ObjectMapper
     import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
     val base = metaBase(spark, tableDir)
-    val mapper = new ObjectMapper()
+    val mapper = graft.Json.mapper
     val root = mapper.readTree(base.file).asInstanceOf[ObjectNode]
     val arr = mapper.createArrayNode()
     val orig = root.get("statistics")

@@ -110,7 +110,7 @@ object MetadataTables {
     val d = new java.io.File(tableDir, "graft-table.json")
     if (!d.exists()) return Map.empty
     try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(d)
+      val root = graft.Json.mapper.readTree(d)
       Option(root.get("column-ids")).map { arr =>
         val out = Map.newBuilder[String, Int]
         arr.forEach { n =>
@@ -132,7 +132,7 @@ object MetadataTables {
     val d = new java.io.File(tableDir, "graft-table.json")
     if (!d.exists()) Map.empty
     else try {
-      Option(new com.fasterxml.jackson.databind.ObjectMapper()
+      Option(graft.Json.mapper
           .readTree(d).get("properties"))
         .flatMap(n => Option(n.get("pushdown.fields"))).map(_.asText())
         .toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
@@ -417,7 +417,7 @@ object MetadataTables {
     import spark.implicits._
     val mdir = new java.io.File(tableDir, "metadata")
     val pat = "^v(\\d+)\\.metadata\\.json$".r
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mapper = graft.Json.mapper
     Option(mdir.listFiles()).getOrElse(Array.empty)
       .flatMap(f => pat.findFirstMatchIn(f.getName)
         .map(m => (m.group(1).toLong, f)))

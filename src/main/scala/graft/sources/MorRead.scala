@@ -358,7 +358,7 @@ object MorRead {
     val descriptorSchema: Option[org.apache.spark.sql.types.StructType] = {
       val d = new java.io.File(tableDir, "graft-table.json")
       if (!d.exists()) None
-      else try Option(new com.fasterxml.jackson.databind.ObjectMapper()
+      else try Option(graft.Json.mapper
           .readTree(d).get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
           .map(org.apache.spark.sql.types.StructType.fromDDL)
         catch { case scala.util.control.NonFatal(_) => None }

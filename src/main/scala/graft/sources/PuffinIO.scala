@@ -72,7 +72,7 @@ object PuffinIO {
     require(payloadStart >= 8 && magicAt(payloadStart - 4),
       s"bad Puffin footer framing: $file")
     val payload = new String(bytes, payloadStart, payloadSize, StandardCharsets.UTF_8)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mapper = graft.Json.mapper
     val root = mapper.readTree(payload)
     val arr = root.get("blobs")
     require(arr != null && arr.isArray, s"Puffin footer missing blobs: $file")

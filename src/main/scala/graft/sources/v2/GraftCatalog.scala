@@ -820,7 +820,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val f = viewFile(ident)
     if (!f.exists()) throw new org.apache.spark.sql.catalyst.analysis
       .NoSuchViewException(ident)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mapper = graft.Json.mapper
     val root = mapper.readTree(f)
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     val props = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -886,7 +886,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def readNsProps(namespace: Array[String]): Map[String, String] = {
     val f = nsPropsFile(namespace)
     if (!f.exists()) return Map.empty
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+    val root = graft.Json.mapper.readTree(f)
     val out = Map.newBuilder[String, String]
     root.fields().forEachRemaining(e => out += (e.getKey -> e.getValue.asText()))
     out.result()
@@ -894,7 +894,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def writeNsProps(namespace: Array[String],
       props: Map[String, String]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mapper = graft.Json.mapper
     val root = mapper.createObjectNode()
     props.toSeq.sortBy(_._1).foreach { case (k, v) => root.put(k, v) }
     java.nio.file.Files.write(nsPropsFile(namespace).toPath,
@@ -967,7 +967,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       columnIds: Seq[GraftCatalog.ColumnId] = Nil,
       lastColumnId: Int = 0,
       retired: Seq[String] = Nil): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mapper = graft.Json.mapper
     val root = mapper.createObjectNode()
     // schema-ddl stores names+types only: toDDL would render a DEFAULT
     // clause from CURRENT_DEFAULT metadata that fromDDL cannot parse
@@ -1034,7 +1034,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         Seq[String]) = {
     val f = descriptor(dir)
     if (!f.exists()) return (None, Map.empty, Nil, Nil, 0, Nil)
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+    val root = graft.Json.mapper.readTree(f)
     val ddl = Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
     val props = Option(root.get("properties")).map { node =>
       val out = Map.newBuilder[String, String]
@@ -1219,7 +1219,7 @@ object GraftCatalog {
   private[v2] def writeViewDoc(f: java.io.File,
       info: org.apache.spark.sql.connector.catalog.ViewInfo,
       versions: Seq[(Int, Long, String)], currentVersion: Int): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mapper = graft.Json.mapper
     val root = mapper.createObjectNode()
     root.put("current-version-id", currentVersion)
     val vs = root.putArray("versions")
@@ -1247,7 +1247,7 @@ object GraftCatalog {
   }
 
   private[v2] def readViewVersions(f: java.io.File): Seq[(Int, Long, String)] = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+    val root = graft.Json.mapper.readTree(f)
     val out = Seq.newBuilder[(Int, Long, String)]
     Option(root.get("versions")).foreach(_.forEach(n =>
       out += ((n.get("version-id").asInt(), n.get("timestamp-ms").asLong(),
@@ -1256,7 +1256,7 @@ object GraftCatalog {
   }
 
   private[v2] def readViewDoc(f: java.io.File, ident: Identifier): GraftView = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+    val root = graft.Json.mapper.readTree(f)
     def strArray(key: String): Array[String] = {
       val b = Array.newBuilder[String]
       Option(root.get(key)).foreach(_.forEach(n => b += n.asText()))

@@ -162,7 +162,7 @@ object GraftIcebergSource {
     * as Long, everything else as String). */
   private[v2] def parsePartitionKey(json: String): Map[String, Any] = {
     if (json == null || json.isEmpty || json == "{}") return Map.empty
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val node = graft.Json.mapper.readTree(json)
     val out = Map.newBuilder[String, Any]
     node.fields().forEachRemaining { e =>
       val v: Any = e.getValue match {

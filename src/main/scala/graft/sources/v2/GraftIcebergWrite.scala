@@ -416,13 +416,13 @@ private[v2] class GraftStreamingWrite(dir: String, schema: StructType,
   private def lastCommitted(): Long = {
     val f = ledgerFile
     if (!f.exists()) return -1L
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+    val root = graft.Json.mapper.readTree(f)
     Option(root.get(queryId)).filter(_.canConvertToLong)
       .map(_.asLong()).getOrElse(-1L)
   }
 
   private def recordCommitted(epochId: Long): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mapper = graft.Json.mapper
     val f = ledgerFile
     val root =
       if (f.exists())

@@ -146,7 +146,7 @@ object GraftProcedures {
           val desc = new java.io.File(dir, "graft-table.json")
           if (!desc.exists()) (Nil, Nil)
           else {
-            val root = new com.fasterxml.jackson.databind.ObjectMapper()
+            val root = graft.Json.mapper
               .readTree(desc)
             val sf = Option(root.get("properties"))
               .flatMap(p => Option(p.get("pushdown.fields")))
@@ -636,7 +636,6 @@ object GraftProcedures {
         "interpret each file's partition values with the spec it was " +
         "written under); future writes cluster and prune on the new one") {
       def run(spark: SparkSession, in: InternalRow): Seq[Seq[Any]] = {
-        import com.fasterxml.jackson.databind.ObjectMapper
         import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
         val dir = resolve(in.getUTF8String(0).toString)
         val fieldStr = in.getUTF8String(1).toString.trim
@@ -662,7 +661,7 @@ object GraftProcedures {
           s"add_partition_field($dir): needs a catalog-created table — " +
             "the write path takes its partition spec from the catalog " +
             "descriptor, which this table does not have")
-        val mapper = new ObjectMapper()
+        val mapper = graft.Json.mapper
         val root = mapper.readTree(desc).asInstanceOf[ObjectNode]
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
@@ -746,7 +745,7 @@ object GraftProcedures {
         // descriptor from the source's own schema, so the catalog serves
         // the migrated table with declared (not inferred) columns
         val schema = spark.read.parquet(source).schema
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+        val mapper = graft.Json.mapper
         val root = mapper.createObjectNode()
         root.put("schema-ddl", schema.toDDL)
         root.putObject("properties")
@@ -822,14 +821,13 @@ object GraftProcedures {
         "Metadata-only; existing files keep their spec; future writes " +
         "stop clustering on the dropped field") {
       def run(spark: SparkSession, in: InternalRow): Seq[Seq[Any]] = {
-        import com.fasterxml.jackson.databind.ObjectMapper
         import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
         val dir = resolve(in.getUTF8String(0).toString)
         val pfName = in.getUTF8String(1).toString.trim
         val desc = new java.io.File(dir, "graft-table.json")
         require(desc.exists(),
           s"drop_partition_field($dir): needs a catalog-created table")
-        val mapper = new ObjectMapper()
+        val mapper = graft.Json.mapper
         val root = mapper.readTree(desc).asInstanceOf[ObjectNode]
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)

@@ -133,9 +133,11 @@ class IcebergManifestSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("fromTableDir resolves metadata.json -> current snapshot -> manifest list") {
+  /** A table dir whose current snapshot (of two) lists the fixture's
+    * manifests, resolved through version-hint.text. */
+  private def layoutDir(name: String): java.io.File = {
     val listPath = writeFixture()
-    val tblDir = new java.io.File(dir, "tbl_layout"); tblDir.mkdirs()
+    val tblDir = new java.io.File(dir, name); tblDir.mkdirs()
     val metaDir = new java.io.File(tblDir, "metadata"); metaDir.mkdirs()
     val json =
       s"""{
@@ -150,6 +152,43 @@ class IcebergManifestSpec extends AnyFunSuite {
       json.getBytes("UTF-8"))
     java.nio.file.Files.write(new java.io.File(metaDir, "version-hint.text").toPath,
       "2".getBytes("UTF-8"))
+    tblDir
+  }
+
+  private def withManifestCap[T](cap: String)(body: => T): T = {
+    spark.conf.set("spark.graft.driverManifestStats", cap)
+    try body finally spark.conf.unset("spark.graft.driverManifestStats")
+  }
+
+  /** Spark jobs `body` launches, seen by a listener. A marker job run
+    * after it flushes the listener bus: events arrive in order, so once
+    * the marker's start is seen every earlier job start has been too. */
+  private def jobsLaunched(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime}"
+    val marker = s"$group-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener-bus marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(marker) && System.nanoTime < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "the listener never saw the marker job")
+      groups.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fromTableDir resolves metadata.json -> current snapshot -> manifest list") {
+    val tblDir = layoutDir("tbl_layout")
     val (files, n) = IcebergManifestSource.fromTableDir(spark, tblDir.getPath, "tbl")
     assert(n == 2L)
     assert(files.collect().toSeq.sortBy(e => (e.partitionKey, e.content, e.sizeBytes))
@@ -541,5 +580,44 @@ class IcebergManifestSpec extends AnyFunSuite {
     assert(itemName("nan_value_counts") == ("k138_v139", 138, 139))
     assert(itemName("lower_bounds") == ("k126_v127", 126, 127))
     assert(itemName("upper_bounds") == ("k129_v130", 129, 130))
+  }
+
+  test("fromManifests: driver arm and one-task-per-manifest arm give equal entries and metrics") {
+    import spark.implicits._
+    val listPath = writeFixture()
+    val paths = IcebergManifestSource.manifestPaths(
+      spark.sparkContext.hadoopConfiguration, listPath)
+    def diagnose() = {
+      val files = IcebergManifestSource.fromManifests(spark, paths, "tbl")
+      val wide = MetricsCalculator
+        .computeMetricsWide(files, Seq(("tbl", paths.size.toLong)).toDS()).collect()
+      (files.collect().toSeq.sortBy(e => (e.partitionKey, e.content, e.sizeBytes)),
+        wide.toSeq.map(_.productIterator.map {
+          case d: Double => java.lang.Double.doubleToRawLongBits(d)
+          case v => v
+        }.toList))
+    }
+    val driver = diagnose()
+    val cluster = withManifestCap("0")(diagnose())
+    assert(driver._1 == expected.sortBy(e => (e.partitionKey, e.content, e.sizeBytes)))
+    assert(driver == cluster)
+  }
+
+  test("a small layout's diagnosis launches no Spark job; past the cap it does") {
+    import spark.implicits._
+    val tblDir = layoutDir("tbl_jobs").getPath
+    def diagnose(): Unit = {
+      val (files, n) = IcebergManifestSource.fromTableDir(spark, tblDir, "tbl")
+      MetricsCalculator.computeMetricsWide(files, Seq(("tbl", n)).toDS()).collect()
+    }
+    diagnose() // warm: first-use initialisation is not the path under test
+    assert(jobsLaunched(diagnose()) == 0)
+    assert(withManifestCap("0")(jobsLaunched(diagnose())) >= 1)
+  }
+
+  test("a malformed spark.graft.driverManifestStats is refused, naming key and value") {
+    val e = withManifestCap("lots")(intercept[IllegalArgumentException](
+      IcebergManifestSource.fromManifests(spark, Nil, "tbl")))
+    assert(e.getMessage.contains("spark.graft.driverManifestStats") && e.getMessage.contains("lots"))
   }
 }

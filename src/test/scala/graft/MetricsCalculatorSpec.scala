@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import graft.model._
 import graft.metrics.MetricsCalculator
 import graft.functions.Pure
@@ -186,5 +188,91 @@ class MetricsCalculatorSpec extends AnyFunSuite {
     assert(!byName.contains("Worst Partition Avg Data File Size"))
     assert(byName("Full Scan Overhead")._2 == "1.81s")
     assert(byName("Full Scan Overhead")._3 == "0.18s")
+  }
+
+  // ---- both arms of computeMetricsWide: local inputs fold on the driver,
+  // the cluster arm is tableMetrics(partitionStats(...)); rows must match
+  // field for field, doubles bit for bit
+
+  /** A metrics row with each double as its raw bits. */
+  private def bits(w: TableMetricsWide): List[Any] = w.productIterator.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case v => v
+  }.toList
+
+  /** (driver arm rows, cluster arm rows), each sorted. */
+  private def bothArms(files: Dataset[FileEntry],
+      counts: Dataset[(String, Long)]): (Seq[List[Any]], Seq[List[Any]]) = {
+    val driver = MetricsCalculator.computeMetricsWide(files, counts)
+    assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      "local inputs must take the driver arm")
+    val cluster = MetricsCalculator.tableMetrics(
+      MetricsCalculator.partitionStats(files), counts)
+    def rows(ds: Dataset[TableMetricsWide]) =
+      ds.collect().toSeq.map(bits).sortBy(_.toString)
+    (rows(driver), rows(cluster))
+  }
+
+  private def assertArmsEqual(files: Dataset[FileEntry],
+      counts: Dataset[(String, Long)]): Seq[List[Any]] = {
+    val (driver, cluster) = bothArms(files, counts)
+    assert(driver == cluster)
+    driver
+  }
+
+  test("driver arm == cluster arm on the reference fixture") {
+    val spark = SparkSpec.spark
+    import spark.implicits._
+    val rows = assertArmsEqual(fixture.toDS(), Seq(("t", 10L)).toDS())
+    assert(rows.size == 1 && rows.head(5) == 900L) // fileCountBefore
+  }
+
+  test("driver arm == cluster arm: argmax ties break on UTF-8 key order") {
+    val spark = SparkSpec.spark
+    import spark.implicits._
+    // "｡" (U+FF61) sorts above "😀" (U+1F600) in UTF-16 but below it in UTF-8;
+    // both partitions reduce their file count by 2, from different pairs
+    val files = Seq.fill(3)(FileEntry("t", 0, "｡", MiB)) ++
+      Seq.fill(4)(FileEntry("t", 0, "😀", 400 * MiB))
+    val rows = assertArmsEqual(files.toDS(), Seq(("t", 1L)).toDS())
+    // worstFileCountBefore/After come from the UTF-8-larger key, the emoji
+    assert(rows.head.slice(7, 9) == List(4L, 2L))
+  }
+
+  test("driver arm == cluster arm: manifest-only tables, tables without a manifest row, duplicate and null tables") {
+    val spark = SparkSpec.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val files = (1 to 2000).map { i =>
+      FileEntry(
+        table = if (i % 97 == 0) null else s"t${rnd.nextInt(4)}",
+        content = rnd.nextInt(3),
+        partitionKey = if (i % 89 == 0) null else s"p${rnd.nextInt(6)}",
+        sizeBytes = math.abs(rnd.nextLong()) % (900L * MiB))
+    }
+    // t3 has files but no manifest row; "empty" has a manifest row and no
+    // files; t1 has two manifest rows; null tables never join
+    val counts = Seq(("t0", 4L), ("t1", 2L), ("t1", 7L), ("t2", 1L),
+      ("empty", 9L), (null, 5L))
+    val rows = assertArmsEqual(files.toDS(), counts.toDS())
+    assert(rows.size == 8)
+  }
+
+  test("driver arm == cluster arm: delete-only partitions, zero reductions, several tables in one union") {
+    val spark = SparkSpec.spark
+    import spark.implicits._
+    val deletesOnly = Seq(
+      FileEntry("d", FileContent.PositionDeletes, "p1", 5 * MiB),
+      FileEntry("d", FileContent.EqualityDeletes, "p1", 7 * MiB),
+      FileEntry("d", FileContent.EqualityDeletes, "p2", 40 * MiB))
+    // one data file per partition: nothing to compact, worst* zeroed
+    val zero = Seq(FileEntry("z", 0, "a", 3 * MiB), FileEntry("z", 0, "b", 90 * MiB))
+    val union = Seq(deletesOnly, zero, fixture).map(_.toDS()).reduce(_ union _)
+    val rows = assertArmsEqual(union,
+      Seq(("d", 1L), ("z", 2L), ("t", 10L)).toDS())
+    val z = rows.find(_.head == "z").get
+    assert(z.slice(3, 5) == List(0L, 0L) && z.slice(7, 9) == List(0L, 0L))
+    val d = rows.find(_.head == "d").get
+    assert(d(6) == 0L) // fileCountAfter: delete files never pack
   }
 }
