@@ -3,6 +3,8 @@ package graft.metrics
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.Resolver
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
@@ -16,10 +18,12 @@ import graft.functions.Pure
   * two arms that give identical rows.
   *
   * Driver arm: when both inputs are already on the driver (their
-  * optimised plans are local relations, as the manifest readers return
-  * under `spark.graft.driverManifestStats`), [[computeMetricsWide]] folds
-  * the 9 metrics in-process, like the reference's own loop, and launches
-  * no Spark job. The rows come back as a local relation.
+  * optimised plans are local relations, as
+  * `IcebergManifestSource.fromManifests` returns for a table whose
+  * manifests and entries fit its driver-side decode limits),
+  * [[computeMetricsWide]] folds the 9 metrics in-process, like the
+  * reference's own loop, and launches no Spark job. The rows come back
+  * as a local relation.
   *
   * Cluster arm, the part that must survive 100 TB / 1000 executors:
   *   - ONE wide shuffle on (table, partitionKey). Everything the
@@ -230,8 +234,8 @@ object MetricsCalculator {
     import spark.implicits._
     (localRelations(files), localRelations(manifestCounts)) match {
       case (Some(f), Some(m)) =>
-        driverTableMetrics(localRows[FileEntry](f), localRows[(String, java.lang.Long)](m),
-          cfg).toDS()
+        driverTableMetrics(f, localRows[(String, java.lang.Long)](m), cfg,
+          spark.sessionState.conf.resolver).toDS()
       case _ => tableMetrics(partitionStats(files, cfg), manifestCounts, cfg)
     }
   }
@@ -258,19 +262,28 @@ object MetricsCalculator {
     * the argmax on (reduction, partitionKey) with keys in UTF-8 byte
     * order as Spark compares them, the `worst*` pair zeroed unless the
     * best reduction is positive, and exact long arithmetic where ANSI
-    * mode would raise on overflow. A null manifest count reads 0. */
-  private def driverTableMetrics(files: Seq[FileEntry],
-      manifestCounts: Seq[(String, java.lang.Long)],
-      cfg: EngineConfig): Seq[TableMetricsWide] = {
-    val byKey: Ordering[FileEntry] = (x, y) => {
-      val t = nullsFirst(x.table, y.table)
-      if (t != 0) t else {
-        val k = nullsFirst(x.partitionKey, y.partitionKey)
-        if (k != 0) k else java.lang.Long.compare(x.sizeBytes, y.sizeBytes)
+    * mode would raise on overflow. A null manifest count reads 0.
+    *
+    * The entries are sorted as the local relation's own rows, comparing
+    * the keys in place, and decoded one at a time into the fold: besides
+    * the relation, the driver holds one reference per entry. */
+  private def driverTableMetrics(files: (Seq[Attribute], Seq[LocalRelation]),
+      manifestCounts: Seq[(String, java.lang.Long)], cfg: EngineConfig,
+      resolver: Resolver): Seq[TableMetricsWide] = {
+    val (attrs, rels) = files
+    def ordinal(name: String) = attrs.indexWhere(a => resolver(a.name, name))
+    val (t, k, s) = (ordinal("table"), ordinal("partitionKey"), ordinal("sizeBytes"))
+    val rows = rels.iterator.flatMap(_.data).toArray
+    java.util.Arrays.sort(rows, (x: InternalRow, y: InternalRow) => {
+      val c = nullsFirst(x.getUTF8String(t), y.getUTF8String(t))
+      if (c != 0) c else {
+        val ck = nullsFirst(x.getUTF8String(k), y.getUTF8String(k))
+        if (ck != 0) ck else java.lang.Long.compare(x.getLong(s), y.getLong(s))
       }
-    }
+    })
+    val decode = ExpressionEncoder[FileEntry]().resolveAndBind(attrs).createDeserializer()
     val tables = scala.collection.mutable.LinkedHashMap.empty[String, TableFold]
-    foldPartitions(files.sorted(byKey).iterator, cfg).foreach { p =>
+    foldPartitions(rows.iterator.map(decode), cfg).foreach { p =>
       tables.getOrElseUpdate(p.table, new TableFold).add(p)
     }
     val counts = manifestCounts.map(m => (m._1, Option(m._2).fold(0L)(_.longValue)))
@@ -284,10 +297,10 @@ object MetricsCalculator {
     }
   }
 
-  private def nullsFirst(a: String, b: String): Int =
+  private def nullsFirst(a: UTF8String, b: UTF8String): Int =
     if (a == null) { if (b == null) 0 else -1 }
     else if (b == null) 1
-    else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+    else a.compareTo(b)
 
   /** One table's rollup of its partitions — the aggregates of
     * [[tableMetrics]]. An instance that saw no partition is the all-zero
@@ -297,7 +310,7 @@ object MetricsCalculator {
     private var dataSize, dataCount, largest, totalSize, partitions = 0L
     private var worstAvg = 0.0
     // argmax key (reduction, partitionKey) and its (before, after) pair
-    private var bestFc, bestSo: (Long, String) = _
+    private var bestFc, bestSo: (Long, UTF8String) = _
     private var worstFc, worstSo = (0L, 0L)
 
     def add(p: PartitionStats): Unit = {
@@ -312,23 +325,24 @@ object MetricsCalculator {
       worstAvg = if (partitions == 0L) avg else math.min(worstAvg, avg)
       largest = if (partitions == 0L) p.totalSize else math.max(largest, p.totalSize)
       partitions += 1
-      val fc = (Math.subtractExact(p.fileCount, p.afterGroupCount), p.partitionKey)
+      val key = UTF8String.fromString(p.partitionKey)
+      val fc = (Math.subtractExact(p.fileCount, p.afterGroupCount), key)
       if (bestFc == null || above(fc, bestFc)) {
         bestFc = fc; worstFc = (p.fileCount, p.afterGroupCount)
       }
-      val so = (Math.subtractExact(p.scanOverhead, p.afterOverhead), p.partitionKey)
+      val so = (Math.subtractExact(p.scanOverhead, p.afterOverhead), key)
       if (bestSo == null || above(so, bestSo)) {
         bestSo = so; worstSo = (p.scanOverhead, p.afterOverhead)
       }
     }
 
-    private def above(a: (Long, String), b: (Long, String)): Boolean = {
+    private def above(a: (Long, UTF8String), b: (Long, UTF8String)): Boolean = {
       val c = java.lang.Long.compare(a._1, b._1)
       c > 0 || (c == 0 && nullsFirst(a._2, b._2) > 0)
     }
 
     def row(table: String, manifestCount: Long, cfg: EngineConfig): TableMetricsWide = {
-      def worst(best: (Long, String), pair: (Long, Long)) =
+      def worst(best: (Long, UTF8String), pair: (Long, Long)) =
         if (best != null && best._1 > 0) pair else (0L, 0L)
       val (wsoB, wsoA) = worst(bestSo, worstSo)
       val (wfcB, wfcA) = worst(bestFc, worstFc)

@@ -26,15 +26,16 @@ import graft.model.FileEntry
   *
   *   - the snapshot's MANIFEST LIST (one small Avro file, driver-side:
   *     it is a list of manifest paths, KBs);
-  *   - the MANIFEST files, on one of two arms chosen by manifest count
-  *     ([[driverManifestCap]], `spark.graft.driverManifestStats`). Up to
-  *     the cap the driver decodes them, as the reference's own client
-  *     does, into a local relation: a small table's diagnosis then costs
-  *     no Spark job at all. Past it, one task per manifest via an RDD of
-  *     paths, streamed lazily (the Avro reader hands out one entry at a
-  *     time, so per-task memory stays O(1) even on a multi-GB
-  *     manifest); at 100 TB a table has thousands of manifests and the
-  *     scan parallelizes across executors like Iceberg's own planning.
+  *   - the MANIFEST files, on one of two arms chosen by size. Up to
+  *     [[driverManifestCap]] manifests (`spark.graft.driverManifestStats`)
+  *     the driver decodes them, as the reference's own client does, into
+  *     a local relation, until it holds [[driverDecodeEntries]] entries:
+  *     a small table's diagnosis then costs no Spark job at all. The
+  *     manifests left over go one task per manifest via an RDD of paths,
+  *     streamed lazily (the Avro reader hands out one entry at a time, so
+  *     per-task memory stays O(1) even on a multi-GB manifest); at 100 TB
+  *     a table has thousands of manifests and the scan parallelizes
+  *     across executors like Iceberg's own planning.
   *
   * Schema handling matches the spec duality: v2 manifests carry
   * `data_file.content` (0=data, 1=position deletes, 2=equality deletes);
@@ -632,27 +633,37 @@ object IcebergManifestSource {
   }
 
   /** The live entries of `manifestPaths` as the metrics pipeline's input.
-    * Up to [[driverManifestCap]] manifests the driver decodes them now
-    * and returns a local relation, which
+    * Up to [[driverManifestCap]] manifests the driver decodes them in list
+    * order until it holds [[driverDecodeEntries]] entries; when all fit,
+    * the result is a local relation, which
     * [[graft.metrics.MetricsCalculator.computeMetricsWide]] folds on the
-    * driver too. Past the cap the scan is lazy, one task per manifest;
-    * the SESSION's Hadoop configuration ships to tasks as a
-    * SerializableConfiguration (the OrphanFiles pattern) — a fresh
+    * driver too. The manifests left over (all of them past the cap) are
+    * scanned lazily, one task per manifest, and unioned with what the
+    * driver decoded; the SESSION's Hadoop configuration ships to tasks as
+    * a SerializableConfiguration (the OrphanFiles pattern) — a fresh
     * executor-side Configuration would drop every spark.hadoop.* setting
     * (s3a credentials, endpoints) and break exactly the remote
     * filesystems manifests live on. */
   def fromManifests(spark: SparkSession, manifestPaths: Seq[String],
       table: String): Dataset[FileEntry] = {
     import spark.implicits._
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val onDriver = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
+    val it = manifestPaths.iterator
     if (manifestPaths.size <= driverManifestCap(spark)) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      manifestPaths.flatMap(readManifestEntries(_, hconf, table)).toDS()
-    } else {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val n = math.max(1, math.min(manifestPaths.size, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(manifestPaths, n)
+      val budget = driverDecodeEntries(spark)
+      while (it.hasNext && onDriver.size < budget)
+        onDriver ++= readManifestEntries(it.next(), hconf, table)
+    }
+    val rest = it.toSeq
+    val local = onDriver.toSeq.toDS()
+    if (rest.isEmpty) local
+    else {
+      val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
+      val n = math.max(1, math.min(rest.size, spark.sparkContext.defaultParallelism))
+      val scan = spark.sparkContext.parallelize(rest, n)
         .flatMap(readManifestEntries(_, conf.value, table)).toDS()
+      if (onDriver.isEmpty) scan else local.union(scan)
     }
   }
 
@@ -734,12 +745,14 @@ object IcebergManifestSource {
 
   /** Manifest-count ceiling for driver-side manifest decoding —
     * `spark.graft.driverManifestStats`, default 32. It gates both
-    * manifest readers: the metrics input ([[fromManifests]]) and the
-    * statistics and entries relations ([[statsFromManifestSpecSeqs]],
-    * [[entriesFromManifests]]). Manifests are KB-sized, so a few dozen
-    * decoded on the driver cost no Spark job at all; the distributed
-    * one-task-per-manifest arm covers the 100k-manifest shape past the
-    * cap. A value that is not an integer is refused, not defaulted. */
+    * manifest readers: the metrics input ([[fromManifests]], which also
+    * stops at [[driverDecodeEntries]]) and the statistics and entries
+    * relations ([[statsFromManifestSpecSeqs]], [[entriesFromManifests]]).
+    * Under it the driver opens the manifests one after another and holds
+    * every entry it decodes in memory, as a local relation; the
+    * distributed one-task-per-manifest arm covers the 100k-manifest shape
+    * past the cap. A value that is not an integer is refused, not
+    * defaulted. */
   private[sources] def driverManifestCap(spark: SparkSession): Int = {
     val key = "spark.graft.driverManifestStats"
     val v = spark.conf.get(key, "32")
@@ -748,6 +761,25 @@ object IcebergManifestSource {
       throw new IllegalArgumentException(
         s"$key must be an integer manifest count, got '$v'") }
   }
+
+  /** How many metrics-input entries [[fromManifests]] decodes on the
+    * driver before it leaves the remaining manifests to tasks:
+    * [[DriverDecodeEntries]], or the session's driver entry ceiling
+    * ([[LayoutMaintenance.driverEntryCap]]) when that is lower. The
+    * driver holds at most this many entries plus one manifest's. */
+  private def driverDecodeEntries(spark: SparkSession): Int =
+    math.min(DriverDecodeEntries, LayoutMaintenance.driverEntryCap(spark))
+
+  /** The driver's decode budget. It sits where the arms cross: a
+    * diagnosis of one table of 2,500-entry manifests, on 4 cores, took
+    * 0.82–1.12 s decoded and folded on the driver against 0.97–1.28 s
+    * in tasks at 80k entries, 1.56–1.64 s against 1.31–1.58 s at 160k,
+    * and 3.0–3.4 s against 1.6–2.3 s at 320k, whether those sat in 128
+    * manifests or in 32 of 10,000 entries. The cost follows the entry
+    * count, not the manifest count. Past the budget, the split (100k
+    * entries on the driver, the rest in tasks) ran within 6% of the
+    * all-task arm at 160k and 320k entries. */
+  private val DriverDecodeEntries = 100000
 
   private def statsSchema(fields: Seq[(Int, String, DataType)]): StructType =
     StructType(

@@ -155,10 +155,22 @@ class IcebergManifestSpec extends AnyFunSuite {
     tblDir
   }
 
-  private def withManifestCap[T](cap: String)(body: => T): T = {
-    spark.conf.set("spark.graft.driverManifestStats", cap)
-    try body finally spark.conf.unset("spark.graft.driverManifestStats")
+  /** `body` with the session setting `key` at `value`, restoring what
+    * the session had before. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  private def withManifestCap[T](cap: String)(body: => T): T =
+    withConf("spark.graft.driverManifestStats", cap)(body)
+
+  /** The driver's decode budget is the lower of its own limit and this
+    * ceiling: at 1 the driver decodes the first manifest, tasks the rest. */
+  private def withEntryCeiling[T](entries: String)(body: => T): T =
+    withConf("spark.graft.maxDriverFileEntries", entries)(body)
 
   /** Spark jobs `body` launches, seen by a listener. A marker job run
     * after it flushes the listener bus: events arrive in order, so once
@@ -582,7 +594,7 @@ class IcebergManifestSpec extends AnyFunSuite {
     assert(itemName("upper_bounds") == ("k129_v130", 129, 130))
   }
 
-  test("fromManifests: driver arm and one-task-per-manifest arm give equal entries and metrics") {
+  test("fromManifests: driver, split and one-task-per-manifest arms give equal entries and metrics") {
     import spark.implicits._
     val listPath = writeFixture()
     val paths = IcebergManifestSource.manifestPaths(
@@ -598,12 +610,14 @@ class IcebergManifestSpec extends AnyFunSuite {
         }.toList))
     }
     val driver = diagnose()
+    val split = withEntryCeiling("1")(diagnose())
     val cluster = withManifestCap("0")(diagnose())
     assert(driver._1 == expected.sortBy(e => (e.partitionKey, e.content, e.sizeBytes)))
+    assert(driver == split)
     assert(driver == cluster)
   }
 
-  test("a small layout's diagnosis launches no Spark job; past the cap it does") {
+  test("a small layout's diagnosis launches no Spark job; past either driver limit it does") {
     import spark.implicits._
     val tblDir = layoutDir("tbl_jobs").getPath
     def diagnose(): Unit = {
@@ -613,6 +627,7 @@ class IcebergManifestSpec extends AnyFunSuite {
     diagnose() // warm: first-use initialisation is not the path under test
     assert(jobsLaunched(diagnose()) == 0)
     assert(withManifestCap("0")(jobsLaunched(diagnose())) >= 1)
+    assert(withEntryCeiling("1")(jobsLaunched(diagnose())) >= 1)
   }
 
   test("a malformed spark.graft.driverManifestStats is refused, naming key and value") {
